@@ -38,10 +38,6 @@ object Scalars {
   val referenceFormats: Seq[String] = Seq(
     "yyyy-MM-dd HH:mm:ss", "yyyy-MM-dd", "yyyy/MM/dd HH:mm:ss", "yyyy/MM/dd")
 
-  /** F11 — conditional On-Time/Late label. */
-  def deliveryLabel(actual: Column, estimated: Column): Column =
-    when(actual <= estimated, "On-Time").otherwise("Late")
-
   /** F14 — lenient numeric cast: null on unparseable input (pandas
     * `to_numeric(errors='coerce')`), plus an error indicator for the
     * quarantine path (non-null input that failed to cast). */
@@ -64,10 +60,4 @@ object Scalars {
             * (hi - lo) + lo))
       .drop("__mn", "__mx")
   }
-
-  /** F17 — minute-bucket string key (reference `consumer.py:200`
-    * `%Y-%m-%d-%H-%M`; the streaming tier keeps native window structs and
-    * formats only at the serving edge). */
-  def minuteBucket(ts: Column): Column =
-    date_format(ts, "yyyy-MM-dd-HH-mm")
 }

@@ -42,12 +42,6 @@ object Dedup {
       .drop("__rn")
   }
 
-  /** Exact distinct on a column subset (reference A13 `dropDuplicates`).
-    * Deterministic variant of `df.dropDuplicates(keys)`: which row survives
-    * is pinned by `order`. */
-  def distinctOn(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame =
-    keepFirst(df, keys, order)
-
   /** Skew-resistant keepFirst for a SINGLE ordering column: two-phase
     * salted reduction (SURVEY.md §4 "salted variant of A12"). Phase 1
     * reduces each (key, salt) shard to its min (ord, payload) with

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Ordering / pagination / preflight helpers (SURVEY.md §2.6 T1–T5, §2.7
   * U3).
@@ -14,10 +13,6 @@ import org.apache.spark.sql.functions._
   * keyset pagination (filter on the last-seen sort key) is the deep-scroll
   * path. */
 object TopK {
-
-  /** T1/T2/T5 — top-k by ordering with a deterministic tie-break. */
-  def topK(df: DataFrame, k: Int, order: Column*): DataFrame =
-    df.orderBy(order: _*).limit(k)
 
   /** T4 — page `pageIdx` (0-based) of the sorted result
     * (reference `📊Historical_Analytics.py:219-234` sorts the seller table

@@ -247,18 +247,17 @@ object Runner {
     *                     the tokenize+explode stage at all
     */
   def runCorpus(spark: SparkSession, sfDir: String, outDir: String): Unit = {
-    val prepared = graft.llm.CorpusPrep.d18CorpusPrepFull(spark, sfDir)
-      .cache() // written AND used to filter the chunk stage
-    // the stats rollup is independent of the prepared split, so it runs
-    // concurrently with the prepared write (which materializes the cache
-    // the chunk stage then reads)
+    // A corpus output a later step reads is read back from its committed
+    // parquet: a carried d18 plan would be re-analyzed (and kept alive) at
+    // each of the survivors' several uses. Stats and prepared are
+    // independent, so they write concurrently.
     inParallel(spark, Seq(
-      () => Sinks.parquet(prepared, s"$outDir/corpus/prepared"),
+      () => Sinks.parquet(graft.llm.CorpusPrep.d18CorpusPrepFull(spark, sfDir),
+        s"$outDir/corpus/prepared"),
       () => Sinks.parquet(graft.llm.QualityOps.d19CorpusStats(spark, sfDir),
         s"$outDir/corpus/stats", tinyOutput = true),
     ))
-    val survivors = Tables.documents(spark, sfDir)
-      .join(prepared.select(col("doc_id")), Seq("doc_id"), "left_semi")
+    val survivors = corpusSurvivors(spark, sfDir, outDir)
     // containment collapse: contained docs drop before span accounting
     // (their every span would otherwise count as duplicated — excising
     // the whole doc is both cheaper and the curation-correct call).
@@ -274,13 +273,11 @@ object Runner {
     val kept = survivors.join(
       broadcast(spark.read.parquet(s"$outDir/corpus/containment_dropped")),
       Seq("doc_id"), "left_anti")
-    // span-level dedup over the surviving corpus; cached because it is
-    // written AND feeds the chunk/pack stages below
-    val spanClean = graft.llm.TextOps
-      .spanDedup(kept, graft.llm.TextOps.SpanK).cache()
-    Sinks.parquet(spanClean, s"$outDir/corpus/span_clean")
-    // chunks and packed sequences derive from the span-CLEANED text
-    val cleaned = spanClean
+    // span-level dedup over the surviving corpus
+    Sinks.parquet(graft.llm.TextOps.spanDedup(kept, graft.llm.TextOps.SpanK),
+      s"$outDir/corpus/span_clean")
+    // chunks and packed sequences derive from the committed span-CLEANED text
+    val cleaned = spark.read.parquet(s"$outDir/corpus/span_clean")
       .filter(length(col("clean_text")) > 0)
       .join(survivors.select(col("doc_id"), col("source")), Seq("doc_id"))
       .select(col("doc_id"), col("source"), col("clean_text").as("text"))
@@ -290,9 +287,15 @@ object Runner {
       () => Sinks.parquet(graft.llm.QualityOps.packRows(cleaned),
         s"$outDir/corpus/packed"),
     ))
-    spanClean.unpersist()
-    prepared.unpersist()
   }
+
+  /** The source documents that survived d18, selected by the ids in the
+    * committed `corpus/prepared` — a parquet scan, not the d18 plan. */
+  private[graft] def corpusSurvivors(spark: SparkSession, sfDir: String,
+      outDir: String): DataFrame =
+    Tables.documents(spark, sfDir).join(
+      spark.read.parquet(s"$outDir/corpus/prepared").select(col("doc_id")),
+      Seq("doc_id"), "left_semi")
 
   /** Maintenance layer (round 15): scheduled jobs over the LIVE lake,
     * run after the layers that populate it — currently the d47 OPTIMIZE

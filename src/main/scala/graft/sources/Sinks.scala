@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -57,7 +58,7 @@ object Sinks {
     // Overwrite can only replace a table the catalog knows — drop the
     // entry if present AND clear a stale orphaned location
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = new org.apache.hadoop.fs.Path(
+    val loc = new Path(
       spark.sessionState.catalog.defaultTablePath(
         org.apache.spark.sql.catalyst.TableIdentifier(table)))
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -105,28 +106,44 @@ object Sinks {
     * files (`repartition` — round-robin for even output sizes; the
     * shuffle is the price of not writing one skewed giant file).
     *
-    * Safety: the rewrite lands in a sibling temp dir, is row-count
-    * verified against the source leaf, then swapped in by rename —
-    * readers see the old or the new leaf, never a mix. A crash between
-    * the two renames leaves `<leaf>.__old__` next to a complete new
-    * leaf: recovery is delete the leftover; a crash before the swap
-    * leaves only temp dirs this pass overwrites on retry. NOT for
+    * Safety: the rewrite lands in `<parent>/_compact/<leaf>/new` (the
+    * file index skips `_compact`, so readers never see staged copies),
+    * is row-count verified, then swapped in by two renames: leaf → `old`,
+    * `new` → leaf. Between them the leaf is absent — a reader in that
+    * window, or after a crash there until the next pass, sees the table
+    * without that leaf's rows, never duplicated ones. Each pass first
+    * finishes any interrupted swap. NOT for
     * replay-ledger layouts (CorpusStream's `batch=<id>` dirs ARE the
     * commit protocol — compacting across them would forge replays). */
   def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
       targetBytes: Long = 128L << 20): CompactStats = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // finish a swap (this pass's, or one an earlier pass left): a missing
+    // leaf gets the committed rewrite — the renames only start once its
+    // row count is verified — else its backup; then drop the staging
+    def finish(leaf: Path): Unit = {
+      val (fresh, old) = compactStaging(leaf)
+      if (fs.exists(fresh.getParent)) {
+        if (!fs.exists(leaf)) require(fs.rename(
+          if (fs.exists(new Path(fresh, "_SUCCESS"))) fresh else old, leaf),
+          s"compaction recovery failed for $leaf")
+        fs.delete(fresh.getParent, true)
+        val pending = fresh.getParent.getParent
+        if (fs.listStatus(pending).isEmpty) fs.delete(pending, true)
+      }
+    }
     def leaves(p: Path): Seq[Path] = {
+      val pending = new Path(p, "_compact")
+      if (fs.exists(pending))
+        fs.listStatus(pending).foreach(s => finish(new Path(p, s.getPath.getName)))
       val subdirs = fs.listStatus(p)
         .filter(s => s.isDirectory && !s.getPath.getName.startsWith("_")
-          && !s.getPath.getName.startsWith(".")
-          && !s.getPath.getName.endsWith("__compact__")
-          && !s.getPath.getName.endsWith("__old__")) // crashed-pass leftovers
+          && !s.getPath.getName.startsWith("."))
         .map(_.getPath).toSeq
       if (subdirs.isEmpty) Seq(p) else subdirs.flatMap(leaves)
     }
+    finish(root) // the root's own staging sits beside it, outside the walk
     var compacted, before, after = 0
     val all = leaves(root)
     all.foreach { leaf =>
@@ -139,19 +156,24 @@ object Sinks {
       else {
         val src = spark.read.parquet(leaf.toString)
         val nRows = src.count()
-        val tmp = new Path(leaf.getParent, leaf.getName + ".__compact__")
-        src.repartition(n).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        require(spark.read.parquet(tmp.toString).count() == nRows,
+        val (fresh, old) = compactStaging(leaf)
+        src.repartition(n).write.mode(SaveMode.Overwrite).parquet(fresh.toString)
+        require(spark.read.parquet(fresh.toString).count() == nRows,
           s"compaction of $leaf would change its row count; aborting swap")
-        val old = new Path(leaf.getParent, leaf.getName + ".__old__")
-        fs.delete(old, true) // leftover from a crashed prior pass
-        require(fs.rename(leaf, old) && fs.rename(tmp, leaf),
+        require(fs.rename(leaf, old) && fs.rename(fresh, leaf),
           s"compaction swap failed for $leaf")
-        fs.delete(old, true)
+        finish(leaf)
         compacted += 1
         after += n
       }
     }
     CompactStats(all.size, compacted, before, after)
+  }
+
+  /** [[compact]]'s staging for `leaf`: (rewrite, backup). A `_`-named
+    * sibling would keep the leaf's `=`, which the file index reads. */
+  private[graft] def compactStaging(leaf: Path): (Path, Path) = {
+    val st = new Path(new Path(leaf.getParent, "_compact"), leaf.getName)
+    (new Path(st, "new"), new Path(st, "old"))
   }
 }

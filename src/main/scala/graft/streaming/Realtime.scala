@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
@@ -13,7 +13,8 @@ import org.apache.spark.sql.Row
   * - ST1/ST2: tumbling 1-minute event-time windows (the reference buckets
   *   by arrival wall-clock minute; with in-order fixtures both agree —
   *   documented divergence ST7).
-  * - ST3/ST4: running totals / leaderboards as update-mode aggregates.
+  * - ST3: running totals as an update-mode aggregate (the ST4
+  *   leaderboard is `EventQueries.userLeaderboard`).
   * - ST6: the reference's 24 h Redis TTL becomes a 24 h watermark, which
   *   bounds state exactly like the TTL did.
   * - ST8/ST9: offset replay/resume = checkpointLocation; tests use a
@@ -88,13 +89,6 @@ object Realtime {
     events.groupBy(col("event_type"))
       .agg(
         count(lit(1)).as("n"),
-        graft.analytics.Queries.moneySum(col("value")).as("total_value"))
-
-  /** ST4 — per-user leaderboard source table (top-k is applied on the
-    * result table at read time, reference T5). */
-  def userTotals(events: DataFrame): DataFrame =
-    events.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
         graft.analytics.Queries.moneySum(col("value")).as("total_value"))
 
   /** ST5 — recent-100 feed: processing-time ring buffer via foreachBatch

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 import graft.sources.Sinks
 

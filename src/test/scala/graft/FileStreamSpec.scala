@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.Realtime
@@ -14,7 +13,6 @@ class FileStreamSpec extends SparkSpec {
 
   test("JSON folder stream → running totals == batch") {
     val dir = Files.createTempDirectory("graft_stream_in").toString
-    import spark.implicits._
     val events = (0 until 50).map { i =>
       s"""{"event_id":$i,"ts":"2024-01-01T00:${"%02d".format(i % 60)}:00.000Z","user_id":${i % 5},"event_type":"${if (i % 3 == 0) "view" else "click"}","value":${i % 7}.5}"""
     }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.analytics.OlapQueries
 
 /** q51's fixed-point weighted PageRank: the distributed arithmetic must

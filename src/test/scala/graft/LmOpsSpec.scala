@@ -318,7 +318,6 @@ class LmOpsSpec extends SparkSpec {
   }
 
   test("d37: weight table is the deterministic PRF, bounded in [-4096, 4096)") {
-    import org.apache.spark.sql.functions.col
     val w = LmOps.weightTable(spark).as[(Long, Long)].collect().sortBy(_._1)
     assert(w.length === LmOps.ClfBuckets)
     assert(w.forall { case (b, wi) => wi == refWeight(b) })

@@ -73,6 +73,17 @@ class PipelineSpec extends SparkSpec {
   test("corpus layer: prepared split, stats, chunks of survivors only") {
     val out = Files.createTempDirectory("graft_corpus").toString
     Runner.runCorpus(spark, sfDir, out)
+    // --- corpus hand-off is REAL too: the survivors frame every later
+    // corpus step shares scans the committed corpus/prepared — it neither
+    // inlines the d18 plan nor pins it (cache / checkpoint) ---
+    val survivorsQe = Runner.corpusSurvivors(spark, sfDir, out).queryExecution
+    assert(survivorsQe.executedPlan.toString.contains(s"$out/corpus/prepared"))
+    assert(survivorsQe.withCachedData.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      case r: org.apache.spark.sql.execution.LogicalRDD => r
+    }.isEmpty, survivorsQe.withCachedData.treeString)
+    assert(survivorsQe.analyzed.collect { case n => n }.size <= 12,
+      survivorsQe.analyzed.treeString)
     val prepared = spark.read.parquet(s"$out/corpus/prepared")
     assert(prepared.count() > 0)
     assert(prepared.columns.toSet ==
@@ -198,5 +209,34 @@ class PipelineSpec extends SparkSpec {
     // already-compact leaves are left alone (idempotent second pass)
     val again = Sinks.compact(spark, s"$out/events")
     assert(again.compacted == 0 && again.filesAfter == again.filesBefore)
+  }
+
+  test("small-file compaction: a crash at any swap step is finished by the next pass") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.functions.col
+    val fs = new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // crash after step 0 (rewrite staged), 1 (leaf moved to the backup)
+    // or 2 (rewrite installed, backup not yet dropped)
+    for (step <- 0 to 2) {
+      val t = s"${Files.createTempDirectory("graft_compact_crash")}/t"
+      spark.range(1000).withColumn("p", col("id") % 2)
+        .repartition(8).write.partitionBy("p").parquet(t)
+      val leaf = new Path(s"$t/p=0")
+      val (fresh, old) = Sinks.compactStaging(leaf)
+      spark.read.parquet(leaf.toString).repartition(1).write.parquet(fresh.toString)
+      if (step >= 1) assert(fs.rename(leaf, old))
+      if (step >= 2) assert(fs.rename(fresh, leaf))
+      def counts = spark.read.parquet(t).groupBy("p").count().collect()
+        .map(r => r.get(0).toString -> r.getLong(1)).toMap
+      // the staged copies never read as partitions, even mid-crash: the
+      // one window left is step 1's, where p=0 is missing, not doubled
+      assert(counts == (if (step == 1) Map("1" -> 500L)
+        else Map("0" -> 500L, "1" -> 500L)), s"step $step")
+      Sinks.compact(spark, t)
+      assert(counts == Map("0" -> 500L, "1" -> 500L), s"step $step")
+      assert(spark.read.parquet(t).select("id").distinct().count() == 1000,
+        s"step $step")
+      assert(!fs.exists(new Path(s"$t/_compact")), s"step $step")
+    }
   }
 }
