@@ -23,24 +23,6 @@ import org.apache.spark.sql.types._
   */
 object Tables {
 
-  /** Broadcast-hint policy for SCALE-GROWING dimensions (customer, part,
-    * supplier — each grows linearly with the scale factor, unlike
-    * nation/region which are constant): by default NO static hint. The
-    * planner broadcasts whenever the dim's measured size clears
-    * `spark.sql.autoBroadcastJoinThreshold` (it does at every test sf
-    * through sf1) and falls back to a shuffle join when it doesn't —
-    * instead of forcing an executor-resident hash map of a billion-row
-    * dimension at 100 TB (the sf10 spill census caught q01 OOMing on
-    * exactly that forced hint at the 128 MB/core rung).
-    * `graft.join.forceBroadcastDims=true` restores the static hints for
-    * deployments that know their dims are bounded. Constant dims and
-    * 1-row/k-row aggregate frames keep their unconditional `broadcast()`
-    * at call sites. */
-  def dim(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get("graft.join.forceBroadcastDims", "false")
-        .toBoolean) org.apache.spark.sql.functions.broadcast(df)
-    else df
-
   val ordersSchema: StructType = StructType(Seq(
     StructField("o_orderkey", LongType),
     StructField("o_custkey", LongType),

@@ -362,7 +362,7 @@ object OlapQueries {
       val c = Tables.customer(spark, dir)
       val n = Tables.nation(spark, dir)
       val statuses = Seq("F", "O", "P")
-      val pivoted = o.join(Tables.dim(c), o("o_custkey") === c("c_custkey"))
+      val pivoted = o.join(c, o("o_custkey") === c("c_custkey"))
         .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
         .groupBy(n("n_name").as("nation"))
         .pivot("o_orderstatus", statuses)
@@ -534,7 +534,7 @@ object OlapQueries {
       .select(col("part_id"), col("best.unit_price").as("min_unit_price"),
         col("best.l_suppkey").as("supplier_id"))
       .join(p, col("part_id") === col("p_partkey"))
-      .join(Tables.dim(s), col("supplier_id") === col("s_suppkey"))
+      .join(s, col("supplier_id") === col("s_suppkey"))
       .select(col("part_id"), col("p_name").as("part_name"),
         col("supplier_id"), col("s_name").as("supplier_name"),
         col("min_unit_price"))

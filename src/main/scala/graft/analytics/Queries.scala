@@ -67,10 +67,8 @@ object Queries {
   // fits (it does at every test sf) and falls back to sort-merge when it
   // doesn't, instead of OOMing on a forced executor-resident hash map
   // (the sf10 spill census caught exactly that at the 128 MB/core rung).
-  // `graft.join.forceBroadcastDims=true` restores the static hints for
-  // deployments that KNOW their dims are small. orders⋈lineitem is the
-  // one genuine shuffle (sort-merge at 100 TB, co-partitioned on
-  // orderkey if both sides are bucketed).
+  // orders⋈lineitem is the one genuine shuffle (sort-merge at 100 TB,
+  // co-partitioned on orderkey if both sides are bucketed).
   // ---------------------------------------------------------------------
   /** Q1 body without the final presentation sort — Q2 aggregates this
     * directly (sorting 18 columns globally just to immediately aggregate
@@ -91,9 +89,9 @@ object Queries {
     val n = Tables.nation(spark, dir)
 
     o.join(l, o("o_orderkey") === l("l_orderkey"), "left")
-      .join(Tables.dim(c), o("o_custkey") === c("c_custkey"), "left")
-      .join(Tables.dim(p), l("l_partkey") === p("p_partkey"), "left")
-      .join(Tables.dim(s), l("l_suppkey") === s("s_suppkey"), "left")
+      .join(c, o("o_custkey") === c("c_custkey"), "left")
+      .join(p, l("l_partkey") === p("p_partkey"), "left")
+      .join(s, l("l_suppkey") === s("s_suppkey"), "left")
       .join(broadcast(n), c("c_nationkey") === n("n_nationkey"), "left")
       .filter(l("l_extendedprice").isNotNull && o("o_orderdate").isNotNull)
       .select(
@@ -553,7 +551,7 @@ object Queries {
   def q09Joined(orders: DataFrame, lineitem: DataFrame,
       supplier: DataFrame): DataFrame =
     orders.join(lineitem, orders("o_orderkey") === lineitem("l_orderkey"))
-      .join(Tables.dim(supplier), lineitem("l_suppkey") === supplier("s_suppkey"))
+      .join(supplier, lineitem("l_suppkey") === supplier("s_suppkey"))
       .na.drop(Seq("l_shipdate", "o_orderdate", "l_discount"))
       .withColumn("__delay",
         datediff(to_date(col("l_shipdate")), to_date(col("o_orderdate"))))
@@ -661,7 +659,7 @@ object Queries {
   def q12BrandDiscountExtremes(spark: SparkSession, dir: String): DataFrame = {
     val l = Tables.lineitem(spark, dir)
     val p = Tables.part(spark, dir)
-    val byBrand = l.join(Tables.dim(p), l("l_partkey") === p("p_partkey"))
+    val byBrand = l.join(p, l("l_partkey") === p("p_partkey"))
       .groupBy(col("p_brand").as("brand"))
       .agg(moneyAvg(col("l_discount")).as("avg_discount"))
     val top = byBrand.orderBy(col("avg_discount").desc, col("brand")).limit(5)
@@ -693,7 +691,7 @@ object Queries {
   def q13TopBrandsByRevenue(spark: SparkSession, dir: String): DataFrame = {
     val l = Tables.lineitem(spark, dir)
     val p = Tables.part(spark, dir)
-    l.join(Tables.dim(p), l("l_partkey") === p("p_partkey"))
+    l.join(p, l("l_partkey") === p("p_partkey"))
       .groupBy(col("p_brand").as("brand"))
       .agg(sum(netRevenueDec(col("l_extendedprice"), col("l_discount")))
         .cast(DoubleType).as("total_revenue"))
@@ -716,7 +714,7 @@ object Queries {
     val l = Tables.lineitem(spark, dir)
     val s = Tables.supplier(spark, dir)
     val n = Tables.nation(spark, dir)
-    l.join(Tables.dim(s), l("l_suppkey") === s("s_suppkey"))
+    l.join(s, l("l_suppkey") === s("s_suppkey"))
       .join(broadcast(n), s("s_nationkey") === n("n_nationkey"))
       .groupBy(col("n_name").as("nation"))
       .agg(sum(netRevenueDec(col("l_extendedprice"), col("l_discount")))

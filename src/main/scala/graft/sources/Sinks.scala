@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -106,44 +106,26 @@ object Sinks {
     * files (`repartition` — round-robin for even output sizes; the
     * shuffle is the price of not writing one skewed giant file).
     *
-    * Safety: the rewrite lands in `<parent>/_compact/<leaf>/new` (the
-    * file index skips `_compact`, so readers never see staged copies),
-    * is row-count verified, then swapped in by two renames: leaf → `old`,
-    * `new` → leaf. Between them the leaf is absent — a reader in that
-    * window, or after a crash there until the next pass, sees the table
-    * without that leaf's rows, never duplicated ones. Each pass first
-    * finishes any interrupted swap. NOT for
+    * Safety: each leaf is rewritten through [[swap]] (row-count
+    * verified; its crash rule and window are documented there), and the
+    * walk first finishes any swap an earlier pass left. NOT for
     * replay-ledger layouts (CorpusStream's `batch=<id>` dirs ARE the
     * commit protocol — compacting across them would forge replays). */
   def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
       targetBytes: Long = 128L << 20): CompactStats = {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // finish a swap (this pass's, or one an earlier pass left): a missing
-    // leaf gets the committed rewrite — the renames only start once its
-    // row count is verified — else its backup; then drop the staging
-    def finish(leaf: Path): Unit = {
-      val (fresh, old) = compactStaging(leaf)
-      if (fs.exists(fresh.getParent)) {
-        if (!fs.exists(leaf)) require(fs.rename(
-          if (fs.exists(new Path(fresh, "_SUCCESS"))) fresh else old, leaf),
-          s"compaction recovery failed for $leaf")
-        fs.delete(fresh.getParent, true)
-        val pending = fresh.getParent.getParent
-        if (fs.listStatus(pending).isEmpty) fs.delete(pending, true)
-      }
-    }
     def leaves(p: Path): Seq[Path] = {
       val pending = new Path(p, "_compact")
-      if (fs.exists(pending))
-        fs.listStatus(pending).foreach(s => finish(new Path(p, s.getPath.getName)))
+      if (fs.exists(pending)) fs.listStatus(pending)
+        .foreach(s => finishSwap(fs, new Path(p, s.getPath.getName)))
       val subdirs = fs.listStatus(p)
         .filter(s => s.isDirectory && !s.getPath.getName.startsWith("_")
           && !s.getPath.getName.startsWith("."))
         .map(_.getPath).toSeq
       if (subdirs.isEmpty) Seq(p) else subdirs.flatMap(leaves)
     }
-    finish(root) // the root's own staging sits beside it, outside the walk
+    finishSwap(fs, root) // the root's own staging sits beside it, outside the walk
     var compacted, before, after = 0
     val all = leaves(root)
     all.foreach { leaf =>
@@ -156,13 +138,11 @@ object Sinks {
       else {
         val src = spark.read.parquet(leaf.toString)
         val nRows = src.count()
-        val (fresh, old) = compactStaging(leaf)
-        src.repartition(n).write.mode(SaveMode.Overwrite).parquet(fresh.toString)
-        require(spark.read.parquet(fresh.toString).count() == nRows,
-          s"compaction of $leaf would change its row count; aborting swap")
-        require(fs.rename(leaf, old) && fs.rename(fresh, leaf),
-          s"compaction swap failed for $leaf")
-        finish(leaf)
+        swap(fs, leaf) { fresh =>
+          src.repartition(n).write.mode(SaveMode.Overwrite).parquet(fresh.toString)
+          require(spark.read.parquet(fresh.toString).count() == nRows,
+            s"compaction of $leaf would change its row count; aborting swap")
+        }
         compacted += 1
         after += n
       }
@@ -170,10 +150,73 @@ object Sinks {
     CompactStats(all.size, compacted, before, after)
   }
 
-  /** [[compact]]'s staging for `leaf`: (rewrite, backup). A `_`-named
-    * sibling would keep the leaf's `=`, which the file index reads. */
-  private[graft] def compactStaging(leaf: Path): (Path, Path) = {
-    val st = new Path(new Path(leaf.getParent, "_compact"), leaf.getName)
+  /** Verified directory swap — the one rename-based rewrite protocol of
+    * the lake: [[compact]] per partition leaf, `CorpusStream.compactIndex`
+    * and `CorpusStream.compactStore` per store root. `stage(fresh)`
+    * writes the rewrite into `<parent>/_compact/<name>/new` (the file
+    * index skips `_compact`, so readers never see staged copies) and
+    * verifies it, throwing to abort with `target` untouched; only then
+    * is a `ready` marker created beside it and the rewrite swapped in by
+    * two renames: `target` → `old`, `new` → `target`.
+    *
+    * Readers see the old contents or the new ones, never a mix or a
+    * duplicate. The one window left: between the two renames `target` is
+    * absent, so a reader there, or after a crash there until the next
+    * pass, sees no `target` at all. Every pass (this one included) first
+    * runs [[finishSwap]], which closes that window. */
+  private[graft] def swap(fs: FileSystem, target: Path)(stage: Path => Unit): Unit = {
+    finishSwap(fs, target)
+    val (fresh, old) = compactStaging(target)
+    stage(fresh)
+    fs.create(new Path(fresh.getParent, "ready"), true).close()
+    require(fs.rename(target, old) && fs.rename(fresh, target),
+      s"swap failed for $target")
+    finishSwap(fs, target)
+  }
+
+  /** Finish a [[swap]] of `target` that a crash interrupted, then drop
+    * its staging. The one recovery rule: a missing `target` gets the
+    * rewrite when it is marked ready, otherwise its backup. A present
+    * `target` is never touched. */
+  private[graft] def finishSwap(fs: FileSystem, target: Path): Unit = {
+    val (fresh, old) = compactStaging(target)
+    val staging = fresh.getParent
+    if (fs.exists(staging)) {
+      if (!fs.exists(target)) require(fs.rename(
+          if (fs.exists(new Path(staging, "ready"))) fresh else old, target),
+        s"could not finish the swap of $target")
+      fs.delete(staging, true)
+    }
+    // non-recursive: never sweeps a sibling's swap that just started
+    val pending = staging.getParent
+    if (fs.exists(pending) && fs.listStatus(pending).isEmpty) fs.delete(pending, false)
+  }
+
+  /** [[swap]]'s staging for `target`: (rewrite, backup). A `_`-named
+    * sibling would keep a partition leaf's `=`, which the file index
+    * reads. */
+  private[graft] def compactStaging(target: Path): (Path, Path) = {
+    val st = new Path(new Path(target.getParent, "_compact"), target.getName)
     (new Path(st, "new"), new Path(st, "old"))
   }
+
+  /** Write a small text file whole or not at all: into a hidden temp
+    * sibling, then one rename onto `p` (atomic within a directory on
+    * HDFS and the local FS), so readers see no file or all of it, never
+    * a torn one. `p` must not exist yet; a crashed attempt leaves only
+    * the temp, which the next attempt overwrites. */
+  private[graft] def writeSmallFile(fs: FileSystem, p: Path, text: String): Unit = {
+    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+    require(fs.rename(tmp, p), s"could not write $p")
+  }
+
+  /** A [[writeSmallFile]] file's text, or None when it is absent. */
+  private[graft] def readSmallFile(fs: FileSystem, p: Path): Option[String] =
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+    }
 }

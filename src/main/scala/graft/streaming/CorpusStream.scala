@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.llm.{SketchOps, TextOps}
+import graft.sources.Sinks
 
 /** Streaming corpus ingestion — the LLM tier's batch stages that are pure
   * per-row functions (quality signals, content fingerprinting) run
@@ -143,27 +144,17 @@ object CorpusStream {
   private val FoldedLedger = "_graft_folded"
 
   private def readFoldedLedger(fs: org.apache.hadoop.fs.FileSystem,
-      deltaDir: Path): Seq[(Int, String, Long)] = {
-    val p = new Path(deltaDir, FoldedLedger)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        .map(_.trim).filter(_.nonEmpty).map { line =>
-          val Array(v, w, b) = line.split("\t")
-          (v.toInt, w, b.toLong)
-        }
-      finally in.close()
-    }
-  }
+      deltaDir: Path): Seq[(Int, String, Long)] =
+    Sinks.readSmallFile(fs, new Path(deltaDir, FoldedLedger)).toSeq
+      .flatMap(_.linesIterator.map(_.trim).filter(_.nonEmpty)).map { line =>
+        val Array(v, w, b) = line.split("\t")
+        (v.toInt, w, b.toLong)
+      }
 
   private def writeFoldedLedger(fs: org.apache.hadoop.fs.FileSystem,
-      deltaDir: Path, folded: Seq[(Int, String, Long)]): Unit = {
-    val out = fs.create(new Path(deltaDir, FoldedLedger), true)
-    try out.write(folded.map { case (v, w, b) => s"$v\t$w\t$b" }
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
+      deltaDir: Path, folded: Seq[(Int, String, Long)]): Unit =
+    Sinks.writeSmallFile(fs, new Path(deltaDir, FoldedLedger),
+      folded.map { case (v, w, b) => s"$v\t$w\t$b" }.mkString("", "\n", "\n"))
 
   private val FpSchema = StructType(Seq(StructField("text_fp", StringType)))
   // the near-dup tier's delta rows: fp rows carry (text_fp, doc_id) with
@@ -280,23 +271,13 @@ object CorpusStream {
     *
     * Pure row MOVE, verified before the swap: per-tier row counts
     * (exact-fp / band / span / sketch-element) must match the pre-fold
-    * union or the pass aborts with both stores intact. The swap is
-    * [[compactStore]]'s two-rename protocol with the same crash window
-    * and entry-time recovery; run it with writers quiesced — the
-    * single-writer contract ingest already requires. */
+    * union or the pass aborts with the index intact. The swap, its crash
+    * window and its recovery are `Sinks.swap`'s; run it with writers
+    * quiesced — the single-writer contract ingest already requires. */
   def compactIndex(spark: SparkSession, indexDir: String): Unit = {
     val root = new Path(indexDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash recovery: a prior pass that died inside its two-rename window
-    // left the index at .__old__ and nothing at the root — restore it
-    val crashed = new Path(indexDir + ".__old__")
-    if (!fs.exists(root) && fs.exists(crashed)) {
-      System.err.println(s"[graft] fingerprint index $indexDir missing " +
-        s"with $crashed present — restoring the pre-compaction index " +
-        "before re-running the fold")
-      require(fs.rename(crashed, root),
-        s"could not restore $crashed to $indexDir")
-    }
+    Sinks.finishSwap(fs, root) // a pass that died mid-swap
     val all = indexVersions(spark, indexDir) // dirs + prior ledgers
     val dirs = physicalDeltas(spark, indexDir)
     if (dirs.size <= 1) return // nothing to fold
@@ -309,28 +290,23 @@ object CorpusStream {
     val before = tierCounts(src)
     val next = all.map(_._1).max + 1
     val epoch = all.count(_._2 == "compacted")
-    val tmp = new Path(indexDir + ".__compact__")
-    fs.delete(tmp, true) // crashed prior pass
-    val deltaName = s"v${next}_compacted_b$epoch"
     // bounded file count (never more than the dirs being folded, capped
     // at the session's shuffle width so big indexes split config-wide),
     // tiers clustered inside each file so per-tier reads skip whole row
     // groups on null-count stats
     val nOut = math.max(1, math.min(
       spark.sessionState.conf.numShufflePartitions, dirs.size))
-    src.repartition(nOut)
-      .sortWithinPartitions(col("ck"), col("sfp"), col("band"), col("text_fp"))
-      .write.mode(SaveMode.ErrorIfExists).parquet(s"$tmp/$deltaName")
-    val after = tierCounts(
-      spark.read.schema(FullDeltaSchema).parquet(s"$tmp/$deltaName"))
-    require(after == before,
-      s"index compaction of $indexDir would change tier row counts " +
-        s"($before -> $after); aborting swap")
-    writeFoldedLedger(fs, new Path(s"$tmp/$deltaName"), all)
-    fs.delete(crashed, true) // leftovers of a COMPLETED prior pass
-    require(fs.rename(root, crashed) && fs.rename(tmp, root),
-      s"index compaction swap failed for $indexDir")
-    fs.delete(crashed, true)
+    Sinks.swap(fs, root) { fresh =>
+      val delta = new Path(fresh, s"v${next}_compacted_b$epoch")
+      src.repartition(nOut)
+        .sortWithinPartitions(col("ck"), col("sfp"), col("band"), col("text_fp"))
+        .write.mode(SaveMode.ErrorIfExists).parquet(delta.toString)
+      val after = tierCounts(spark.read.schema(FullDeltaSchema).parquet(delta.toString))
+      require(after == before,
+        s"index compaction of $indexDir would change tier row counts " +
+          s"($before -> $after); aborting swap")
+      writeFoldedLedger(fs, delta, all)
+    }
   }
 
   /** Corpus-store bucket fan-out DEFAULT. Accepted bodies land under
@@ -358,85 +334,52 @@ object CorpusStream {
   private[graft] def storeBuckets(spark: SparkSession, outDir: String): Int = {
     val p = new Path(outDir, BucketMarker)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) CorpusBuckets
-    else {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](64)
-        var n = in.read(chunk)
-        while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        buf.toString("UTF-8").trim.toInt
-      } finally in.close()
-    }
+    Sinks.readSmallFile(fs, p).fold(CorpusBuckets)(_.trim.toInt)
   }
 
+  /** Stamp the store's fan-out once: an existing marker is never
+    * rewritten, so no crash can leave it torn under live readers. */
   private[graft] def writeBucketMarker(spark: SparkSession, outDir: String,
       buckets: Int): Unit = {
     val p = new Path(outDir, BucketMarker)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    val out = fs.create(p, true)
-    try out.write(buckets.toString.getBytes("UTF-8")) finally out.close()
+    if (!fs.exists(p)) Sinks.writeSmallFile(fs, p, buckets.toString)
   }
 
   /** Migrate the corpus store to a new bucket fan-out IN PLACE — the
     * one-time rewrite a deployment runs when the current fan-out leaves
     * each probed bucket too large. Protocol (the lake compaction's
     * verified-swap move, at store-root granularity): rewrite every
-    * accepted row re-bucketed into a sibling temp dir under
-    * `writer=compacted/batch=0` (the replay ledger lives in indexDir and
-    * is untouched, so committed (writer, batchId) pairs still replay as
-    * no-ops), verify the row count survived, then swap the directories
-    * and stamp the new fan-out in the bucket marker that
-    * [[candidateFetch]] and every future [[ingestBatch]] read. Run with
-    * writers quiesced — the same single-writer serialization contract
-    * ingest itself already requires ("compacted" is reserved as a writer
-    * id for this reason).
-    *
-    * The swap is TWO sequential renames, not one atomic op (ADVICE r11):
-    * a crash between rename(root, old) and rename(tmp, root) leaves no
-    * store at outDir with the data stranded at `.__old__`. The entry
-    * check below detects exactly that state on the next run and restores
-    * the old store before proceeding, so the rewrite is re-runnable
-    * through the window; no committed data is ever deleted before the
-    * new store is in place. */
+    * accepted row re-bucketed under `writer=compacted/batch=0` (the
+    * replay ledger lives in indexDir and is untouched, so committed
+    * (writer, batchId) pairs still replay as no-ops), verify the row
+    * count survived, stamp the new fan-out in the bucket marker that
+    * [[candidateFetch]] and every future [[ingestBatch]] read, and swap
+    * the rewrite in through `Sinks.swap` (its crash window and recovery
+    * are documented there). Run with writers quiesced — the same
+    * single-writer serialization contract ingest itself already requires
+    * ("compacted" is reserved as a writer id for this reason). */
   def compactStore(spark: SparkSession, outDir: String,
       newBuckets: Int): Unit = {
     require(newBuckets > 0, s"newBuckets must be positive: $newBuckets")
     val root = new Path(outDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash recovery: a prior pass that died inside its two-rename window
-    // left the store at .__old__ and nothing at the root — restore it
-    // (the stranded tmp dir, if any, is rebuilt below anyway)
-    val crashed = new Path(outDir + ".__old__")
-    if (!fs.exists(root) && fs.exists(crashed)) {
-      System.err.println(s"[graft] corpus store $outDir missing with " +
-        s"$crashed present — restoring the pre-migration store before " +
-        "re-running the rewrite")
-      require(fs.rename(crashed, root),
-        s"could not restore $crashed to $outDir")
-    }
+    Sinks.finishSwap(fs, root) // a pass that died mid-swap
     val src = spark.read.parquet(outDir)
     val dataCols = src.columns
       .filterNot(Set("writer", "batch", "doc_bucket").contains)
     val nRows = src.count()
-    val tmp = new Path(outDir + ".__compact__")
-    fs.delete(tmp, true) // crashed prior pass
-    src.select(dataCols.map(col): _*)
-      .withColumn("doc_bucket", docBucket(col("doc_id"), newBuckets))
-      .repartition(newBuckets, col("doc_bucket"))
-      .sortWithinPartitions(col("doc_bucket"), col("doc_id"))
-      .write.mode(SaveMode.Overwrite).partitionBy("doc_bucket")
-      .parquet(s"$tmp/writer=compacted/batch=0")
-    require(spark.read.parquet(tmp.toString).count() == nRows,
-      s"store migration of $outDir would change its row count; aborting swap")
-    writeBucketMarker(spark, tmp.toString, newBuckets)
-    val old = new Path(outDir + ".__old__")
-    fs.delete(old, true) // leftovers of a COMPLETED prior pass
-    require(fs.rename(root, old) && fs.rename(tmp, root),
-      s"store migration swap failed for $outDir")
-    fs.delete(old, true)
+    Sinks.swap(fs, root) { fresh =>
+      src.select(dataCols.map(col): _*)
+        .withColumn("doc_bucket", docBucket(col("doc_id"), newBuckets))
+        .repartition(newBuckets, col("doc_bucket"))
+        .sortWithinPartitions(col("doc_bucket"), col("doc_id"))
+        .write.mode(SaveMode.Overwrite).partitionBy("doc_bucket")
+        .parquet(s"$fresh/writer=compacted/batch=0")
+      require(spark.read.parquet(fresh.toString).count() == nRows,
+        s"store migration of $outDir would change its row count; aborting swap")
+      writeBucketMarker(spark, fresh.toString, newBuckets)
+    }
   }
 
   /** Bodies of exactly the candidate docs, fetched from the store with
@@ -769,7 +712,7 @@ object CorpusStream {
       .sortWithinPartitions(col("doc_bucket"), col("doc_id"))
       .write.mode(SaveMode.Overwrite).partitionBy("doc_bucket")
       .parquet(s"$outDir/writer=$writer/batch=$batchId")
-    writeBucketMarker(spark, outDir, nb) // idempotent stamp of the live fan-out
+    writeBucketMarker(spark, outDir, nb) // first batch stamps the live fan-out
     val next = indexVersions(spark, indexDir).map(_._1).maxOption.getOrElse(-1) + 1
     val delta = new Path(s"$indexDir/v${next}_${writer}_b$batchId")
     val fs = delta.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.Sinks
 
 /** CDC apply: keep a keyed dimension snapshot in sync with a stream of
   * upserts (the streaming twin of `StagingQueries.q44DimensionMerge` —
@@ -38,26 +40,33 @@ object DimSync {
   private val VersionRe = "v(\\d+)".r
   private val StagingRe = "\\.staging_v(\\d+)_.*".r
 
-  /** Writer-unique staging dir for version `n` under `root`. Hidden
-    * (leading dot) so it is invisible to both the version listing and
-    * Spark's file-source listing; uuid-suffixed so concurrent writers
-    * never collide on the staging path itself. */
-  private def stagingDir(root: Path, n: Int): Path = new Path(root,
-    s".staging_v${n}_${java.util.UUID.randomUUID().toString.take(8)}")
+  /** The commit marker of [[merge]]'s snapshots: Spark's own. */
+  private val Success = "_SUCCESS"
 
-  /** Commit a fully-staged version dir into its slot with one rename.
-    * An occupying dir that `isComplete` is a racing writer's committed
-    * version — refuse loudly (optimistic concurrency; the caller's
-    * retry re-reads the new snapshot). An occupying dir that is NOT
-    * complete is provably dead: no writer under the staging protocol
-    * ever puts an incomplete dir in a version slot (the rename source
-    * is complete before the rename), so it can only be a crash artifact
-    * of the pre-staging protocol — sweep it and take the slot, healing
-    * the wedge that used to need a manual delete. */
-  private def commitStaged(fs: org.apache.hadoop.fs.FileSystem,
-      staging: Path, dst: Path, isComplete: Path => Boolean): Unit = {
+  /** Version-slot commit, shared by [[merge]] (marker `_SUCCESS`) and
+    * [[mergeScd2]] (marker `_MANIFEST`): `write` fills a writer-unique
+    * staging dir for version `n` (hidden, so invisible to both the
+    * version listing and Spark's file-source listing; uuid-suffixed so
+    * concurrent writers never collide on it) and must leave `marker` in
+    * it last; one rename then moves it into `v<n>`.
+    * An occupying slot that holds `marker` is a racing writer's
+    * committed version — refuse loudly (optimistic concurrency; the
+    * caller's retry re-reads the new snapshot). An occupying slot
+    * WITHOUT it is provably dead: no writer under the staging protocol
+    * ever puts an incomplete dir in a version slot (the rename source is
+    * complete before the rename), so it can only be a crash artifact of
+    * the pre-staging protocol — sweep it and take the slot, healing the
+    * wedge that used to need a manual delete. A crash anywhere leaves
+    * the previous version serving and at most staging junk, which
+    * [[vacuum]]/[[vacuumScd2]] sweep once a later version commits. */
+  private[graft] def commitVersion(fs: FileSystem, root: Path, n: Int,
+      marker: String)(write: Path => Unit): Unit = {
+    val staging = new Path(root,
+      s".staging_v${n}_${java.util.UUID.randomUUID().toString.take(8)}")
+    write(staging)
+    val dst = new Path(root, s"v$n")
     if (fs.exists(dst)) {
-      if (isComplete(dst)) {
+      if (fs.exists(new Path(dst, marker))) {
         fs.delete(staging, true)
         throw new IllegalStateException(s"version ${dst.getName} was " +
           "committed concurrently; retry the merge against the new snapshot")
@@ -68,13 +77,43 @@ object DimSync {
       s"could not commit ${dst.getName}: rename failed (staging left at $staging)")
   }
 
+  /** Version slots under `path` as (n, dir, complete), ascending; a
+    * slot is complete once it holds `marker`. */
+  private def slots(spark: SparkSession, path: String,
+      marker: String): (FileSystem, Seq[(Int, Path, Boolean)]) = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (fs, if (!fs.exists(p)) Nil else fs.listStatus(p).toSeq
+      .filter(_.isDirectory)
+      .flatMap(s => s.getPath.getName match {
+        case VersionRe(n) =>
+          Some((n.toInt, s.getPath, fs.exists(new Path(s.getPath, marker))))
+        case _ => None
+      }).sortBy(_._1))
+  }
+
+  private def latestComplete(spark: SparkSession, path: String,
+      marker: String): Option[Int] =
+    slots(spark, path, marker)._2.collect { case (n, _, true) => n }.lastOption
+
+  /** `v<version>` under `path`, failing loudly on an incomplete or
+    * absent slot rather than serving a dead writer's partial directory. */
+  private def completeVersion(spark: SparkSession, path: String,
+      version: Int, marker: String): Path = {
+    val v = new Path(path, s"v$version")
+    require(v.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(new Path(v, marker)),
+      s"version v$version at $path is absent or incomplete")
+    v
+  }
+
   /** Staging dirs that can no longer commit: their target slot sits at
     * or below the latest complete version, so their rename would land on
     * a committed dir and be refused — provably dead regardless of
     * whether the writer still runs. A staging dir targeting a slot ABOVE
     * the latest complete version may be in flight and is spared. */
-  private def deadStaging(fs: org.apache.hadoop.fs.FileSystem,
-      root: Path, latestComplete: Int): Seq[Path] =
+  private def deadStaging(fs: FileSystem, root: Path,
+      latestComplete: Int): Seq[Path] =
     fs.listStatus(root).toSeq.filter(_.isDirectory).flatMap(s =>
       s.getPath.getName match {
         case StagingRe(n) if n.toInt <= latestComplete => Some(s.getPath)
@@ -82,19 +121,8 @@ object DimSync {
       })
 
   /** Highest version directory with a `_SUCCESS` marker, if any. */
-  def latestVersion(spark: SparkSession, dimPath: String): Option[Int] = {
-    val p = new Path(dimPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq
-      .filter(_.isDirectory)
-      .flatMap(s => s.getPath.getName match {
-        case VersionRe(n) if fs.exists(new Path(s.getPath, "_SUCCESS")) =>
-          Some(n.toInt)
-        case _ => None
-      })
-      .sorted.lastOption
-  }
+  def latestVersion(spark: SparkSession, dimPath: String): Option[Int] =
+    latestComplete(spark, dimPath, Success)
 
   /** The snapshot frame at a known version (empty-with-batch-schema when
     * `version` is None, so merge #0 is a pure insert). */
@@ -112,13 +140,8 @@ object DimSync {
   /** Time-travel read: the snapshot as of a specific COMPLETE version.
     * Fails loudly on an incomplete or absent slot rather than serving a
     * dead writer's partial directory. */
-  def snapshotAt(spark: SparkSession, dimPath: String, version: Int): DataFrame = {
-    val p = new Path(s"$dimPath/v$version")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new Path(p, "_SUCCESS")),
-      s"version v$version at $dimPath is absent or incomplete")
-    spark.read.parquet(p.toString)
-  }
+  def snapshotAt(spark: SparkSession, dimPath: String, version: Int): DataFrame =
+    spark.read.parquet(completeVersion(spark, dimPath, version, Success).toString)
 
   /** VACUUM: the retention sweep the merge path's contract defers to.
     * Deletes (a) COMPLETE versions older than the newest `keep` (time
@@ -141,25 +164,24 @@ object DimSync {
     * reader fails the reader's scan (the classic lake-format isolation
     * window). Contract: consume snapshot frames before vacuuming, or
     * size `keep` to at least the longest reader horizon. */
-  def vacuum(spark: SparkSession, dimPath: String, keep: Int): Seq[String] = {
+  def vacuum(spark: SparkSession, dimPath: String, keep: Int): Seq[String] =
+    vacuumSlots(spark, dimPath, keep, Success)(_.toSet)
+
+  /** The sweep behind [[vacuum]] and [[vacuumScd2]]: given the newest
+    * `keep` complete versions, `live` names every complete version that
+    * must survive; other complete versions, incomplete slots below the
+    * latest complete version and dead staging dirs go. */
+  private def vacuumSlots(spark: SparkSession, path: String, keep: Int,
+      marker: String)(live: Seq[Int] => Set[Int]): Seq[String] = {
     require(keep >= 1, "must keep at least the current version")
-    val p = new Path(dimPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Nil
-    val slots = fs.listStatus(p).toSeq.filter(_.isDirectory)
-      .flatMap(s => s.getPath.getName match {
-        case VersionRe(n) =>
-          Some((n.toInt, s.getPath,
-            fs.exists(new Path(s.getPath, "_SUCCESS"))))
-        case _ => None
-      }).sortBy(_._1)
-    val complete = slots.collect { case (n, _, true) => n }
+    val (fs, all) = slots(spark, path, marker)
+    val complete = all.collect { case (n, _, true) => n }
     if (complete.isEmpty) return Nil
-    val latest = complete.max
-    val keepFloor = complete.sorted.takeRight(keep).head
-    val sweep = slots.filter { case (n, _, ok) =>
-      (ok && n < keepFloor) || (!ok && n < latest)
-    }.map(_._2) ++ deadStaging(fs, p, latest)
+    val latest = complete.last
+    val alive = live(complete.takeRight(keep))
+    val sweep = all.filter { case (n, _, ok) =>
+      if (ok) !alive(n) else n < latest
+    }.map(_._2) ++ deadStaging(fs, new Path(path), latest)
     sweep.foreach(fs.delete(_, true))
     sweep.map(_.getName)
   }
@@ -204,13 +226,10 @@ object DimSync {
     val merged = cur.as("s").join(one.as("b"), Seq(key), "full_outer")
       .select(col(key) +: valueCols.map(c =>
         coalesce(col(s"b.$c"), col(s"s.$c")).as(c)): _*)
-    val next = base.getOrElse(-1) + 1
     val root = new Path(dimPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = stagingDir(root, next)
-    merged.write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
-    commitStaged(fs, staging, new Path(root, s"v$next"),
-      d => fs.exists(new Path(d, "_SUCCESS")))
+    commitVersion(fs, root, base.getOrElse(-1) + 1, Success)(staging =>
+      merged.write.mode(SaveMode.ErrorIfExists).parquet(staging.toString))
   }
 
   // -------------------------------------------------------------------
@@ -226,36 +245,19 @@ object DimSync {
 
   private val Scd2ManifestFile = "_MANIFEST"
 
-  /** Conf knob for [[mergeScd2]]'s append-only runtime guard (default
-    * on). The guard is one small extra job over already-pruned data;
-    * disable only for benchmarks that measure the raw merge. */
-  private[graft] val Scd2GuardKey = "graft.scd2.guard"
-
   /** Highest SCD-2 lake version whose manifest exists. The manifest is
-    * written LAST (after the parquet job's own `_SUCCESS`), via
-    * create-temp-then-rename, so its presence is the commit point: a
+    * written LAST (after the parquet job's own `_SUCCESS`), through
+    * `Sinks.writeSmallFile`, so its presence is the commit point: a
     * crash anywhere earlier leaves the previous version serving. */
-  def latestScd2Version(spark: SparkSession, lakePath: String): Option[Int] = {
-    val p = new Path(lakePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq
-      .filter(_.isDirectory)
-      .flatMap(s => s.getPath.getName match {
-        case VersionRe(n) if fs.exists(new Path(s.getPath, Scd2ManifestFile)) =>
-          Some(n.toInt)
-        case _ => None
-      })
-      .sorted.lastOption
-  }
+  def latestScd2Version(spark: SparkSession, lakePath: String): Option[Int] =
+    latestComplete(spark, lakePath, Scd2ManifestFile)
 
   private def readScd2Manifest(spark: SparkSession, lakePath: String,
       version: Int): Scd2Manifest = {
     val p = new Path(s"$lakePath/v$version/$Scd2ManifestFile")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
+    val text = Sinks.readSmallFile(fs, p)
+      .getOrElse(throw new java.io.FileNotFoundException(p.toString))
     val kv = text.linesIterator.map(_.trim).filter(_.nonEmpty)
       .map { l => val Array(k, v) = l.split("=", 2); (k, v) }.toMap
     Scd2Manifest(
@@ -265,46 +267,36 @@ object DimSync {
         k.stripPrefix("bucket.").toInt -> v.toInt })
   }
 
-  private def writeScd2Manifest(spark: SparkSession, dir: Path,
+  private def writeScd2Manifest(fs: FileSystem, dir: Path,
       m: Scd2Manifest): Unit = {
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(dir, s".$Scd2ManifestFile.tmp")
-    val out = fs.create(tmp, true)
-    try {
-      val lines = Seq(s"nBuckets=${m.nBuckets}") ++
-        m.batchId.map(id => s"batchId=$id") ++
-        m.buckets.toSeq.sortBy(_._1).map { case (b, v) => s"bucket.$b=$v" }
-      out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    } finally out.close()
-    // rename within one directory: atomic on HDFS and local FS — readers
-    // see either no manifest (version invisible) or the whole manifest
-    require(fs.rename(tmp, new Path(dir, Scd2ManifestFile)),
-      s"could not write manifest into $dir")
+    val lines = Seq(s"nBuckets=${m.nBuckets}") ++
+      m.batchId.map(id => s"batchId=$id") ++
+      m.buckets.toSeq.sortBy(_._1).map { case (b, v) => s"bucket.$b=$v" }
+    Sinks.writeSmallFile(fs, new Path(dir, Scd2ManifestFile),
+      lines.mkString("", "\n", "\n"))
   }
 
-  /** Conf knob for [[autoBuckets]]'s upper clamp (default 65536 — the
-    * one place the clamp and its rationale live). At the default, a
-    * 1e9-key domain lands ~15k keys per bucket; a larger key domain
-    * should raise the clamp (or pass nBuckets explicitly) so per-merge
+  /** [[autoBuckets]]'s upper clamp (the one place the clamp and its
+    * rationale live). It lands a 1e9-key domain at ~15k keys per bucket;
+    * a larger key domain should pass nBuckets explicitly so per-merge
     * write amplification keeps converging to the batch-key fraction.
     * LAYOUT_CENSUS `scd2_merge` anchors the extrapolation with measured
     * amplification rows up to the clamp itself. */
-  private[graft] val Scd2MaxBucketsKey = "graft.scd2.maxBuckets"
+  private val Scd2MaxBuckets = 65536
 
   /** Default bucket sizing when a lake is created without an explicit
     * count: ~1k keys per bucket from the FIRST batch's key cardinality,
-    * power of two, clamped to [16, [[Scd2MaxBucketsKey]]]. Rationale
+    * power of two, clamped to [16, [[Scd2MaxBuckets]]]. Rationale
     * (LAYOUT_CENSUS `scd2_merge`): a K-key change batch touches
     * ≈ n(1−(1−1/n)^K) buckets, so per-merge write amplification
     * converges to the batch-key fraction only once n ≫ typical K — size
     * n from the KEY DOMAIN, not the batch; a first full-dimension load
     * is the best available proxy. At 100 TB (~1e9 keys) this rule lands
-    * at the default clamp. */
+    * at the clamp. */
   private def autoBuckets(batch: DataFrame): Int = {
-    val cap = batch.sparkSession.conf.get(Scd2MaxBucketsKey, "65536").toInt
     val keys = batch.select(col("o_custkey")).distinct().count()
     var n = 16
-    while (n < keys / 1024 && n < cap) n *= 2
+    while (n < keys / 1024 && n < Scd2MaxBuckets) n *= 2
     n
   }
 
@@ -337,11 +329,12 @@ object DimSync {
     * written. Untouched bucket files are never opened, let alone
     * rewritten — asserted in ScdSpec the way LayoutSpec pins d49.
     *
-    * Same append-only-per-key contract as `scd2Merge`, now ENFORCED at
-    * runtime (conf [[Scd2GuardKey]], default on): a batch change that
-    * does not postdate its key's open `valid_from` fails the merge
-    * loudly instead of silently planting wrong history (a restatement
-    * into the past needs the from-scratch rebuild — q52's path).
+    * Same append-only-per-key contract as `scd2Merge`, ENFORCED at
+    * runtime on every merge (one small extra job over the already-pruned
+    * history): a batch change that does not postdate its key's open
+    * `valid_from` fails the merge loudly instead of silently planting
+    * wrong history (a restatement into the past needs the from-scratch
+    * rebuild — q52's path).
     *
     * `nBuckets = 0` auto-sizes a NEW lake from the first batch's key
     * cardinality ([[autoBuckets]]); an existing lake always keeps its
@@ -398,8 +391,7 @@ object DimSync {
     // dimension-sized touched set spills rather than OOMs
     if (histPaths.nonEmpty) hist.persist()
     try {
-    if (histPaths.nonEmpty &&
-        spark.conf.get(Scd2GuardKey, "true").toBoolean) {
+    if (histPaths.nonEmpty) {
       // append-only guard: one small extra job per merge. The open row
       // per key IS the is_current row (exactly one per key by the
       // interval invariant), so the history side needs a filter, not a
@@ -430,13 +422,12 @@ object DimSync {
       .repartition(col("bucket"))
     val root = new Path(lakePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = stagingDir(root, next)
-    merged.write.mode(SaveMode.ErrorIfExists)
-      .partitionBy("bucket").parquet(staging.toString)
-    writeScd2Manifest(spark, staging, Scd2Manifest(n, batchId,
-      baseMan.map(_.buckets).getOrElse(Map.empty) ++ touched.map(_ -> next)))
-    commitStaged(fs, staging, new Path(root, s"v$next"),
-      d => fs.exists(new Path(d, Scd2ManifestFile)))
+    commitVersion(fs, root, next, Scd2ManifestFile) { staging =>
+      merged.write.mode(SaveMode.ErrorIfExists)
+        .partitionBy("bucket").parquet(staging.toString)
+      writeScd2Manifest(fs, staging, Scd2Manifest(n, batchId,
+        baseMan.map(_.buckets).getOrElse(Map.empty) ++ touched.map(_ -> next)))
+    }
     touched
     } finally if (histPaths.nonEmpty) hist.unpersist(false)
   }
@@ -453,10 +444,7 @@ object DimSync {
     * loudly on an incomplete or absent slot. */
   def scd2SnapshotAt(spark: SparkSession, lakePath: String,
       version: Int): DataFrame = {
-    val p = new Path(s"$lakePath/v$version/$Scd2ManifestFile")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"SCD-2 version v$version at $lakePath is absent or incomplete")
+    completeVersion(spark, lakePath, version, Scd2ManifestFile)
     val m = readScd2Manifest(spark, lakePath, version)
     val paths = m.buckets.toSeq.sortBy(_._1)
       .map { case (b, v) => s"$lakePath/v$v/bucket=$b" }
@@ -483,29 +471,10 @@ object DimSync {
     * Contract: consume snapshot frames before vacuuming, or size `keep`
     * to at least the longest reader horizon — ScdSpec pins both sides of
     * this boundary. */
-  def vacuumScd2(spark: SparkSession, lakePath: String, keep: Int): Seq[String] = {
-    require(keep >= 1, "must keep at least the current version")
-    val p = new Path(lakePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Nil
-    val slots = fs.listStatus(p).toSeq.filter(_.isDirectory)
-      .flatMap(s => s.getPath.getName match {
-        case VersionRe(n) => Some((n.toInt, s.getPath,
-          fs.exists(new Path(s.getPath, Scd2ManifestFile))))
-        case _ => None
-      }).sortBy(_._1)
-    val complete = slots.collect { case (n, _, true) => n }.sorted
-    if (complete.isEmpty) return Nil
-    val latest = complete.max
-    val retained = complete.takeRight(keep)
-    val referenced = retained.toSet ++ retained.flatMap(v =>
-      readScd2Manifest(spark, lakePath, v).buckets.values)
-    val sweep = slots.filter { case (n, _, ok) =>
-      (ok && !referenced(n)) || (!ok && n < latest)
-    }.map(_._2) ++ deadStaging(fs, p, latest)
-    sweep.foreach(fs.delete(_, true))
-    sweep.map(_.getName)
-  }
+  def vacuumScd2(spark: SparkSession, lakePath: String, keep: Int): Seq[String] =
+    vacuumSlots(spark, lakePath, keep, Scd2ManifestFile)(retained =>
+      retained.toSet ++ retained.flatMap(v =>
+        readScd2Manifest(spark, lakePath, v).buckets.values))
 
   /** Point-in-time lookup against an SCD-2 interval table — the
     * STREAM-side consumer of q52's history (q54 is the batch twin):

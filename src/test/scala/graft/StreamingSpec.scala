@@ -719,18 +719,19 @@ class StreamingSpec extends SparkSpec {
     assert(CorpusStream.storeBuckets(spark, out) == 16)
 
     // crash recovery (ADVICE r11): simulate dying between the two swap
-    // renames — store gone, data stranded at .__old__ — and show the
-    // rerun restores it and completes the migration
+    // renames — store gone, data stranded at the swap's backup — and show
+    // the rerun restores it and completes the migration
     val fs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val idsNow = after.select("doc_id").as[Long].collect().sorted.toSeq
-    assert(fs.rename(new org.apache.hadoop.fs.Path(out),
-      new org.apache.hadoop.fs.Path(out + ".__old__")))
+    val (_, old) = graft.sources.Sinks.compactStaging(new org.apache.hadoop.fs.Path(out))
+    assert(fs.mkdirs(old.getParent))
+    assert(fs.rename(new org.apache.hadoop.fs.Path(out), old))
     CorpusStream.compactStore(spark, out, 8) // must restore, then migrate
     assert(CorpusStream.storeBuckets(spark, out) == 8)
     assert(spark.read.parquet(out)
       .select("doc_id").as[Long].collect().sorted.toSeq == idsNow)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(out + ".__old__")))
+    assert(!fs.exists(old))
   }
 
   test("compactIndex folds deltas to one dir: probes identical, replays no-op, gates still fire") {
@@ -791,18 +792,19 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(out).select("doc_id").count() == 5, "replay after refold")
 
     // crash window: dying between the two swap renames leaves the index
-    // at .__old__ — the next pass restores it before folding
+    // at the swap's backup — the next pass restores it before folding
     val fs = new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     ingest("stream", 3L, Seq(
       (15L, "one more accepted document so the restored index has two deltas to fold", "misc")))
     val versNow = CorpusStream.indexVersions(spark, idx).toSet
-    assert(fs.rename(new org.apache.hadoop.fs.Path(idx),
-      new org.apache.hadoop.fs.Path(idx + ".__old__")))
+    val (_, old) = graft.sources.Sinks.compactStaging(new org.apache.hadoop.fs.Path(idx))
+    assert(fs.mkdirs(old.getParent))
+    assert(fs.rename(new org.apache.hadoop.fs.Path(idx), old))
     CorpusStream.compactIndex(spark, idx) // restore, then fold
     assert(versNow.subsetOf(CorpusStream.indexVersions(spark, idx).toSet))
     assert(deltaDirs().size == 1)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(idx + ".__old__")))
+    assert(!fs.exists(old))
 
     // 'compacted' is a reserved writer id
     intercept[IllegalArgumentException] {
