@@ -156,23 +156,21 @@ object Runner {
       ))
   }
 
-  /** Gold: audited marts. Audit columns mirror the reference DWH layer
-    * (`target_layer.py:52-53` insertion/modification dates). The marts
-    * run concurrently; q02/q03/q07 share their StageCache stages,
-    * whose atomic computeIfAbsent guarantees a single build even under
-    * concurrent first consumers.
+  /** Gold: audited marts, read ONLY from `silver/` (silver must have run
+    * into `outDir` first; `sfDir` is kept for call symmetry but unused).
+    * Audit columns mirror the reference DWH layer (`target_layer.py:52-53`
+    * insertion/modification dates). The marts run concurrently; q02/q03/q07
+    * share their StageCache stages, whose atomic computeIfAbsent guarantees
+    * a single build even under concurrent first consumers.
     *
-    * The two big facts first land ONCE as orderkey-bucketed managed
-    * tables (the 100 TB layout: co-located + co-sorted on the join key),
-    * and the q09-shape supplier scorecard is built FROM them — its
+    * The two big facts first land ONCE as orderkey-bucketed managed tables
+    * built FROM the silver copies (the 100 TB layout: co-located +
+    * co-sorted on the join key), and every mart query is pointed at the
+    * silver layer dir (the loaders detect the layout). The q09-shape
+    * supplier scorecard is built from the bucketed tables — its
     * orders⋈lineitem fact-fact join plans with ZERO shuffle exchanges
     * (asserted here, proven again in BucketingSpec). On a cluster, every
     * later fact-fact query amortizes the same one-time bucketed write. */
-  /** Gold reads ONLY `silver/` (the `sfDir` parameter is kept for call
-    * symmetry but unused — silver must have run into `outDir` first):
-    * the two big facts land once as orderkey-bucketed managed tables
-    * built FROM the silver copies, and every mart query is pointed at
-    * the silver layer dir (the loaders detect the layout). */
   def runGold(spark: SparkSession, sfDir: String, outDir: String): Unit = {
     val silver = s"$outDir/silver"
     def audited(df: DataFrame): DataFrame =

@@ -11,25 +11,27 @@ import org.apache.spark.sql.types._
   *
   * Shape: every transport row is `(topic, value)` — the Kafka wire format
   * after `CAST(value AS STRING)`. A [[BusSource]] supplies that frame:
-  *   - [[kafka]] is the production path: `format("kafka")` with
+  *   - [[KafkaBus]] is the production path: `format("kafka")` with
   *     `subscribePattern` covering all four topics in ONE stream (the
   *     reference polls all four from one consumer, `consumer.py:80-97`) —
   *     present and compiling; not executable here (no broker / connector
   *     jar in this environment), which is exactly why the contract seam
   *     exists;
-  *   - [[fileSource]] is the test/local twin: a JSON folder stream (or
+  *   - [[FileBus]] is the test/local twin: a JSON folder stream (or
   *     batch frame in tests) carrying the same `(topic, value)` rows.
   *
-  * [[ingest]] then dispatches per-topic `from_json` schemas and unions the
-  * four branches into one normalized envelope — self-union of one source
-  * stream, legal in batch and streaming alike. Topic-specific fields stay
-  * typed (items array for orders, quantity for cart adds); absent fields
-  * are null, mirroring the reference's per-topic processors writing into
-  * one metrics store.
+  * [[ingest]] then reads that frame once, as the reference consumer reads
+  * each message once and dispatches on its topic: one filter to the
+  * registered topics, one `from_json` of the envelope fields, one
+  * projection into a normalized envelope — legal in batch and streaming
+  * alike. Topic-specific fields stay typed (items array for orders,
+  * quantity for cart adds); a field the topic's schema lacks is null,
+  * mirroring the reference's per-topic processors writing into one
+  * metrics store.
   *
-  * Scale: the dispatch is 4 filters over one stream (no extra shuffle);
-  * parsing is per-row codegen'd JsonToStructs; downstream aggregations
-  * decide partitioning. Adding a topic = one registry entry.
+  * Scale: one scan and one parse per row, no shuffle (the optimizer prunes
+  * the parse to the fields a query reads); downstream aggregations decide
+  * partitioning. Adding a topic = one registry entry.
   */
 object EventBus {
 
@@ -123,32 +125,29 @@ object EventBus {
       .option("kafka.bootstrap.servers", bootstrapServers)
       .option("topic", topic)
 
-  /** Normalized envelope columns every branch projects into. */
-  private val envelope = Seq("topic", "event_id", "event_type", "user_id",
-    "ts", "session_id", "product_id", "product_category", "product_price",
+  /** Envelope fields as they appear on the wire; `timestamp` reads as `ts`. */
+  private val envelope = Seq("event_id", "event_type", "user_id", "timestamp",
+    "session_id", "product_id", "product_category", "product_price",
     "quantity", "total_amount", "order_id", "items")
 
-  /** Per-topic `from_json` dispatch + union into the envelope. Works on a
-    * streaming or batch `(topic, value)` frame. */
+  /** One pass into the typed envelope: the registered topics, one
+    * `from_json` of the envelope fields, and a projection in which a field
+    * reads null on every topic whose schema lacks it (as a per-topic parse
+    * would give). Works on a streaming or batch `(topic, value)` frame. */
   def ingest(raw: DataFrame): DataFrame = {
-    def branch(topic: String): DataFrame = {
-      val e = raw.filter(col("topic") === topic)
-        .withColumn("e", from_json(col("value"), schemas(topic)))
-      val parsed = e.select(col("topic") +: schemas(topic).fieldNames.toSeq
-        .map(f => col(s"e.$f")): _*)
-        .withColumnRenamed("timestamp", "ts")
-      envelope.foldLeft(parsed) { (d, c) =>
-        if (d.columns.contains(c)) d
-        else d.withColumn(c, lit(null).cast(c match {
-          case "product_id" => LongType
-          case "quantity" => IntegerType
-          case "product_price" | "total_amount" => DoubleType
-          case "items" => ArrayType(orderItemSchema)
-          case _ => StringType
-        }))
-      }.select(envelope.map(col): _*)
+    val topics = schemas.keys.toSeq
+    val fields = envelope.map { f =>
+      val owners = schemas.toSeq.flatMap { case (t, s) => s.find(_.name == f).map(t -> _.dataType) }
+      require(owners.map(_._2).distinct.size == 1, s"envelope field $f: ${owners.mkString(", ")}")
+      (StructField(f, owners.head._2), owners.map(_._1))
     }
-    Seq(ProductViews, CartAdd, WishlistAdd, Orders).map(branch).reduce(_.union(_))
+    val e = raw.filter(col("topic").isin(topics: _*))
+      .withColumn("e", from_json(col("value"), StructType(fields.map(_._1))))
+    e.select(col("topic") +: fields.map { case (f, owners) =>
+      val v = col(s"e.${f.name}")
+      (if (owners.size == topics.size) v else when(col("topic").isin(owners: _*), v))
+        .as(if (f.name == "timestamp") "ts" else f.name)
+    }: _*)
   }
 
   // ---------------------------------------------------------------------

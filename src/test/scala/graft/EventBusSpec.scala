@@ -2,12 +2,16 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.streaming.EventBus
 
-/** 4-topic Kafka-shaped ingestion (S12/S13 contract): per-topic schema
-  * dispatch over one (topic, value) stream, batch == streaming. */
+/** 4-topic Kafka-shaped ingestion (S12/S13 contract): one envelope parse
+  * over one (topic, value) stream, each field typed and owned by the topic
+  * schemas, batch == streaming. */
 class EventBusSpec extends SparkSpec {
   import spark.implicits._
 
@@ -42,6 +46,14 @@ class EventBusSpec extends SparkSpec {
         |"timestamp":"2024-01-01T10:03:00","session_id":"s2"}"""
         .stripMargin.replaceAll("\n", "")),
   )
+
+  /** Lands `rows` as one wire file; written via Spark so the nested JSON
+    * value string gets correct JSON escaping inside the file. */
+  private def landWire(rows: Seq[(String, String)]): String = {
+    val dir = Files.createTempDirectory("graft_bus").toFile.getAbsolutePath
+    rows.toDF("topic", "value").coalesce(1).write.mode("overwrite").json(dir)
+    dir
+  }
 
   test("batch ingest: per-topic dispatch into one typed envelope") {
     val out = EventBus.ingest(wireRows.toDF("topic", "value"))
@@ -78,12 +90,7 @@ class EventBusSpec extends SparkSpec {
   }
 
   test("file-bus streaming ingest == batch ingest (S12/S13 twin)") {
-    val dir = Files.createTempDirectory("graft_bus").toFile
-    // write the wire rows via Spark so the nested JSON value string gets
-    // correct JSON escaping inside the file
-    wireRows.toDF("topic", "value").coalesce(1).write.mode("overwrite")
-      .json(dir.getAbsolutePath)
-    val stream = EventBus.ingest(EventBus.FileBus(dir.getAbsolutePath).load(spark))
+    val stream = EventBus.ingest(EventBus.FileBus(landWire(wireRows)).load(spark))
     val q = graft.streaming.Realtime.startMemorySink(stream, "t_bus",
       org.apache.spark.sql.streaming.OutputMode.Append)
     q.processAllAvailable()
@@ -114,6 +121,61 @@ class EventBusSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(rev.toSeq == Seq(("tools", 1L, 19.98), ("toys", 1L, 2.50)))
     env.unpersist()
+  }
+
+  test("ingest parses each wire row once: one scan, input rows counted once") {
+    val wire = new StructType().add("topic", StringType).add("value", StringType)
+    val dir = landWire(Seq.fill(25)(wireRows).flatten)
+    val plan = EventBus.ingest(spark.read.schema(wire).json(dir))
+      .queryExecution.optimizedPlan
+    assert(plan.collectLeaves().size == 1, plan.treeString)
+    // each consumer query counts every landed row it reads once: all 100,
+    // or its topic's 25 where the topic filter is pushed into the scan
+    val queries = Seq[(String, DataFrame => DataFrame, OutputMode, Long)](
+      ("envelope", identity, OutputMode.Append, 100L),
+      ("user_activity", EventBus.userActivity, OutputMode.Update, 100L),
+      ("product_views", EventBus.productViews, OutputMode.Update, 25L),
+      ("category_views", EventBus.categoryViews, OutputMode.Update, 25L),
+      ("cart_totals", EventBus.cartTotals, OutputMode.Update, 25L),
+      ("order_category_revenue", EventBus.orderCategoryRevenue, OutputMode.Update, 25L))
+    queries.foreach { case (name, metric, mode, rows) =>
+      val q = graft.streaming.Realtime.startMemorySink(
+        metric(EventBus.ingest(EventBus.FileBus(dir).load(spark))), s"t_bus_$name", mode)
+      q.processAllAvailable()
+      q.stop()
+      assert(q.lastProgress.numInputRows == rows, name)
+    }
+    assert(spark.table("t_bus_envelope").count() == 100L)
+  }
+
+  test("envelope parity: stray, malformed-foreign and unregistered rows") {
+    val view = """{"event_id":"%s","event_type":"product_view","user_id":"u3",
+      |"product_id":7,"product_name":"Widget","product_category":"tools",
+      |"product_price":9.99,"timestamp":"2024-01-01T10:04:00",
+      |"session_id":"s3",%s}""".stripMargin.replaceAll("\n", "")
+    val edge = Seq(
+      EventBus.ProductViews -> view.format("e5", "\"quantity\":2,\"order_id\":\"o9\""),
+      EventBus.ProductViews -> view.format("e6", "\"quantity\":\"abc\""),
+      "ecommerce.returns" -> view.format("e7", "\"page_url\":\"/p/7\""))
+    val rows = wireRows ++ edge
+    val env = EventBus.ingest(rows.toDF("topic", "value")).orderBy("event_id").collect()
+    assert(env.map(_.getAs[String]("event_id")).toSeq == (1 to 6).map(i => s"e$i"))
+    Seq(env(4), env(5)).foreach { r =>
+      assert(r.isNullAt(r.fieldIndex("quantity")) && r.isNullAt(r.fieldIndex("order_id")))
+      assert(r.getAs[Long]("product_id") == 7L && r.getAs[String]("session_id") == "s3" &&
+        r.getAs[Double]("product_price") == 9.99 && !r.isNullAt(r.fieldIndex("ts")))
+    }
+    // every row equals the parse under its own topic's full schema, with
+    // null in each envelope field that schema lacks
+    rows.filter(r => EventBus.schemas.contains(r._1)).zip(env).foreach { case ((t, v), got) =>
+      val own = Seq(v).toDF("value")
+        .select(from_json(col("value"), EventBus.schemas(t)).as("e")).select("e.*").head()
+      got.schema.fieldNames.tail.foreach { c =>
+        val f = if (c == "ts") "timestamp" else c
+        val want = if (own.schema.fieldNames.contains(f)) own.getAs[Any](f) else null
+        assert(got.getAs[Any](c) == want, s"${got.getAs[String]("event_id")}.$c")
+      }
+    }
   }
 
   test("kafka branch is constructible (production wiring compiles)") {
