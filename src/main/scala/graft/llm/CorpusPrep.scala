@@ -167,8 +167,8 @@ object CorpusPrep {
     // aggregates — without the pin those shuffle rounds would run per
     // consumer (the LSH internals take separate actions, so single-plan
     // exchange reuse cannot cover them)
-    val exactDeduped = filtered.join(reps, Seq("doc_id"), "left_semi")
-      .localCheckpoint()
+    val exactDeduped = graft.StageCache.checkpoint(
+      filtered.join(reps, Seq("doc_id"), "left_semi"))
     val ids = exactDeduped.select(col("doc_id"))
     val drop = SketchOps.lshVerifiedPairs(
         sig.join(ids, Seq("doc_id"), "left_semi"),

@@ -57,7 +57,7 @@ object SketchOps {
   def minhashSignatures(df: DataFrame): DataFrame = {
     // cached: read twice below (the dictionary derives from it AND the
     // occurrence stream joins against the dictionary)
-    val toks = tokenSet(df).cache()
+    val toks = graft.StageCache.pin(tokenSet(df))
     val hashed = toks.join(broadcast(tokenHashBases(toks)), "tok")
     hashed.groupBy(col("doc_id"), col("source"))
       .agg(min(col("h1") + lit(0) * col("h2")).as("m0"),
@@ -206,7 +206,7 @@ object SketchOps {
     // sh feeds three consumers in the final plan (both join sides and the
     // per-doc sizes); sig feeds only the candidate join — caching it
     // would just pin blocks for a single-consumer subtree
-    val sh = shIn.cache()
+    val sh = graft.StageCache.pin(shIn)
     val cand = lshCandidates(sig, nBands)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     val sh2 = sh.select(col("doc_id").as("__d2"), col("shh").as("shh2"))
@@ -627,8 +627,8 @@ object SketchOps {
       sk0: Option[DataFrame] = None,
       sh0: Option[DataFrame] = None): DataFrame = {
     // element explode + both pair sides: shared session stage when the
-    // caller is the registered query, else a per-call cache
-    val sk = sk0.getOrElse(bottomKSketch(docs, k).cache())
+    // caller is the registered query, else a per-call pin
+    val sk = sk0.getOrElse(graft.StageCache.pin(bottomKSketch(docs, k)))
     val el = sk.select(col("doc_id"), col("source"), explode(col("bk")).as("h"))
     val cand = el.as("ea").join(el.as("eb"),
         col("ea.h") === col("eb.h") && col("ea.source") =!= col("eb.source")
@@ -638,7 +638,8 @@ object SketchOps {
     val u = slice(array_sort(array_union(col("bk1"), col("bk2"))), 1, k)
     val nInter3 = size(array_intersect(array_intersect(u, col("bk1")), col("bk2")))
     val jEst = nInter3.cast(DoubleType) / size(u).cast(DoubleType)
-    val est = cand
+    // pair-bounded; read twice (gated ids + the verify join)
+    val est = graft.StageCache.pin(cand
       .join(sk.select(col("doc_id").as("d1"), col("source").as("source1"),
         col("bk").as("bk1"), col("sz").as("sz1")), "d1")
       .join(sk.select(col("doc_id").as("d2"), col("source").as("source2"),
@@ -650,8 +651,7 @@ object SketchOps {
       .filter(greatest(col("__i") / col("sz1").cast(DoubleType),
         col("__i") / col("sz2").cast(DoubleType)) >= estT)
       .select(col("d1"), col("d2"), col("source1"), col("source2"),
-        col("sz1"), col("sz2"))
-      .cache() // pair-bounded; read twice (gated ids + the verify join)
+        col("sz1"), col("sz2")))
     // exact verify per surviving pair: full sorted hash arrays, built for
     // CANDIDATE DOCS ONLY (r11 verdict #1) — the estimate gate names the
     // docs that can matter, so the corpus-wide array build + shuffle the

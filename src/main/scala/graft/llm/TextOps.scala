@@ -462,9 +462,9 @@ object TextOps {
     * doc_shh stage shared with d06/d29/d41/d44). */
   def shingleContainment(docs: DataFrame,
       sh0: Option[DataFrame] = None): DataFrame = {
-    val sh = sh0.getOrElse(shingleRows(docs, 3)
-      .select(col("doc_id"), col("source"), shingleHash(col("sh")).as("shh"))
-      .cache()) // sizes + both join sides
+    // sizes + both join sides
+    val sh = sh0.getOrElse(graft.StageCache.pin(shingleRows(docs, 3)
+      .select(col("doc_id"), col("source"), shingleHash(col("sh")).as("shh"))))
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     // SOURCE-BLOCKED BY DESIGN (the d06 precedent, measured in round 11):
     // the corpus-wide exact intersection join is Σ_shh df² — on a

@@ -36,15 +36,15 @@ object Ranks {
     // this pin). localCheckpoint TRUNCATES the lineage, so even block loss
     // can't silently re-execute with fresh boundaries (a cache would: its
     // recompute path re-samples — ADVICE r2); the checkpointed blocks are
-    // released by the ContextCleaner when the frame goes out of scope,
-    // rather than pinned for the session like an un-unpersisted cache.
+    // released with the caller's StageCache scope, or by the
+    // ContextCleaner when the frame goes out of scope, rather than pinned
+    // for the session like an un-unpersisted cache.
     // Production clusters wanting executor-loss resilience swap in
     // reliable checkpoint(); the fail-loudly tradeoff is right here.
-    val local = df.repartitionByRange(p, order: _*)
+    val local = graft.StageCache.checkpoint(df.repartitionByRange(p, order: _*)
       .withColumn("__pid", spark_partition_id())
       .withColumn("__local",
-        row_number().over(Window.partitionBy(col("__pid")).orderBy(order: _*)))
-      .localCheckpoint()
+        row_number().over(Window.partitionBy(col("__pid")).orderBy(order: _*))))
     // prefix-sum window over ≤P rows; the constant-valued (but non-foldable
     // — a bare literal would be constant-folded back to an empty spec)
     // partition key keeps this bounded single-partition execution from

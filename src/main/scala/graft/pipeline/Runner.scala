@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Engine, Tables}
+import graft.{Engine, StageCache, Tables}
 import graft.analytics.{EventQueries, Queries, StagingQueries}
 import graft.operators.Validate
 import graft.sources.Sinks
@@ -29,7 +29,10 @@ import graft.sources.Sinks
   * the three entry points in order; PipelineSpec asserts the hand-off by
   * scan path). Layer copies are the medallion trade-off made on purpose:
   * each layer is a re-runnable contract, so facts are persisted three
-  * times (validated / conformed / bucketed-for-joins).
+  * times (validated / conformed / bucketed-for-joins). For the same
+  * reason each layer runs in a StageCache scope: the stages and pins it
+  * builds have no reader once its outputs are committed, so they are
+  * released when it returns, not held for the session.
   *
   * The layering is OBSERVABLE on the driver data: lineitem carries
   * duplicate (l_orderkey, l_linenumber) keys that bronze quarantines, so
@@ -60,19 +63,23 @@ object Runner {
     * runs under a shared Spark job group; the first failure cancels the
     * group (stopping sibling jobs mid-write instead of letting them keep
     * writing sinks in the background), awaits the pool so no task is
-    * still running when the caller sees the exception, then rethrows. */
-  private def inParallel(spark: SparkSession, jobs: Seq[() => Unit]): Unit = {
+    * still running when the caller sees the exception, then rethrows.
+    *
+    * Each job runs in the caller's StageCache scope, so what it pins is
+    * released with the caller's. */
+  private[graft] def inParallel(spark: SparkSession, jobs: Seq[() => Unit]): Unit = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val sc = spark.sparkContext
     val group = s"graft-inparallel-${java.util.UUID.randomUUID()}"
+    val scope = StageCache.currentScope
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(jobs.size, 8))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try Await.result(Future.sequence(jobs.map(j => Future {
       // job groups are thread-local on SparkContext: tag each pool thread
       sc.setJobGroup(group, group, interruptOnCancel = true)
-      try j() finally sc.clearJobGroup()
+      try StageCache.within(scope)(j()) finally sc.clearJobGroup()
     })), Duration.Inf)
     catch { case e: Throwable =>
       sc.cancelJobGroup(group)
@@ -98,8 +105,8 @@ object Runner {
     * report. Pinned-schema reads are the cast contract (reference ODS COPY
     * INTO casts). Tables are independent of each other, so the eight
     * validate-and-write pipelines run as concurrent driver jobs. */
-  def runBronze(spark: SparkSession, sfDir: String, outDir: String): Unit = {
-    inParallel(spark, Seq(
+  def runBronze(spark: SparkSession, sfDir: String, outDir: String): Unit =
+    StageCache.scoped(spark)(inParallel(spark, Seq(
       "events" -> Tables.events(spark, sfDir),
       "orders" -> Tables.orders(spark, sfDir),
       "lineitem" -> Tables.lineitem(spark, sfDir),
@@ -108,16 +115,14 @@ object Runner {
       "nation" -> Tables.nation(spark, sfDir),
       "region" -> Tables.region(spark, sfDir),
       "part" -> Tables.part(spark, sfDir),
-    ).map { case (name, df) => () => {
-      val tagged = Validate.split(df.toDF(df.columns.map(_.toLowerCase): _*), // P2
-        Validate.rulesFor(name))
-        .cache() // three sinks below — tag each row once, not three times
+    ).map { case (name, df) => () => StageCache.scoped(spark) {
+      // three sinks below — tag each row once, not three times
+      val tagged = StageCache.pin(Validate.split(
+        df.toDF(df.columns.map(_.toLowerCase): _*), Validate.rulesFor(name))) // P2
       Sinks.parquet(Validate.valid(tagged), s"$outDir/bronze/$name")
       Sinks.quarantine(tagged, s"$outDir/bronze/${name}_bad")
       Sinks.report(tagged, s"$outDir/bronze/${name}_bad")
-      tagged.unpersist()
-    }})
-  }
+    }}))
 
   /** Silver reads ONLY `bronze/` (the `sfDir` parameter is kept for call
     * symmetry but unused — bronze must have run into `outDir` first).
@@ -131,7 +136,7 @@ object Runner {
     *     accept any layer dir).
     *   - staging side-outputs (dedup map, imputed parts, geo enrichment,
     *     latest-event), the reference STG transforms with new schemas. */
-  def runSilver(spark: SparkSession, sfDir: String, outDir: String): Unit = {
+  def runSilver(spark: SparkSession, sfDir: String, outDir: String): Unit = StageCache.scoped(spark) {
     val bronze = s"$outDir/bronze"
     // pinned-schema reads, same loaders as everything else (they detect
     // the layer layout); the copy re-asserts the typed contract rather
@@ -160,8 +165,8 @@ object Runner {
     * into `outDir` first; `sfDir` is kept for call symmetry but unused).
     * Audit columns mirror the reference DWH layer (`target_layer.py:52-53`
     * insertion/modification dates). The marts run concurrently; q02/q03/q07
-    * share their StageCache stages, whose atomic computeIfAbsent guarantees
-    * a single build even under concurrent first consumers.
+    * share their StageCache stages, which the layer's scope releases once
+    * the marts are written.
     *
     * The two big facts first land ONCE as orderkey-bucketed managed tables
     * built FROM the silver copies (the 100 TB layout: co-located +
@@ -171,7 +176,7 @@ object Runner {
     * orders⋈lineitem fact-fact join plans with ZERO shuffle exchanges
     * (asserted here, proven again in BucketingSpec). On a cluster, every
     * later fact-fact query amortizes the same one-time bucketed write. */
-  def runGold(spark: SparkSession, sfDir: String, outDir: String): Unit = {
+  def runGold(spark: SparkSession, sfDir: String, outDir: String): Unit = StageCache.scoped(spark) {
     val silver = s"$outDir/silver"
     def audited(df: DataFrame): DataFrame =
       df.withColumn("_inserted_at", current_timestamp())
@@ -244,7 +249,7 @@ object Runner {
     *                     rejected/duplicate/boilerplate text never pays
     *                     the tokenize+explode stage at all
     */
-  def runCorpus(spark: SparkSession, sfDir: String, outDir: String): Unit = {
+  def runCorpus(spark: SparkSession, sfDir: String, outDir: String): Unit = StageCache.scoped(spark) {
     // A corpus output a later step reads is read back from its committed
     // parquet: a carried d18 plan would be re-analyzed (and kept alive) at
     // each of the survivors' several uses. Stats and prepared are
@@ -304,7 +309,7 @@ object Runner {
     * physical win is LAYOUT_CENSUS). At 100 TB this is the nightly
     * OPTIMIZE job; here it is the fourth Runner stage so its wall is on
     * the same board as the layers it serves. */
-  def runMaintenance(spark: SparkSession, outDir: String): Unit = {
+  def runMaintenance(spark: SparkSession, outDir: String): Unit = StageCache.scoped(spark) {
     val out = graft.sources.Layout.optimizeChunks(spark, outDir)
     println(s"[runner] maintenance: corpus/chunks clustered at $out")
     // Takedown queue (round 15 cont.): copy-on-write purge of one doc's

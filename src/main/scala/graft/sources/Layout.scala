@@ -292,15 +292,15 @@ object Layout {
       .select(col(partCol).cast("string")).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
     if (hit.nonEmpty) {
-      val survivors = spark.read.parquet(lake)
+      // staged-commit buffer, blast-radius-sized
+      val survivors = graft.StageCache.checkpoint(spark.read.parquet(lake)
         .filter(col(partCol).isin(hit: _*)) // directory-pruned read
         // keep every row whose predicate is NOT TRUE: under SQL
         // three-valued logic a NULL-evaluating predicate satisfies
         // neither pred nor !pred, so a bare .filter(!pred) would
         // silently drop such rows from the rewritten partition —
         // data loss beyond the requested purge
-        .filter(coalesce(!pred, lit(true)))
-        .localCheckpoint() // staged-commit buffer, blast-radius-sized
+        .filter(coalesce(!pred, lit(true))))
       // dynamic overwrite replaces only partitions PRESENT in the written
       // frame — a fully-purged partition would survive untouched, so any
       // hit value with zero survivors is dropped by directory delete

@@ -185,10 +185,17 @@ object EventBus {
           .as("cart_value"))
 
   /** per-category order revenue from the nested items
-    * (`consumer.py:317-325`) — the EventBus twin of q32's rollup. */
+    * (`consumer.py:317-325`) — the EventBus twin of q32's rollup.
+    *
+    * `posexplode_outer` + a non-null position keeps exactly `explode`'s
+    * rows (an order with null or empty `items` contributes nothing; a null
+    * element still counts) without the `size(items) > 0` filter Spark
+    * infers for `explode`: that filter is pushed below the envelope
+    * projection with the `from_json` inlined, parsing `items` three times. */
   def orderCategoryRevenue(env: DataFrame): DataFrame =
     env.filter(col("topic") === Orders)
-      .select(explode(col("items")).as("item"))
+      .select(posexplode_outer(col("items")).as(Seq("pos", "item")))
+      .filter(col("pos").isNotNull)
       .groupBy(col("item.product_category").as("product_category"))
       .agg(
         count(lit(1)).as("n_lines"),

@@ -148,6 +148,36 @@ class EventBusSpec extends SparkSpec {
     assert(spark.table("t_bus_envelope").count() == 100L)
   }
 
+  test("order items are parsed once, with explode's rows") {
+    val order = """{"event_id":"%s","event_type":"order_completed","user_id":"u4",
+      |"order_id":"o%s"%s,"total_amount":1.0,"timestamp":"2024-01-01T10:05:00",
+      |"session_id":"s4"}""".stripMargin.replaceAll("\n", "")
+    val item = """{"product_id":7,"product_category":"tools","item_total":4.5}"""
+    val rows = wireRows ++ Seq(
+      EventBus.Orders -> order.format("e8", "8", ""), // no items
+      EventBus.Orders -> order.format("e9", "9", ",\"items\":[]"),
+      EventBus.Orders -> order.format("e10", "10", ",\"items\":null"),
+      EventBus.Orders -> order.format("e11", "11", s",\"items\":[$item,null]"))
+    val wire = new StructType().add("topic", StringType).add("value", StringType)
+    val env = EventBus.ingest(spark.read.schema(wire).json(landWire(rows)))
+    val q = EventBus.orderCategoryRevenue(env)
+    val got = q.collect().map(_.toSeq).toSet
+    // the plain explode form, which parses the items three times
+    val want = env.filter(col("topic") === EventBus.Orders)
+      .select(explode(col("items")).as("item"))
+      .groupBy(col("item.product_category").as("product_category"))
+      .agg(count(lit(1)).as("n_lines"),
+        sum(col("item.item_total").cast("decimal(18,2)")).cast("double").as("revenue"))
+      .collect().map(_.toSeq).toSet
+    assert(got == want && got.size == 3, got) // tools, toys and the null element
+    val nodes = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(q.queryExecution.executedPlan) { case p => p }
+    val parses = nodes.flatMap(_.expressions.flatMap(_.collect {
+      case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs => j }))
+    assert(parses.size == 1 && parses.head.child.references.map(_.name).toSet == Set("value"),
+      q.queryExecution.executedPlan.treeString)
+  }
+
   test("envelope parity: stray, malformed-foreign and unregistered rows") {
     val view = """{"event_id":"%s","event_type":"product_view","user_id":"u3",
       |"product_id":7,"product_name":"Widget","product_category":"tools",

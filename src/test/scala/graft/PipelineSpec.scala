@@ -9,11 +9,21 @@ import graft.sources.{Sinks, Sources}
   * lifecycle and §2.1 scans/sinks). */
 class PipelineSpec extends SparkSpec {
 
+  /** Runs one Runner layer and checks that it leaves the session's
+    * persistent RDDs as it found them: no later layer reads a layer's
+    * pins, so it must release every one it took. */
+  private def layer(name: String)(run: => Unit): Unit = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    run
+    val after = spark.sparkContext.getPersistentRDDs.keySet
+    assert(after == before, s"$name: left ${after -- before}, dropped ${before -- after}")
+  }
+
   test("bronze → silver → gold runner produces the full lake") {
     val out = Files.createTempDirectory("graft_lake").toString
-    Runner.runBronze(spark, sfDir, out)
-    Runner.runSilver(spark, sfDir, out)
-    Runner.runGold(spark, sfDir, out)
+    layer("bronze")(Runner.runBronze(spark, sfDir, out))
+    layer("silver")(Runner.runSilver(spark, sfDir, out))
+    layer("gold")(Runner.runGold(spark, sfDir, out))
     val events = spark.read.parquet(s"$out/bronze/events")
     assert(events.count() > 0)
     assert(!events.columns.contains("error"))
@@ -72,7 +82,7 @@ class PipelineSpec extends SparkSpec {
 
   test("corpus layer: prepared split, stats, chunks of survivors only") {
     val out = Files.createTempDirectory("graft_corpus").toString
-    Runner.runCorpus(spark, sfDir, out)
+    layer("corpus")(Runner.runCorpus(spark, sfDir, out))
     // --- corpus hand-off is REAL too: the survivors frame every later
     // corpus step shares scans the committed corpus/prepared — it neither
     // inlines the d18 plan nor pins it (cache / checkpoint) ---
@@ -123,7 +133,7 @@ class PipelineSpec extends SparkSpec {
     // files than are on disk (directory pruning is real) and (b) be
     // value-identical to the unclustered table on that shard
     import org.apache.spark.sql.functions.col
-    Runner.runMaintenance(spark, out)
+    layer("maintenance")(Runner.runMaintenance(spark, out))
     val clustered = s"$out/corpus/chunks_clustered"
     val ids = spark.read.parquet(s"$out/corpus/chunks")
       .agg(org.apache.spark.sql.functions.min(col("doc_id")),
