@@ -20,9 +20,17 @@ import org.apache.spark.sql.execution.LogicalRDD
   * block, and to every other open block that reads it; it is unpersisted
   * when the last of them closes, whether its body returned or threw. A
   * reader outside any scope turns a scoped stage into a session stage.
-  * [[pin]] gives one function's multiply-read frame the same lifetime.
   * The Runner layers each run in a scope: their pins have no reader once
   * the layer has committed its outputs.
+  *
+  * Pins. [[pin]] is the only `cache` in the program outside the census
+  * mains, and [[checkpoint]] the owned `localCheckpoint`: a function's
+  * multiply-read frame gets the lifetime of the open scope, so no caller
+  * frees what a callee pinned. A pin taken while a stage builds belongs
+  * to that build and is released when the build returns, since the stage
+  * is an eager snapshot that no longer reads it. A stage built inside
+  * another stage's build keeps the owner it would have had without that
+  * build: the open scope, or the session.
   *
   * At 100 TB this is the "silver table" pattern: the shared stage is a
   * persisted intermediate dataset, not a per-query recompute; here the
@@ -30,8 +38,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 object StageCache {
 
-  /** An open lifetime; see [[scoped]]. */
-  final class Scope private[StageCache] (private[StageCache] val spark: SparkSession) {
+  /** An open lifetime; see [[scoped]]. A build's scope (`build`, see
+    * [[cached]]) holds only the pins its build takes; the stages built or
+    * read in it go to `outer`, the scope they would have had without the
+    * build (None: the session). */
+  final class Scope private[StageCache] (private[StageCache] val spark: SparkSession,
+      private[StageCache] val build: Boolean, private[StageCache] val outer: Option[Scope]) {
     private[StageCache] var open = true
     private[StageCache] val held = mutable.Set.empty[Pinned]
   }
@@ -63,10 +75,11 @@ object StageCache {
     * that adopts it with [[within]]) is released when it closes, unless
     * another open scope still holds it. Frames obtained in the scope are
     * valid until then. Release is `unpersist(blocking = false)`. */
-  def scoped[T](spark: SparkSession)(body: => T): T = {
-    val scope = new Scope(spark)
+  def scoped[T](spark: SparkSession)(body: => T): T =
+    open(new Scope(spark, build = false, outer = None))(body)
+
+  private def open[T](scope: Scope)(body: => T): T =
     try within(Some(scope))(body) finally close(scope)
-  }
 
   /** The calling thread's innermost open scope, for [[within]]. */
   def currentScope: Option[Scope] = current.get
@@ -80,9 +93,10 @@ object StageCache {
   }
 
   /** Pin `df` (`cache`) for a function that reads it more than once. In a
-    * scope it is unpersisted when the scope closes; outside any scope it
-    * stays cached for the session. A plan that is already cached belongs
-    * to whoever cached it first, so it is returned as is. */
+    * scope it is unpersisted when the scope closes, in a stage build when
+    * the build returns; outside both it stays cached for the session. A
+    * plan that is already cached belongs to whoever cached it first, so it
+    * is returned as is. */
   def pin(df: DataFrame): DataFrame =
     if (df.storageLevel.isValid) df
     else {
@@ -93,8 +107,9 @@ object StageCache {
     }
 
   /** `df.localCheckpoint()` — an eager snapshot — owned like a [[pin]]:
-    * released when the open scope closes. Outside any scope nothing holds
-    * it, so the ContextCleaner reclaims it once the frame is unreferenced. */
+    * released when the open scope closes or the stage build returns.
+    * Outside both nothing holds it, so the ContextCleaner reclaims it once
+    * the frame is unreferenced. */
   def checkpoint(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint()
     synchronized(own(new Pinned(df.sparkSession, null, cp, () => unpersistCheckpoint(cp))))
@@ -118,7 +133,9 @@ object StageCache {
     * cached stage (q52_intervals builds on q52_changes), so the build
     * runs OUTSIDE the lock. The get → build → put race can at worst
     * build a stage twice concurrently (same deterministic result); the
-    * loser's blocks are released at once. */
+    * loser's blocks are released at once. The build runs in its own
+    * scope: every [[pin]] and [[checkpoint]] it takes is released once the
+    * stage is materialized, while a stage it builds on keeps its owner. */
   def cached(spark: SparkSession, dir: String, tag: String)
       (build: => DataFrame): DataFrame = {
     val key = s"${sessionKey(spark)}:$dir:$tag"
@@ -130,7 +147,8 @@ object StageCache {
       stages.get(key).map(touch)
     }
     hit.map(_.df).getOrElse {
-      val df = build.localCheckpoint()
+      val df = open(new Scope(spark, build = true, outer = stageScope))(
+        build.localCheckpoint())
       val built = new Pinned(spark, key, df, () => unpersistCheckpoint(df))
       val winner = synchronized {
         stages.get(key).map(touch).getOrElse {
@@ -143,9 +161,16 @@ object StageCache {
     }
   }
 
-  /** The calling thread's scope, if it is open and of `p`'s session. */
+  /** Where a stage built or read on this thread belongs: the innermost
+    * scope, or, in a build, the scope the build would have had. */
+  private def stageScope: Option[Scope] =
+    current.get.flatMap(s => if (s.build) s.outer else Some(s))
+
+  /** The calling thread's owner for `p` (a stage or a pin), if it is open
+    * and of `p`'s session. */
   private def scopeFor(p: Pinned): Option[Scope] =
-    current.get.filter(s => s.open && (s.spark eq p.spark))
+    (if (p.key == null) current.get else stageScope)
+      .filter(s => s.open && (s.spark eq p.spark))
 
   /** A new pin: owned by the calling thread's scope, if any; else it lives
     * for the session. Under the lock. */

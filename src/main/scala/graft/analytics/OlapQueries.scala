@@ -804,47 +804,48 @@ object OlapQueries {
     // UnknownPartitioning — measured in plans/r18/q51_*_before.txt: every
     // iteration re-Exchanged AND re-Sorted the full edge frame, 2 extra
     // edge-frame passes × 10 rounds). Instead: shuffle ONCE onto the join
-    // key, sort within partitions, and persist — the cached plan keeps
+    // key, sort within partitions, and pin (cache) — the cached plan keeps
     // HashPartitioning(src)+ordering visible (AQE leaves cached-plan
     // partitioning alone by default), so each iteration's join only
     // exchanges the NODE-sized rank frame and the edge side streams with
     // no Exchange and no Sort (guide §2.4: establish a partitioning once,
     // share it across every consumer). Recompute-on-block-loss is
-    // deterministic (no sampling anywhere upstream), so a persist is as
+    // deterministic (no sampling anywhere upstream), so a pin is as
     // safe as the checkpoint it replaces.
-    val edges = edges0.join(wt, Seq("src"))
-      .repartition(col("src")).sortWithinPartitions(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var ranks = pinBase(
-      wt.select(col("src").as("node"), lit(1000000L).as("r")))
-    var i = 1
-    var converged = false
-    while (i <= maxIters && !converged) {
-      val next = pinIter(edges.join(ranks, col("src") === col("node"))
-        .select(col("dst"), expr(PrStep).as("c"))
-        .groupBy(col("dst"))
-        .agg((lit(150000L) + sum(col("c"))).as("r"))
-        .select(col("dst").as("node"), col("r")), i)
-      if (eps >= 0) {
-        // node-sized join of two pinned frames — no edge re-shuffle.
-        // Node sets are identical by construction (every node of the
-        // undirected graph receives base mass each round).
-        val row = next.as("n")
-          .join(ranks.select(col("node"), col("r").as("rp")), Seq("node"))
-          .agg(max(abs(col("r") - col("rp")))).head
-        // an empty graph aggregates max() to one NULL row — an empty
-        // node set is converged by definition, not an NPE (ADVICE r17)
-        converged = row.isNullAt(0) || row.getLong(0) <= eps
+    // The pin lives for the loop: the FINAL rank frame is pinned in every
+    // cadence mode (lazy mode pins exactly it; the others pinned each
+    // round), so the edge frame has no consumer past it.
+    val (ranks, iters) = graft.StageCache.scoped(pairs.sparkSession) {
+      val edges = graft.StageCache.pin(edges0.join(wt, Seq("src"))
+        .repartition(col("src")).sortWithinPartitions(col("src")))
+      var ranks = pinBase(
+        wt.select(col("src").as("node"), lit(1000000L).as("r")))
+      var i = 1
+      var converged = false
+      while (i <= maxIters && !converged) {
+        val next = pinIter(edges.join(ranks, col("src") === col("node"))
+          .select(col("dst"), expr(PrStep).as("c"))
+          .groupBy(col("dst"))
+          .agg((lit(150000L) + sum(col("c"))).as("r"))
+          .select(col("dst").as("node"), col("r")), i)
+        if (eps >= 0) {
+          // node-sized join of two pinned frames — no edge re-shuffle.
+          // Node sets are identical by construction (every node of the
+          // undirected graph receives base mass each round).
+          val row = next.as("n")
+            .join(ranks.select(col("node"), col("r").as("rp")), Seq("node"))
+            .agg(max(abs(col("r") - col("rp")))).head
+          // an empty graph aggregates max() to one NULL row — an empty
+          // node set is converged by definition, not an NPE (ADVICE r17)
+          converged = row.isNullAt(0) || row.getLong(0) <= eps
+        }
+        ranks = next
+        i += 1
       }
-      ranks = next
-      i += 1
+      (ranks, i - 1)
     }
-    // the FINAL rank frame is pinned in every cadence mode (lazy mode
-    // pins exactly it; the others pinned each round), so the edge cache
-    // has no remaining consumer — release it before the node-sized join
-    edges.unpersist(false)
     (ranks.join(wt, col("node") === col("src"))
-      .select(col("node"), col("r"), col("wtot")), i - 1)
+      .select(col("node"), col("r"), col("wtot")), iters)
   }
 
   /** q51's weighted co-purchase edge frame (shared with GraphBench).

@@ -102,8 +102,8 @@ object CorpusPrep {
       .groupBy(md5(col("text")).as("__fp"))
       .agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
-    val exactDeduped = filtered.join(reps, Seq("doc_id"), "left_semi")
-      .cache() // read thrice: two survivor-id filters AND the surviving-doc side
+    // read thrice: two survivor-id filters AND the surviving-doc side
+    val exactDeduped = graft.StageCache.pin(filtered.join(reps, Seq("doc_id"), "left_semi"))
     // 3. near-dedup over survivors only, on the shared signature/shingle
     //    frames restricted to the survivor set
     val ids = exactDeduped.select(col("doc_id"))

@@ -91,7 +91,7 @@ object QualityOps {
       // join — without the pin the window+hash shingle stage runs per
       // branch. localCheckpoint, not cache: checkpoint blocks are released
       // by the ContextCleaner once the consumer drops the frame, where a
-      // .cache() here would pin the whole corpus' shingles in executor
+      // cache here would pin the whole corpus' shingles in executor
       // storage for the life of the session with no owner to unpersist it.
       contaminationFromShingles(
         shingleStage(docs, evalBucketMin).localCheckpoint())

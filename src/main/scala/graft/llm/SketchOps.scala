@@ -44,15 +44,6 @@ object SketchOps {
         conv(substring(md5(col("tok")), 1, 10), 16, 10).cast(LongType).as("h1"),
         conv(substring(md5(col("tok")), 11, 10), 16, 10).cast(LongType).as("h2"))
 
-  /** Release [[minhashSignatures]]' internal token-set cache for `df`.
-    * Streaming callers rebuild signatures every micro-batch and must
-    * not accumulate one cached token set per batch (advice r12); batch
-    * queries are covered by Verify/Bench's per-query clearCache. The
-    * unpersist matches by canonicalized plan, so rebuilding the same
-    * input frame releases the entry the signature build registered. */
-  private[graft] def releaseSignatureCache(df: DataFrame): Unit =
-    tokenSet(df).unpersist()
-
   /** 16-permutation MinHash signature, one row per doc: m0..m15. */
   def minhashSignatures(df: DataFrame): DataFrame = {
     // cached: read twice below (the dictionary derives from it AND the
@@ -485,6 +476,25 @@ object SketchOps {
             .as("bk"),
           count(lit(1)).as("sz")))
 
+  /** d40b's closed-form containment estimate over sketch pairs that carry
+    * each side's bottom-k sketch and shingle count (bk1, sz1, bk2, sz2):
+    * j_est is the KMV Jaccard estimate over the k smallest of the union,
+    * and the intersection estimate j·(sz1+sz2)/(j+1) over each side's size
+    * gives c12_est and c21_est. The one Scala copy, shared by d40b, d44 and
+    * the streaming syndication gate; the oracle SQL spells it out itself. */
+  private[graft] def withContainmentEst(pairs: DataFrame, k: Int): DataFrame = {
+    val u = slice(array_sort(array_union(col("bk1"), col("bk2"))), 1, k)
+    val nInter3 = size(array_intersect(array_intersect(u, col("bk1")), col("bk2")))
+    pairs
+      .withColumn("j_est", nInter3.cast(DoubleType) / size(u).cast(DoubleType))
+      .withColumn("__i",
+        col("j_est") * (col("sz1") + col("sz2")).cast(DoubleType)
+          / (col("j_est") + lit(1.0)))
+      .withColumn("c12_est", col("__i") / col("sz1").cast(DoubleType))
+      .withColumn("c21_est", col("__i") / col("sz2").cast(DoubleType))
+      .drop("__i")
+  }
+
   /** Per-doc bottom-k shingle sketch: (doc_id, source, bk, sz) — the
     * containment tier's per-doc state, shared by d40b and the streaming
     * containment gate (CorpusStream) so both speak the same sketch. */
@@ -505,8 +515,8 @@ object SketchOps {
       estT: Double = ContainEstThreshold,
       sk0: Option[DataFrame] = None): DataFrame = {
     // consumed 3× (element explode + both candidate-join sides): either
-    // the shared session stage (registered query) or a per-call cache
-    val sk = sk0.getOrElse(bottomKSketch(docs, k).cache())
+    // the shared session stage (registered query) or a per-call pin
+    val sk = sk0.getOrElse(graft.StageCache.pin(bottomKSketch(docs, k)))
     // Candidate generation, EXACTLY result-preserving: a pair whose
     // estimate can clear any threshold has |U ∩ S(A) ∩ S(B)| ≥ 1, i.e.
     // the two sketches share an element — so equi-joining exploded
@@ -524,20 +534,11 @@ object SketchOps {
           && col("ea.doc_id") < col("eb.doc_id"))
       .select(col("ea.doc_id").as("d1"), col("eb.doc_id").as("d2"))
       .distinct()
-    val u = slice(array_sort(array_union(col("bk1"), col("bk2"))), 1, k)
-    val nInter3 = size(array_intersect(array_intersect(u, col("bk1")), col("bk2")))
-    val jEst = nInter3.cast(DoubleType) / size(u).cast(DoubleType)
-    cand
+    withContainmentEst(cand
       .join(sk.select(col("doc_id").as("d1"), col("bk").as("bk1"),
         col("sz").as("sz1")), "d1")
       .join(sk.select(col("doc_id").as("d2"), col("bk").as("bk2"),
-        col("sz").as("sz2")), "d2")
-      .withColumn("j_est", jEst)
-      .withColumn("__i",
-        col("j_est") * (col("sz1") + col("sz2")).cast(DoubleType)
-          / (col("j_est") + lit(1.0)))
-      .withColumn("c12_est", col("__i") / col("sz1").cast(DoubleType))
-      .withColumn("c21_est", col("__i") / col("sz2").cast(DoubleType))
+        col("sz").as("sz2")), "d2"), k)
       .filter(greatest(col("c12_est"), col("c21_est")) >= estT)
       .select(col("d1"), col("d2"), col("sz1"), col("sz2"),
         col("j_est"), col("c12_est"), col("c21_est"))
@@ -635,21 +636,13 @@ object SketchOps {
           && col("ea.doc_id") < col("eb.doc_id"))
       .select(col("ea.doc_id").as("d1"), col("eb.doc_id").as("d2"))
       .distinct()
-    val u = slice(array_sort(array_union(col("bk1"), col("bk2"))), 1, k)
-    val nInter3 = size(array_intersect(array_intersect(u, col("bk1")), col("bk2")))
-    val jEst = nInter3.cast(DoubleType) / size(u).cast(DoubleType)
     // pair-bounded; read twice (gated ids + the verify join)
-    val est = graft.StageCache.pin(cand
+    val est = graft.StageCache.pin(withContainmentEst(cand
       .join(sk.select(col("doc_id").as("d1"), col("source").as("source1"),
         col("bk").as("bk1"), col("sz").as("sz1")), "d1")
       .join(sk.select(col("doc_id").as("d2"), col("source").as("source2"),
-        col("bk").as("bk2"), col("sz").as("sz2")), "d2")
-      .withColumn("j_est", jEst)
-      .withColumn("__i",
-        col("j_est") * (col("sz1") + col("sz2")).cast(DoubleType)
-          / (col("j_est") + lit(1.0)))
-      .filter(greatest(col("__i") / col("sz1").cast(DoubleType),
-        col("__i") / col("sz2").cast(DoubleType)) >= estT)
+        col("bk").as("bk2"), col("sz").as("sz2")), "d2"), k)
+      .filter(greatest(col("c12_est"), col("c21_est")) >= estT)
       .select(col("d1"), col("d2"), col("source1"), col("source2"),
         col("sz1"), col("sz2")))
     // exact verify per surviving pair: full sorted hash arrays, built for
@@ -751,9 +744,9 @@ object SketchOps {
   private val SimBits = 48
 
   def simhashes(df: DataFrame): DataFrame = {
-    val occurrences = df.select(col("doc_id"), col("source"),
-      explode(TextOps.tokens(col("text"))).as("tok"))
-      .cache() // read twice: dictionary build + dictionary join
+    // read twice: dictionary build + dictionary join
+    val occurrences = graft.StageCache.pin(df.select(col("doc_id"), col("source"),
+      explode(TextOps.tokens(col("text"))).as("tok")))
     // dictionary-encode: md5 over the distinct vocabulary only, broadcast
     // back to the (much larger) occurrence stream
     val dict = occurrences.select(col("tok")).distinct()
@@ -837,7 +830,7 @@ object SketchOps {
 
   /** Banded near-dup pairs over any frame with (doc_id, simhash). */
   def bandedPairs(sk0: DataFrame): DataFrame = {
-    val sk = sk0.cache()
+    val sk = graft.StageCache.pin(sk0)
     val bandCols = (0 until SimBands).map(b => struct(
       lit(b).as("b"),
       shiftright(col("simhash"), b * BandBits).bitwiseAND((1L << BandBits) - 1)
@@ -915,8 +908,8 @@ object SketchOps {
     * Jaccard >= [[NearDupThreshold]] as (db, di, jaccard). */
   def crossVerifiedPairs(cand: DataFrame, shDb0: DataFrame,
       shDi0: DataFrame): DataFrame = {
-    val shDb = shDb0.cache() // intersection side + per-doc sizes
-    val shDi = shDi0.cache()
+    val shDb = graft.StageCache.pin(shDb0) // intersection side + per-doc sizes
+    val shDi = graft.StageCache.pin(shDi0)
     val szB = shDb.groupBy(col("db")).agg(count(lit(1)).as("sz1"))
     val szI = shDi.groupBy(col("di")).agg(count(lit(1)).as("sz2"))
     val jac = col("n_inter").cast(DoubleType) /
@@ -942,7 +935,7 @@ object SketchOps {
     * content already inside an accepted doc". */
   private[graft] def crossContainedBatch(cand: DataFrame, shDb0: DataFrame,
       shDi0: DataFrame): DataFrame = {
-    val shDb = shDb0.cache() // intersection side + per-doc sizes
+    val shDb = graft.StageCache.pin(shDb0) // intersection side + per-doc sizes
     val szB = shDb.groupBy(col("db")).agg(count(lit(1)).as("szb"))
     // intersect shingle rows FIRST, then restrict to candidates — the
     // d42 join-order lesson (129 s → 15 s at sf1): expanding cand by
@@ -968,8 +961,8 @@ object SketchOps {
     val batchBands = bandRows(sig.filter(col("__b") >= IndexBuckets))
       .select(col("doc_id").as("db"), col("band"), col("bh"))
     // distinct candidate (batch, index) pairs from band collisions
-    val cand = batchBands.join(indexBands, Seq("band", "bh"))
-      .select(col("db"), col("di")).distinct().cache()
+    val cand = graft.StageCache.pin(batchBands.join(indexBands, Seq("band", "bh"))
+      .select(col("db"), col("di")).distinct())
     // exact verify on candidates only: shingle sets restricted per side,
     // the index side semi-joined down to candidate docs BEFORE the
     // intersection join
@@ -1052,8 +1045,8 @@ object SketchOps {
       .select(col("doc_id").as("db"), explode(col("bk")).as("ck"))
     val elI = sk.filter(TextOps.hashBucket(col("doc_id")) < IndexBuckets)
       .select(col("doc_id").as("di"), explode(col("bk")).as("ck"))
-    val cand = elB.join(elI, Seq("ck"))
-      .select(col("db"), col("di")).distinct().cache()
+    val cand = graft.StageCache.pin(elB.join(elI, Seq("ck"))
+      .select(col("db"), col("di")).distinct())
     val shh = docShhStage(spark, dir)
     // JOIN ORDER is the scale lever here: intersect shingle rows FIRST
     // (fan-out = Σ_shh dfB·dfI — the d06/d29-proven bound), THEN restrict
@@ -1065,9 +1058,9 @@ object SketchOps {
     // for this shape. Result-identical: candidate pairs with no shared
     // shingle carry n_inter = 0 and contribute nothing to the max either
     // way; both sides are semi-joined down to candidate docs first.
-    val shB = shh.select(col("doc_id").as("db"), col("shh"))
-      .filter(TextOps.hashBucket(col("db")) >= IndexBuckets)
-      .cache() // intersection side + per-doc sizes
+    // intersection side + per-doc sizes
+    val shB = graft.StageCache.pin(shh.select(col("doc_id").as("db"), col("shh"))
+      .filter(TextOps.hashBucket(col("db")) >= IndexBuckets))
     val shBv = shB.join(cand.select(col("db")).distinct(), Seq("db"), "left_semi")
     val shI = shh.select(col("doc_id").as("di"), col("shh"))
       .join(cand.select(col("di")).distinct(), Seq("di"), "left_semi")

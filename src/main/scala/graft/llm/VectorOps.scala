@@ -302,10 +302,9 @@ object VectorOps {
   def ivfKmeans(spark: SparkSession, dir: String, k: Int, iters: Int,
       nprobe: Int, saveTag: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val e = Tables.embeddings(spark, dir)
+    val e = graft.StageCache.pin(Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
-      .withColumn("__norm", norm(col("embedding")))
-      .cache()
+      .withColumn("__norm", norm(col("embedding"))))
     val trained = trainKmeans(e, k, iters)
     // freeze the model: inference below consumes the persisted bits
     val cents = saveTag.fold(trained)(Models.save(trained, dir, _))
@@ -1289,12 +1288,11 @@ object VectorOps {
       }.toSeq, 1),
       StructType(Seq(StructField("centroid_id", IntegerType),
         StructField("ce", ArrayType(FloatType)))))
-    val cached = idx.cache()
-    val cents =
-      try Models.save(trainKmeans(cached, NCentroids, KmIters, Some(init)),
-        dir, "a10_centroids")
-      finally cached.unpersist() // model is frozen on disk; drop the
-                                 // training stratum from executor memory
+    // the training stratum is pinned only while training: the model is
+    // frozen on disk once the scope closes
+    val cents = graft.StageCache.scoped(spark)(Models.save(
+      trainKmeans(graft.StageCache.pin(idx), NCentroids, KmIters, Some(init)),
+      dir, "a10_centroids"))
     val assigned = assignTo(e, cents)
       .withColumn("from_delta", isDeltaVec(col("vec_id")))
     (cents, assigned)
@@ -1478,9 +1476,9 @@ object VectorOps {
             }.toSeq, 1),
             StructType(Seq(StructField("centroid_id", IntegerType),
               StructField("ce", ArrayType(FloatType)))))
-          val cached = e.cache()
-          try trainKmeans(cached, NCentroids, KmIters, Some(init))
-          finally cached.unpersist()
+          // pinned only while training, like a10Train's stratum
+          graft.StageCache.scoped(spark)(
+            trainKmeans(graft.StageCache.pin(e), NCentroids, KmIters, Some(init)))
         }
       val frozen = Models.save(folded, dir, "a10c_centroids")
       a10cMemo.put(dir, frozen)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.StageCache
 import graft.llm.{SketchOps, TextOps}
 import graft.sources.Sinks
 
@@ -451,8 +452,8 @@ object CorpusStream {
     val srced = fresh.withColumn("source", lit("batch"))
     val batchBands = SketchOps.bandRows(SketchOps.minhashSignatures(srced))
       .select(col("doc_id").as("db"), col("band"), col("bh"))
-    val cand = batchBands.join(idxBands, Seq("band", "bh"))
-      .select(col("db"), col("di")).distinct().cache()
+    val cand = StageCache.pin(batchBands.join(idxBands, Seq("band", "bh"))
+      .select(col("db"), col("di")).distinct())
     val candDocs = candidateFetch(spark, outDir,
         cand.select(col("di").as("doc_id")).distinct())
       .withColumn("source", lit("index"))
@@ -460,15 +461,11 @@ object CorpusStream {
       .select(col("doc_id").as("db"), TextOps.shingleHash(col("sh")).as("shh"))
     val shI = TextOps.shingleRows(candDocs, 3)
       .select(col("doc_id").as("di"), TextOps.shingleHash(col("sh")).as("shh"))
-    // eager: the rejected id set is tiny, and materializing it here lets
-    // the micro-batch's caches release immediately — a long-running
-    // stream must not accumulate cached frames per batch (advice r12).
-    // shB/shI are the very objects crossVerifiedPairs cached; the
-    // signature build's internal token-set cache releases by plan.
-    val rejected = SketchOps.crossVerifiedPairs(cand, shB, shI)
-      .select(col("db")).distinct().localCheckpoint()
-    cand.unpersist(); shB.unpersist(); shI.unpersist()
-    SketchOps.releaseSignatureCache(srced)
+    // eager: the rejected id set is tiny. It and every pin taken on the
+    // way (here and inside the SketchOps helpers) belong to the batch's
+    // scope in ingestBatch, which releases them once the batch commits
+    val rejected = StageCache.checkpoint(SketchOps.crossVerifiedPairs(cand, shB, shI)
+      .select(col("db")).distinct())
     fresh.join(rejected, col("doc_id") === col("db"), "left_anti")
   }
 
@@ -535,8 +532,8 @@ object CorpusStream {
       .select(col("doc_id").as("db"), explode(col("bk")).as("ck"))
     val idxEl = readContainIndex(spark, indexDir)
       .select(col("doc_id").as("di"), col("ck"))
-    val cand = batchEl.join(idxEl, Seq("ck"))
-      .select(col("db"), col("di")).distinct().cache()
+    val cand = StageCache.pin(batchEl.join(idxEl, Seq("ck"))
+      .select(col("db"), col("di")).distinct())
     val candDocs = candidateFetch(spark, outDir,
         cand.select(col("di").as("doc_id")).distinct())
       .withColumn("source", lit("index"))
@@ -544,11 +541,8 @@ object CorpusStream {
       .select(col("doc_id").as("db"), TextOps.shingleHash(col("sh")).as("shh"))
     val shI = TextOps.shingleRows(candDocs, 3)
       .select(col("doc_id").as("di"), TextOps.shingleHash(col("sh")).as("shh"))
-    // eager + release, dropNearDups' cache discipline (shB is the
-    // object crossContainedBatch cached; shI it leaves uncached)
-    val rejected = SketchOps.crossContainedBatch(cand, shB, shI)
-      .localCheckpoint()
-    cand.unpersist(); shB.unpersist()
+    // eager, and released with the batch's scope (dropNearDups' rule)
+    val rejected = StageCache.checkpoint(SketchOps.crossContainedBatch(cand, shB, shI))
     fresh.join(rejected, col("doc_id") === col("db"), "left_anti")
   }
 
@@ -579,12 +573,9 @@ object CorpusStream {
     *      job (append-only history).
     */
   private def dropSyndicated(spark: SparkSession, fresh: DataFrame,
-      indexDir: String, outDir: String,
-      sk0: Option[DataFrame] = None): DataFrame = {
-    // (doc_id, source, bk, sz): caller-provided when ingestBatch already
-    // sketched this batch (the delta tier reuses it too — one sketch
-    // pass per batch, r18); owned-and-cached here otherwise
-    val bsk = sk0.getOrElse(SketchOps.bottomKSketch(fresh).cache())
+      indexDir: String, outDir: String, bsk: DataFrame): DataFrame = {
+    // bsk: the batch's (doc_id, source, bk, sz) sketch, which ingestBatch
+    // builds once per batch and the containment-index delta reuses (r18)
     val batchEl = bsk.select(col("doc_id").as("db"),
       col("source").as("bsource"), explode(col("bk")).as("ck"))
     val idx = readContainIndex(spark, indexDir)
@@ -594,7 +585,7 @@ object CorpusStream {
         idx.select(col("doc_id").as("di"), col("ck"), col("csz"),
           col("csource")), Seq("ck"))
       .filter(col("csource").isNull || col("csource") =!= col("bsource"))
-    val cand = candEl.select(col("db"), col("di")).distinct().cache()
+    val cand = StageCache.pin(candEl.select(col("db"), col("di")).distinct())
     // stage 2: closed-form estimate over reconstructed index sketches
     // (candidate docs only — the candidates-only discipline of the batch
     // d44 verify stage)
@@ -603,24 +594,15 @@ object CorpusStream {
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("ck"))).as("bk2"), max(col("csz")).as("sz2"))
       .select(col("doc_id").as("di"), col("bk2"), col("sz2"))
-    val u = slice(array_sort(array_union(col("bk1"), col("bk2"))), 1,
-      SketchOps.ContainK)
-    val jEst = size(array_intersect(array_intersect(u, col("bk1")), col("bk2")))
-      .cast(DoubleType) / size(u).cast(DoubleType)
-    val gated = cand
-      .join(bsk.select(col("doc_id").as("db"), col("bk").as("bk1"),
-        col("sz").as("sz1")), "db")
-      .join(idxBk, "di")
-      .withColumn("__i", jEst * (col("sz1") + col("sz2")).cast(DoubleType)
-        / (jEst + lit(1.0)))
+    // read twice below (candidate fetch ids + exact verify) — pinned so
+    // the estimate stage computes once, exactly as the batch d44 does
+    val gated = StageCache.pin(SketchOps.withContainmentEst(cand
+        .join(bsk.select(col("doc_id").as("db"), col("bk").as("bk1"),
+          col("sz").as("sz1")), "db")
+        .join(idxBk, "di"), SketchOps.ContainK)
       .filter(col("sz2").isNull || // pre-r12 delta rows: no estimate possible
-        greatest(col("__i") / col("sz1").cast(DoubleType),
-          col("__i") / col("sz2").cast(DoubleType))
-          >= SketchOps.ContainEstThreshold)
-      .select(col("db"), col("di"))
-      // read twice below (candidate fetch ids + exact verify) — cache so
-      // the estimate stage computes once, exactly as the batch d44 does
-      .cache()
+        greatest(col("c12_est"), col("c21_est")) >= SketchOps.ContainEstThreshold)
+      .select(col("db"), col("di")))
     // stage 3: exact verify against fetched bodies, batch direction
     val candDocs = candidateFetch(spark, outDir,
         gated.select(col("di").as("doc_id")).distinct())
@@ -629,12 +611,8 @@ object CorpusStream {
       .select(col("doc_id").as("db"), TextOps.shingleHash(col("sh")).as("shh"))
     val shI = TextOps.shingleRows(candDocs, 3)
       .select(col("doc_id").as("di"), TextOps.shingleHash(col("sh")).as("shh"))
-    // eager + release: a long-running stream must not accumulate cached
-    // blocks across micro-batches (advice r12)
-    val rejected = SketchOps.crossContainedBatch(gated, shB, shI)
-      .localCheckpoint()
-    if (sk0.isEmpty) bsk.unpersist()
-    cand.unpersist(); gated.unpersist(); shB.unpersist()
+    // eager, and released with the batch's scope (dropNearDups' rule)
+    val rejected = StageCache.checkpoint(SketchOps.crossContainedBatch(gated, shB, shI))
     fresh.join(rejected, col("doc_id") === col("db"), "left_anti")
   }
 
@@ -668,135 +646,130 @@ object CorpusStream {
     require(!syndGate || batch.columns.contains("source"),
       "the syndication gate compares origin sources: the ingest frame " +
         "must carry a `source` column when syndGate is on")
-    if (indexVersions(spark, indexDir).exists(v => v._2 == writer && v._3 == batchId))
-      return // replayed, fully committed
-    val inBatch = graft.operators.Dedup.keepFirst(
-      gated(batch), Seq("text_fp"), Seq(col("doc_id").asc))
-    val exactFresh = inBatch
-      .join(readIndex(spark, indexDir), Seq("text_fp"), "left_anti")
-    // pinned: written to BOTH sinks; localCheckpoint so the anti-join
-    // (and the near-dup/span probes) runs once and the ContextCleaner
-    // reclaims the blocks afterwards. Before the first commit there is
-    // no corpus store to fetch candidate bodies from (and no bands or
-    // span counts to collide with), so the probes are skipped wholesale.
-    val hasHistory = committedPaths(spark, indexDir).nonEmpty
-    val nearFresh = if (nearDup && hasHistory)
-      dropNearDups(spark, exactFresh, indexDir, outDir)
-    else exactFresh
-    val spanFresh = if (spanGate && hasHistory)
-      dropSpanDups(spark, nearFresh, indexDir)
-    else nearFresh
-    val containFresh = if (containGate && hasHistory)
-      dropContained(spark, spanFresh, indexDir, outDir)
-    else spanFresh
-    // one bottom-k sketch per batch (r18): the syndication gate and the
-    // containment-index delta below both need per-doc sketches of this
-    // batch — sketch the pre-gate frame once and let the delta restrict
-    // it to the accepted ids, instead of re-tokenizing and re-sketching
-    // the survivors a second time
-    val batchSk = if (syndGate)
-      Some(SketchOps.bottomKSketch(containFresh).cache())
-    else None
-    val fresh = (if (syndGate && hasHistory)
-      dropSyndicated(spark, containFresh, indexDir, outDir, batchSk)
-    else containFresh).localCheckpoint()
-    // bucketed store layout: doc_bucket partition dirs (candidateFetch
-    // prunes on them) with doc_id-sorted files (row-group stats bound the
-    // residual read). One shuffle keyed on the bucket keeps files-per-
-    // batch at ~buckets instead of buckets × input partitions. The
-    // fan-out is the STORE's (marker-stamped; compactStore migrates it),
-    // so batches written after a migration keep the layout consistent.
-    val nb = storeBuckets(spark, outDir)
-    fresh.withColumn("doc_bucket", docBucket(col("doc_id"), nb))
-      .repartition(nb, col("doc_bucket"))
-      .sortWithinPartitions(col("doc_bucket"), col("doc_id"))
-      .write.mode(SaveMode.Overwrite).partitionBy("doc_bucket")
-      .parquet(s"$outDir/writer=$writer/batch=$batchId")
-    writeBucketMarker(spark, outDir, nb) // first batch stamps the live fan-out
-    val next = indexVersions(spark, indexDir).map(_._1).maxOption.getOrElse(-1) + 1
-    val delta = new Path(s"$indexDir/v${next}_${writer}_b$batchId")
-    val fs = delta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash-recovery: a prior attempt at THIS (writer, batchId) that died
-    // mid-write left a partial dir (no _SUCCESS) at exactly this slot —
-    // indexVersions ignores it, so `next` recomputes to the same value and
-    // ErrorIfExists would wedge the writer forever. Single-writer per
-    // writer id makes reclaiming it safe.
-    if (fs.exists(delta) && !fs.exists(new Path(delta, "_SUCCESS")))
-      fs.delete(delta, true)
-    val baseRows =
-      if (!nearDup) fresh.select(col("text_fp"))
-      else {
-        // fp rows + this batch's band rows in ONE atomic delta: the
-        // probe and the exact tier advance together or not at all
-        val fpRows = fresh.select(col("text_fp"), col("doc_id"),
-          lit(null).cast(IntegerType).as("band"), lit(null).cast(StringType).as("bh"))
-        val bands = SketchOps.bandRows(SketchOps.minhashSignatures(
-            fresh.withColumn("source", lit("batch"))))
-          .select(lit(null).cast(StringType).as("text_fp"), col("doc_id"),
-            col("band"), col("bh"))
-        fpRows.unionByName(bands)
-      }
-    val spanDeltaRows =
-      if (!spanGate) baseRows
-      else {
-        // accepted docs' span counts join the SAME atomic delta: the
-        // span gate advances in lockstep with the exact/near tiers
-        val spans = TextOps.spanShingleRows(
-            fresh.select(col("doc_id"), split(col("text"), " ").as("arr")),
-            TextOps.SpanK)
-          .groupBy(col("fp")).agg(count(lit(1)).as("sn"))
-          .select(col("fp").as("sfp"), col("sn"))
-        val spanRows = baseRows.columns.foldLeft(spans)((df, c) =>
-          df.withColumn(c, lit(null).cast(baseRows.schema(c).dataType)))
-        baseRows
-          .withColumn("sfp", lit(null).cast(LongType))
-          .withColumn("sn", lit(null).cast(LongType))
-          .unionByName(spanRows)
-      }
-    val deltaRows =
-      if (!containGate && !syndGate) spanDeltaRows
-      else {
-        // accepted docs' sketch elements join the SAME atomic delta: the
-        // containment probe advances in lockstep with every other tier.
-        // csz/csource ride along for the syndication gate's estimate and
-        // source-inequality stages (null source when the frame has none —
-        // such history compares as cross-source, conservatively).
-        val srcCol = if (fresh.columns.contains("source")) col("source")
-          else lit(null).cast(StringType)
-        // accepted docs' sketches: restrict the once-per-batch sketch to
-        // the accepted ids when it exists (sketches are per-doc, so the
-        // restriction equals re-sketching the survivors), else build
-        val acceptedSk = batchSk match {
-          case Some(sk) =>
-            sk.join(fresh.select(col("doc_id")), Seq("doc_id"), "left_semi")
-          case None => SketchOps.bottomKSketch(
-            fresh.withColumn("source", srcCol))
+    val replayed = indexVersions(spark, indexDir)
+      .exists(v => v._2 == writer && v._3 == batchId) // fully committed already
+    // one scope per batch: every pin and snapshot the gates and the delta
+    // build take is released once the batch has committed, so a
+    // long-running stream holds nothing between micro-batches (advice r12)
+    if (!replayed) StageCache.scoped(spark) {
+      val inBatch = graft.operators.Dedup.keepFirst(
+        gated(batch), Seq("text_fp"), Seq(col("doc_id").asc))
+      val exactFresh = inBatch
+        .join(readIndex(spark, indexDir), Seq("text_fp"), "left_anti")
+      // Before the first commit there is no corpus store to fetch
+      // candidate bodies from (and no bands or span counts to collide
+      // with), so the probes are skipped wholesale.
+      val hasHistory = committedPaths(spark, indexDir).nonEmpty
+      val nearFresh = if (nearDup && hasHistory)
+        dropNearDups(spark, exactFresh, indexDir, outDir)
+      else exactFresh
+      val spanFresh = if (spanGate && hasHistory)
+        dropSpanDups(spark, nearFresh, indexDir)
+      else nearFresh
+      val containFresh = if (containGate && hasHistory)
+        dropContained(spark, spanFresh, indexDir, outDir)
+      else spanFresh
+      // one bottom-k sketch per batch (r18): the syndication gate and the
+      // containment-index delta below both need per-doc sketches of this
+      // batch — sketch the pre-gate frame once and let the delta restrict
+      // it to the accepted ids, instead of re-tokenizing and re-sketching
+      // the survivors a second time
+      val batchSk = if (syndGate) Some(StageCache.pin(SketchOps.bottomKSketch(containFresh)))
+      else None
+      // snapshot: written to BOTH sinks, so the anti-join and the gates
+      // run once
+      val fresh = StageCache.checkpoint(batchSk match {
+        case Some(bsk) if hasHistory => dropSyndicated(spark, containFresh, indexDir, outDir, bsk)
+        case _ => containFresh
+      })
+      // bucketed store layout: doc_bucket partition dirs (candidateFetch
+      // prunes on them) with doc_id-sorted files (row-group stats bound the
+      // residual read). One shuffle keyed on the bucket keeps files-per-
+      // batch at ~buckets instead of buckets × input partitions. The
+      // fan-out is the STORE's (marker-stamped; compactStore migrates it),
+      // so batches written after a migration keep the layout consistent.
+      val nb = storeBuckets(spark, outDir)
+      fresh.withColumn("doc_bucket", docBucket(col("doc_id"), nb))
+        .repartition(nb, col("doc_bucket"))
+        .sortWithinPartitions(col("doc_bucket"), col("doc_id"))
+        .write.mode(SaveMode.Overwrite).partitionBy("doc_bucket")
+        .parquet(s"$outDir/writer=$writer/batch=$batchId")
+      writeBucketMarker(spark, outDir, nb) // first batch stamps the live fan-out
+      val next = indexVersions(spark, indexDir).map(_._1).maxOption.getOrElse(-1) + 1
+      val delta = new Path(s"$indexDir/v${next}_${writer}_b$batchId")
+      val fs = delta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // crash-recovery: a prior attempt at THIS (writer, batchId) that died
+      // mid-write left a partial dir (no _SUCCESS) at exactly this slot —
+      // indexVersions ignores it, so `next` recomputes to the same value and
+      // ErrorIfExists would wedge the writer forever. Single-writer per
+      // writer id makes reclaiming it safe.
+      if (fs.exists(delta) && !fs.exists(new Path(delta, "_SUCCESS")))
+        fs.delete(delta, true)
+      val baseRows =
+        if (!nearDup) fresh.select(col("text_fp"))
+        else {
+          // fp rows + this batch's band rows in ONE atomic delta: the
+          // probe and the exact tier advance together or not at all
+          val fpRows = fresh.select(col("text_fp"), col("doc_id"),
+            lit(null).cast(IntegerType).as("band"), lit(null).cast(StringType).as("bh"))
+          val bands = SketchOps.bandRows(SketchOps.minhashSignatures(
+              fresh.withColumn("source", lit("batch"))))
+            .select(lit(null).cast(StringType).as("text_fp"), col("doc_id"),
+              col("band"), col("bh"))
+          fpRows.unionByName(bands)
         }
-        val cks = acceptedSk
-          .select(col("doc_id"), explode(col("bk")).as("ck"),
-            col("sz").as("csz"), col("source").as("csource"))
-        val prior =
-          if (spanDeltaRows.columns.contains("doc_id")) spanDeltaRows
-          else spanDeltaRows.withColumn("doc_id", lit(null).cast(LongType))
-        val ckRows = prior.columns.filterNot(_ == "doc_id")
-          .foldLeft(cks)((df, c) =>
-            df.withColumn(c, lit(null).cast(prior.schema(c).dataType)))
-        prior.withColumn("ck", lit(null).cast(LongType))
-          .withColumn("csz", lit(null).cast(LongType))
-          .withColumn("csource", lit(null).cast(StringType))
-          .unionByName(ckRows)
-      }
-    deltaRows.write.mode(SaveMode.ErrorIfExists).parquet(delta.toString)
-    // the per-batch sketch has no consumer past the delta write — a
-    // long-running stream must not accumulate cached frames across
-    // micro-batches (advice r12)
-    batchSk.foreach(_.unpersist())
-    // the band-delta build registered minhashSignatures' token-set cache
-    // for this batch — release it now that the delta is on disk, so a
-    // long-running stream holds zero cached frames between batches
-    // (advice r12; the gate functions release their own the same way)
-    if (nearDup)
-      SketchOps.releaseSignatureCache(fresh.withColumn("source", lit("batch")))
+      val spanDeltaRows =
+        if (!spanGate) baseRows
+        else {
+          // accepted docs' span counts join the SAME atomic delta: the
+          // span gate advances in lockstep with the exact/near tiers
+          val spans = TextOps.spanShingleRows(
+              fresh.select(col("doc_id"), split(col("text"), " ").as("arr")),
+              TextOps.SpanK)
+            .groupBy(col("fp")).agg(count(lit(1)).as("sn"))
+            .select(col("fp").as("sfp"), col("sn"))
+          val spanRows = baseRows.columns.foldLeft(spans)((df, c) =>
+            df.withColumn(c, lit(null).cast(baseRows.schema(c).dataType)))
+          baseRows
+            .withColumn("sfp", lit(null).cast(LongType))
+            .withColumn("sn", lit(null).cast(LongType))
+            .unionByName(spanRows)
+        }
+      val deltaRows =
+        if (!containGate && !syndGate) spanDeltaRows
+        else {
+          // accepted docs' sketch elements join the SAME atomic delta: the
+          // containment probe advances in lockstep with every other tier.
+          // csz/csource ride along for the syndication gate's estimate and
+          // source-inequality stages (null source when the frame has none —
+          // such history compares as cross-source, conservatively).
+          val srcCol = if (fresh.columns.contains("source")) col("source")
+            else lit(null).cast(StringType)
+          // accepted docs' sketches: restrict the once-per-batch sketch to
+          // the accepted ids when it exists (sketches are per-doc, so the
+          // restriction equals re-sketching the survivors), else build
+          val acceptedSk = batchSk match {
+            case Some(sk) =>
+              sk.join(fresh.select(col("doc_id")), Seq("doc_id"), "left_semi")
+            case None => SketchOps.bottomKSketch(
+              fresh.withColumn("source", srcCol))
+          }
+          val cks = acceptedSk
+            .select(col("doc_id"), explode(col("bk")).as("ck"),
+              col("sz").as("csz"), col("source").as("csource"))
+          val prior =
+            if (spanDeltaRows.columns.contains("doc_id")) spanDeltaRows
+            else spanDeltaRows.withColumn("doc_id", lit(null).cast(LongType))
+          val ckRows = prior.columns.filterNot(_ == "doc_id")
+            .foldLeft(cks)((df, c) =>
+              df.withColumn(c, lit(null).cast(prior.schema(c).dataType)))
+          prior.withColumn("ck", lit(null).cast(LongType))
+            .withColumn("csz", lit(null).cast(LongType))
+            .withColumn("csource", lit(null).cast(StringType))
+            .unionByName(ckRows)
+        }
+      deltaRows.write.mode(SaveMode.ErrorIfExists).parquet(delta.toString)
+    }
   }
 
   /** The index-backed streaming ingest: wire a document stream

@@ -380,17 +380,17 @@ object DimSync {
     val histPaths = baseMan.toSeq.flatMap(m =>
       touched.flatMap(b => m.buckets.get(b)
         .map(v => s"$lakePath/v$v/bucket=$b")))
+    // the pruned history feeds up to four subtrees per merge (guard,
+    // untouched anti-join, replay semi-join) — pin it once instead of
+    // re-reading the bucket dirs per subtree, for the length of this
+    // merge; MEMORY_AND_DISK, so a dimension-sized touched set spills
+    // rather than OOMs
+    graft.StageCache.scoped(spark) {
     val hist =
-      if (histPaths.nonEmpty) spark.read.parquet(histPaths: _*)
+      if (histPaths.nonEmpty) graft.StageCache.pin(spark.read.parquet(histPaths: _*))
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         OlapQueries.scd2Intervals(batch).schema)
-    // the pruned history feeds up to four subtrees per merge (guard,
-    // untouched anti-join, replay semi-join) — pin it once instead of
-    // re-reading the bucket dirs per subtree; MEMORY_AND_DISK, so a
-    // dimension-sized touched set spills rather than OOMs
-    if (histPaths.nonEmpty) hist.persist()
-    try {
     if (histPaths.nonEmpty) {
       // append-only guard: one small extra job per merge. The open row
       // per key IS the is_current row (exactly one per key by the
@@ -429,7 +429,7 @@ object DimSync {
         baseMan.map(_.buckets).getOrElse(Map.empty) ++ touched.map(_ -> next)))
     }
     touched
-    } finally if (histPaths.nonEmpty) hist.unpersist(false)
+    }
   }
 
   /** The SCD-2 lake as an interval frame — the latest COMPLETE version,

@@ -1,11 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -13,7 +16,8 @@ import graft.pipeline.Runner
 
 /** StageCache lifetimes: session stages outlive every scope; a stage or
   * pin first taken in a scope is released (its blocks unpersisted) when
-  * the last open scope that touched it closes. */
+  * the last open scope that touched it closes; a pin taken by a stage's
+  * build is released when the build returns. */
 class StageCacheSpec extends SparkSpec {
 
   private val dir = s"stagecache-${java.util.UUID.randomUUID()}"
@@ -118,5 +122,54 @@ class StageCacheSpec extends SparkSpec {
       assert(df.count() == 1000 && builds.get == 1)
     }
     assertReleased(df)
+  }
+
+  test("a stage build releases its own pins; a stage built in it keeps its owner") {
+    val builds, nestedBuilds = new AtomicInteger
+    var pinned, snap, nested: DataFrame = null
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val df = StageCache.cached(spark, dir, "build-local") {
+      builds.incrementAndGet()
+      pinned = StageCache.pin(spark.range(300).toDF("p"))
+      snap = StageCache.checkpoint(spark.range(200).toDF("c"))
+      nested = stage("build-nested", nestedBuilds)
+      nested.join(pinned, col("id") === col("p")).select(col("id"))
+        .union(snap.select(col("c")))
+    }
+    // outside any scope: the build's pin and snapshot are gone once it
+    // returns; the stage and the session stage built inside it remain
+    assert(pinned.storageLevel == StorageLevel.NONE)
+    assertReleased(snap)
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- before ==
+      rddIds(df) ++ rddIds(nested))
+    assert(df.count() == 500 && builds.get == 1)
+    assert(stage("build-nested", nestedBuilds) eq nested)
+    assert(nested.count() == 1000 && nestedBuilds.get == 1)
+
+    // in a scope, the stage built inside a build belongs to the scope
+    val scopedBuilds = new AtomicInteger
+    val inScope = StageCache.scoped(spark) {
+      StageCache.cached(spark, dir, "build-local-scoped")(
+        stage("build-nested-scoped", scopedBuilds).filter(col("id") < 10))
+      val n = stage("build-nested-scoped", scopedBuilds)
+      assert(n.count() == 1000 && scopedBuilds.get == 1)
+      n
+    }
+    assertReleased(inScope)
+  }
+
+  test("StageCache owns every cache: no other cache, persist or unpersist call") {
+    // the census mains keep their own session-long caches
+    val exempt = Set("StageCache", "BpeBench", "CompactionBench", "GraphBench",
+      "LayoutBench", "RecallBench", "SkewBench", "SpillBench").map(_ + ".scala")
+    val call = """\.cache\(\)|\.persist\(|unpersist\(""".r
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the project root: no $root")
+    val hits = Using.resource(Files.walk(root))(_.iterator.asScala.toList)
+      .filter(p => p.toString.endsWith(".scala") && !exempt(p.getFileName.toString))
+      .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if call.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+      })
+    assert(hits.isEmpty, hits.mkString("pin through StageCache instead:\n", "\n", ""))
   }
 }

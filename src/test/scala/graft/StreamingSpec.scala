@@ -1010,9 +1010,9 @@ class StreamingSpec extends SparkSpec {
 
   test("gated ingest releases its per-batch SQL caches (advice r12)") {
     // a long-running stream must not accumulate one cached candidate
-    // frame per micro-batch: every gate eagerly materializes its small
-    // rejected set (localCheckpoint) and unpersists its caches before
-    // returning — so after any gated batch the SQL cache is empty
+    // frame per micro-batch: every gate's pins and snapshots, and the
+    // batch's own, belong to the batch's StageCache scope — so after any
+    // gated batch the SQL cache is empty and no persisted RDD is left
     import graft.streaming.CorpusStream
     // start from a clean slate: other tests in the shared session may
     // hold their own (legitimate) cached frames — the assertion below
@@ -1023,6 +1023,7 @@ class StreamingSpec extends SparkSpec {
     def docs(rows: (Long, String, String)*) =
       rows.toSeq.toDF("doc_id", "text", "source")
     val page = (1 to 30).map(i => s"tok$i").mkString(" ")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     CorpusStream.ingestBatch(spark, idx, out, writer = "w",
       nearDup = true, spanGate = true, containGate = true, syndGate = true)(
       docs((1L, page, "agg"),
@@ -1033,6 +1034,10 @@ class StreamingSpec extends SparkSpec {
         (4L, (1 to 12).map(i => s"new$i").mkString(" "), "misc")), 1L)
     assert(spark.sharedState.cacheManager.isEmpty,
       "gated ingestBatch left SQL-cached frames behind")
+    // not only the SQL cache: the rejected-set and batch snapshots too,
+    // without waiting for a GC to hand them to the ContextCleaner
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"gated ingestBatch left persisted RDDs $left behind")
   }
 
   test("d45 ingest handles single-source and all-gated-out corpora (advice r13)") {
