@@ -210,7 +210,7 @@ object EventQueries {
         struct(
           col("l_partkey").as("product_id"),
           col("l_returnflag").as("product_category"),
-          col("l_extendedprice").as("price"),
+          col("l_extendedprice").as("product_price"),
           col("l_linenumber").as("quantity")).as("item"))
       .groupBy(col("event_id"))
       .agg(to_json(array_sort(collect_list(col("item")))).as("items_json"))
@@ -218,7 +218,7 @@ object EventQueries {
         lit(null).cast(TimestampType).as("ts"),
         col("event_id").as("user_id"),
         from_json(col("items_json"),
-          ArrayType(graft.streaming.Realtime.orderItemSchema)).as("items"))
+          ArrayType(graft.streaming.EventBus.orderItemSchema)).as("items"))
     graft.streaming.Realtime.explodeOrderItems(orders)
       .groupBy(col("product_category"))
       .agg(

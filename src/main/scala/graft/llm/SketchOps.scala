@@ -1030,7 +1030,7 @@ object SketchOps {
   // colliding (batch, index) pairs, index side semi-joined down first.
   //
   // Scale shape: the index's persisted state is k longs per accepted doc
-  // (the streaming gate's CkSchema rows — content-free); the probe
+  // (the streaming gate's sketch-element rows — content-free); the probe
   // shuffles sketch elements keyed on the 60-bit hash, never text; the
   // verify reads history shingles only where a sketch collision names
   // the doc. Output is per-batch-doc: candidate count, the max exact

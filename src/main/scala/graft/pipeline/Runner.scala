@@ -174,8 +174,8 @@ object Runner {
     * silver layer dir (the loaders detect the layout). The q09-shape
     * supplier scorecard is built from the bucketed tables — its
     * orders⋈lineitem fact-fact join plans with ZERO shuffle exchanges
-    * (asserted here, proven again in BucketingSpec). On a cluster, every
-    * later fact-fact query amortizes the same one-time bucketed write. */
+    * (asserted in BucketingSpec). On a cluster, every later fact-fact
+    * query amortizes the same one-time bucketed write. */
   def runGold(spark: SparkSession, sfDir: String, outDir: String): Unit = StageCache.scoped(spark) {
     val silver = s"$outDir/silver"
     def audited(df: DataFrame): DataFrame =
@@ -185,29 +185,6 @@ object Runner {
       () => Sinks.bucketed(Tables.orders(spark, silver), "graft_wh_orders", 32, Seq("o_orderkey")),
       () => Sinks.bucketed(Tables.lineitem(spark, silver), "graft_wh_lineitem", 32, Seq("l_orderkey")),
     ))
-    // Plan probe on the PURE fact-fact join, broadcast disabled: at small
-    // SF a broadcast join would satisfy "no shuffle" trivially. The check
-    // reads the rendered plan tree (Spark 4 wraps plans in an
-    // AdaptiveSparkPlanExec LEAF, so node collect() can't see inside; the
-    // toString still prints the full tree): a correctly co-located join
-    // is a bare SortMergeJoin over Bucketed: true scans with no Exchange
-    // anywhere. A WARN, not a require: plan RENDERING is not a stable
-    // API (a Spark upgrade that renames nodes must not abort a gold run
-    // whose output is correct) — the strict, version-pinned assertion
-    // lives in BucketingSpec where a rename fails the build, not the lake.
-    val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val factJoin = spark.table("graft_wh_orders")
-        .join(spark.table("graft_wh_lineitem"), col("o_orderkey") === col("l_orderkey"))
-      val planStr = factJoin.queryExecution.executedPlan.toString
-      if (planStr.contains("SortMergeJoin") && planStr.contains("Bucketed: true")
-          && !planStr.contains("Exchange"))
-        println("[runner] gold/supplier_scorecard fact-fact join: 0 shuffle exchanges (bucketed co-location)")
-      else
-        System.err.println("[runner] WARN: bucketed fact-fact join did not render as an " +
-          s"exchange-free bucketed sort-merge join (plan rendering drift or real shuffle):\n${planStr.take(1500)}")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
     val scorecardJoin = Queries.q09Joined(spark.table("graft_wh_orders"),
       spark.table("graft_wh_lineitem"), Tables.supplier(spark, silver))
     inParallel(spark, Seq(

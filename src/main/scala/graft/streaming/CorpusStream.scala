@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -157,96 +157,75 @@ object CorpusStream {
     Sinks.writeSmallFile(fs, new Path(deltaDir, FoldedLedger),
       folded.map { case (v, w, b) => s"$v\t$w\t$b" }.mkString("", "\n", "\n"))
 
-  private val FpSchema = StructType(Seq(StructField("text_fp", StringType)))
-  // the near-dup tier's delta rows: fp rows carry (text_fp, doc_id) with
-  // null band columns; band rows carry (doc_id, band, bh) with null fp.
-  // Explicit-schema reads keep exact-tier deltas (text_fp only) valid in
-  // the same index: their missing columns read as null.
-  private val BandSchema = StructType(Seq(
-    StructField("text_fp", StringType), StructField("doc_id", LongType),
-    StructField("band", IntegerType), StructField("bh", StringType)))
-
   private def committedPaths(spark: SparkSession, indexDir: String): Seq[String] =
     physicalDeltas(spark, indexDir).map { case (v, w, b) => s"$indexDir/v${v}_${w}_b$b" }
 
-  /** The current index: union of all committed fingerprint deltas
-    * (one `text_fp` column; empty before the first commit). */
-  def readIndex(spark: SparkSession, indexDir: String): DataFrame = {
-    val vs = committedPaths(spark, indexDir)
-    if (vs.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], FpSchema)
-    else spark.read.schema(FpSchema).parquet(vs: _*)
-      .filter(col("text_fp").isNotNull)
-  }
-
-  /** The current LSH band index: (doc_id, band, bh) rows of every
-    * accepted doc ingested through the near-dup tier. Docs accepted by an
-    * exact-only writer have no band rows and are invisible to the probe —
-    * the documented degradation of mixing tiers on one index. */
-  def readBandIndex(spark: SparkSession, indexDir: String): DataFrame = {
-    val vs = committedPaths(spark, indexDir)
-    if (vs.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], BandSchema)
-        .select(col("doc_id"), col("band"), col("bh"))
-    else spark.read.schema(BandSchema).parquet(vs: _*)
-      .filter(col("band").isNotNull)
-      .select(col("doc_id"), col("band"), col("bh"))
-  }
-
-  // the span tier's delta rows: (sfp, sn) span-fingerprint counts of
-  // accepted docs — content-free like the band index (d35b's production
-  // seam). Old deltas lack the columns and read as null under the
-  // explicit schema.
-  private val SpanSchema = StructType(Seq(
-    StructField("sfp", LongType), StructField("sn", LongType)))
-
-  // the containment tier's delta rows: (doc_id, ck) — one row per
-  // bottom-k sketch element of each accepted doc (d40b's per-doc state
-  // in row form). Content-free; doubles as the candidate probe key.
-  // csz (the doc's distinct-shingle count) and csource (its origin
-  // source) extend the rows for the SYNDICATION gate's estimate stage
-  // (r11 verdict #6) — deltas written before round 12 lack both and
-  // read as null under the explicit schema: such docs skip the estimate
-  // gate (verified exactly anyway) and compare as cross-source
-  // (conservative — the gate still only drops after exact verification).
-  private val CkSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("ck", LongType),
-    StructField("csz", LongType), StructField("csource", StringType)))
-
-  /** The current containment-sketch index: exploded bottom-k sketch
-    * elements (doc_id, ck) of every accepted doc ingested through the
-    * containment tier. */
-  def readContainIndex(spark: SparkSession, indexDir: String): DataFrame = {
-    val vs = committedPaths(spark, indexDir)
-    if (vs.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], CkSchema)
-    else spark.read.schema(CkSchema).parquet(vs: _*)
-      .filter(col("ck").isNotNull)
-  }
-
-  /** The current span-fingerprint index: total occurrence count per
-    * k-token span fingerprint across every accepted doc ingested through
-    * the span tier. Aggregating across deltas keeps each delta
-    * append-only (counts ADD, like everything else in this index). */
-  def readSpanIndex(spark: SparkSession, indexDir: String): DataFrame = {
-    val vs = committedPaths(spark, indexDir)
-    if (vs.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], SpanSchema)
-    else spark.read.schema(SpanSchema).parquet(vs: _*)
-      .filter(col("sfp").isNotNull)
-      .groupBy(col("sfp")).agg(sum(col("sn")).as("sn"))
-  }
-
-  // the union of every tier's delta columns — what a delta dir can hold.
-  // Compaction reads ALL deltas under this widest schema (absent columns
-  // in older/narrower deltas are null, exactly the per-tier read_
-  // contract) so the fold is tier-lossless.
-  private val FullDeltaSchema = StructType(Seq(
+  // The one delta format. Every tier's rows share this schema, and each
+  // row sets only its own tier's columns (the rest are null):
+  //   fingerprint rows     (text_fp, doc_id) — the exact tier;
+  //   LSH band rows        (doc_id, band, bh) — the near-dup probe;
+  //   span-count rows      (sfp, sn) — k-token span fingerprint counts of
+  //                        accepted docs (d35b's production seam);
+  //   sketch-element rows  (doc_id, ck, csz, csource) — one row per
+  //                        bottom-k element of an accepted doc (d40b's
+  //                        per-doc state in row form); csz (the doc's
+  //                        distinct-shingle count) and csource (its origin
+  //                        source) feed the syndication gate.
+  // Every tier except the fingerprint is content-free. Deltas written by
+  // older layouts carry a subset of these columns, and under this explicit
+  // schema the absent ones read as null: such rows are invisible to the
+  // tiers they never fed, a csz-less sketch skips the estimate gate (it is
+  // verified exactly anyway) and a null csource compares as cross-source
+  // (conservative: the gate still only drops after exact verification).
+  private[graft] val FullDeltaSchema = StructType(Seq(
     StructField("text_fp", StringType), StructField("doc_id", LongType),
     StructField("band", IntegerType), StructField("bh", StringType),
     StructField("sfp", LongType), StructField("sn", LongType),
     StructField("ck", LongType), StructField("csz", LongType),
     StructField("csource", StringType)))
+
+  /** One tier's rows aligned to [[FullDeltaSchema]]: the columns it has,
+    * null for every other tier's. */
+  private def asDelta(rows: DataFrame): DataFrame =
+    rows.select(FullDeltaSchema.map(f =>
+      (if (rows.columns.contains(f.name)) col(f.name) else lit(null))
+        .cast(f.dataType).as(f.name)): _*)
+
+  /** The rows of the given delta dirs under [[FullDeltaSchema]]. */
+  private def readDeltas(spark: SparkSession, paths: Seq[String]): DataFrame =
+    if (paths.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], FullDeltaSchema)
+    else spark.read.schema(FullDeltaSchema).parquet(paths: _*)
+
+  /** One tier of the current index: the rows of every committed delta
+    * whose tier key `key` is set (empty before the first commit). */
+  private def readTier(spark: SparkSession, indexDir: String, key: String): DataFrame =
+    readDeltas(spark, committedPaths(spark, indexDir)).filter(col(key).isNotNull)
+
+  /** The current index: union of all committed fingerprint deltas
+    * (one `text_fp` column; empty before the first commit). */
+  def readIndex(spark: SparkSession, indexDir: String): DataFrame =
+    readTier(spark, indexDir, "text_fp").select(col("text_fp"))
+
+  /** The current LSH band index: (doc_id, band, bh) rows of every
+    * accepted doc ingested through the near-dup tier. Docs accepted by an
+    * exact-only writer have no band rows and are invisible to the probe —
+    * the documented degradation of mixing tiers on one index. */
+  def readBandIndex(spark: SparkSession, indexDir: String): DataFrame =
+    readTier(spark, indexDir, "band").select(col("doc_id"), col("band"), col("bh"))
+
+  /** The current containment-sketch index: exploded bottom-k sketch
+    * elements (doc_id, ck, csz, csource) of every accepted doc ingested
+    * through the containment or syndication tier. */
+  def readContainIndex(spark: SparkSession, indexDir: String): DataFrame =
+    readTier(spark, indexDir, "ck")
+      .select(col("doc_id"), col("ck"), col("csz"), col("csource"))
+
+  /** The current span-fingerprint index: total occurrence count per
+    * k-token span fingerprint across every accepted doc ingested through
+    * the span tier. Aggregating across deltas keeps each delta
+    * append-only (counts ADD, like everything else in this index). */
+  def readSpanIndex(spark: SparkSession, indexDir: String): DataFrame =
+    readTier(spark, indexDir, "sfp").groupBy(col("sfp")).agg(sum(col("sn")).as("sn"))
 
   /** Fold every committed index delta into ONE compacted delta — the
     * maintenance pass that keeps a long-running ingest's per-batch cost
@@ -280,10 +259,9 @@ object CorpusStream {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     Sinks.finishSwap(fs, root) // a pass that died mid-swap
     val all = indexVersions(spark, indexDir) // dirs + prior ledgers
-    val dirs = physicalDeltas(spark, indexDir)
-    if (dirs.size <= 1) return // nothing to fold
-    val paths = dirs.map { case (v, w, b) => s"$indexDir/v${v}_${w}_b$b" }
-    val src = spark.read.schema(FullDeltaSchema).parquet(paths: _*)
+    val paths = committedPaths(spark, indexDir)
+    if (paths.size <= 1) return // nothing to fold
+    val src = readDeltas(spark, paths)
     def tierCounts(df: DataFrame): Seq[Long] = df.agg(
         count(lit(1)), count(col("text_fp")), count(col("band")),
         count(col("sfp")), count(col("ck")))
@@ -296,13 +274,13 @@ object CorpusStream {
     // tiers clustered inside each file so per-tier reads skip whole row
     // groups on null-count stats
     val nOut = math.max(1, math.min(
-      spark.sessionState.conf.numShufflePartitions, dirs.size))
+      spark.sessionState.conf.numShufflePartitions, paths.size))
     Sinks.swap(fs, root) { fresh =>
       val delta = new Path(fresh, s"v${next}_compacted_b$epoch")
       src.repartition(nOut)
         .sortWithinPartitions(col("ck"), col("sfp"), col("band"), col("text_fp"))
         .write.mode(SaveMode.ErrorIfExists).parquet(delta.toString)
-      val after = tierCounts(spark.read.schema(FullDeltaSchema).parquet(delta.toString))
+      val after = tierCounts(readDeltas(spark, Seq(delta.toString)))
       require(after == before,
         s"index compaction of $indexDir would change tier row counts " +
           s"($before -> $after); aborting swap")
@@ -383,18 +361,6 @@ object CorpusStream {
     }
   }
 
-  /** Bodies of exactly the candidate docs, fetched from the store with
-    * static partition pruning: the ≤[[CorpusBuckets]] distinct candidate
-    * buckets are collected driver-side (pruning METADATA — bounded ints,
-    * not data; the same driver-sized exchange dynamic partition pruning
-    * would do implicitly) and pushed as a partition filter, then the
-    * left-semi join keeps only named doc_ids. Files inside each bucket
-    * are doc_id-sorted on write, so parquet row-group stats bound the
-    * residual read further.
-    *
-    * A store written before the bucketed layout (no `doc_bucket` dirs)
-    * falls back to the unpruned scan — correct, logged, and migrated by
-    * rewriting the store partitioned (one-time). */
   /** Read the corpus store, tolerating the gated-to-empty shape: a store
     * whose every committed batch rejected all its rows holds marker and
     * `_SUCCESS` files but zero parquet data files (partitioned writes of
@@ -409,13 +375,24 @@ object CorpusStream {
       case e: org.apache.spark.sql.AnalysisException
           if Seq("UNABLE_TO_INFER_SCHEMA", "PATH_NOT_FOUND")
             .exists(c => Option(e.getCondition).exists(_.startsWith(c))) =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
           StructType(Seq(StructField("doc_id", LongType),
             StructField("text", StringType),
             StructField("doc_bucket", IntegerType))))
     }
 
+  /** Bodies of exactly the candidate docs, fetched from the store with
+    * static partition pruning: the ≤[[CorpusBuckets]] distinct candidate
+    * buckets are collected driver-side (pruning METADATA — bounded ints,
+    * not data; the same driver-sized exchange dynamic partition pruning
+    * would do implicitly) and pushed as a partition filter, then the
+    * left-semi join keeps only named doc_ids. Files inside each bucket
+    * are doc_id-sorted on write, so parquet row-group stats bound the
+    * residual read further.
+    *
+    * A store written before the bucketed layout (no `doc_bucket` dirs)
+    * falls back to the unpruned scan — correct, logged, and migrated by
+    * rewriting the store partitioned (one-time). */
   private[graft] def candidateFetch(spark: SparkSession, outDir: String,
       candIds: DataFrame): DataFrame = {
     val store = readStoreOrEmpty(spark, outDir)
@@ -435,6 +412,27 @@ object CorpusStream {
       .select(col("doc_id"), col("text"))
   }
 
+  /** The exact tail every history gate shares: fetch the bodies of the
+    * candidate history docs (`cand`'s `di`) from the store, shingle-hash
+    * both sides, and drop from `fresh` every batch doc (`db`) that
+    * `verify(cand, batchShingles, historyShingles)` confirms. The rejected
+    * id set is tiny and taken eagerly; it and every pin taken on the way
+    * belong to the batch's scope in [[ingestBatch]], which releases them
+    * once the batch commits. */
+  private def rejectVerified(spark: SparkSession, fresh: DataFrame, outDir: String,
+      cand: DataFrame)(verify: (DataFrame, DataFrame, DataFrame) => DataFrame): DataFrame = {
+    // shingleRows carries a source column; the verify reads only (id, shh)
+    def shingleHashes(docs: DataFrame, id: String) =
+      TextOps.shingleRows(docs.withColumn("source", lit(id)), 3)
+        .select(col("doc_id").as(id), TextOps.shingleHash(col("sh")).as("shh"))
+    val candDocs = candidateFetch(spark, outDir,
+      cand.select(col("di").as("doc_id")).distinct())
+    val rejected = StageCache.checkpoint(verify(cand,
+        shingleHashes(fresh, "db"), shingleHashes(candDocs, "di"))
+      .select(col("db")).distinct())
+    fresh.join(rejected, col("doc_id") === col("db"), "left_anti")
+  }
+
   /** Drop batch docs with a VERIFIED near-dup among accepted docs: probe
     * the persisted band index for candidates (an equi-join moving only
     * (band, bh) keys), fetch ONLY candidate docs' bodies from the corpus
@@ -449,24 +447,12 @@ object CorpusStream {
       indexDir: String, outDir: String): DataFrame = {
     val idxBands = readBandIndex(spark, indexDir)
       .select(col("doc_id").as("di"), col("band"), col("bh"))
-    val srced = fresh.withColumn("source", lit("batch"))
-    val batchBands = SketchOps.bandRows(SketchOps.minhashSignatures(srced))
+    val batchBands = SketchOps.bandRows(SketchOps.minhashSignatures(
+        fresh.withColumn("source", lit("batch"))))
       .select(col("doc_id").as("db"), col("band"), col("bh"))
     val cand = StageCache.pin(batchBands.join(idxBands, Seq("band", "bh"))
       .select(col("db"), col("di")).distinct())
-    val candDocs = candidateFetch(spark, outDir,
-        cand.select(col("di").as("doc_id")).distinct())
-      .withColumn("source", lit("index"))
-    val shB = TextOps.shingleRows(srced, 3)
-      .select(col("doc_id").as("db"), TextOps.shingleHash(col("sh")).as("shh"))
-    val shI = TextOps.shingleRows(candDocs, 3)
-      .select(col("doc_id").as("di"), TextOps.shingleHash(col("sh")).as("shh"))
-    // eager: the rejected id set is tiny. It and every pin taken on the
-    // way (here and inside the SketchOps helpers) belong to the batch's
-    // scope in ingestBatch, which releases them once the batch commits
-    val rejected = StageCache.checkpoint(SketchOps.crossVerifiedPairs(cand, shB, shI)
-      .select(col("db")).distinct())
-    fresh.join(rejected, col("doc_id") === col("db"), "left_anti")
+    rejectVerified(spark, fresh, outDir, cand)(SketchOps.crossVerifiedPairs)
   }
 
   /** Span-boilerplate gate against the persisted span index (d35b's
@@ -527,23 +513,13 @@ object CorpusStream {
     */
   private def dropContained(spark: SparkSession, fresh: DataFrame,
       indexDir: String, outDir: String): DataFrame = {
-    val srced = fresh.withColumn("source", lit("batch"))
-    val batchEl = SketchOps.bottomKSketch(srced)
+    val batchEl = SketchOps.bottomKSketch(fresh.withColumn("source", lit("batch")))
       .select(col("doc_id").as("db"), explode(col("bk")).as("ck"))
     val idxEl = readContainIndex(spark, indexDir)
       .select(col("doc_id").as("di"), col("ck"))
     val cand = StageCache.pin(batchEl.join(idxEl, Seq("ck"))
       .select(col("db"), col("di")).distinct())
-    val candDocs = candidateFetch(spark, outDir,
-        cand.select(col("di").as("doc_id")).distinct())
-      .withColumn("source", lit("index"))
-    val shB = TextOps.shingleRows(srced, 3)
-      .select(col("doc_id").as("db"), TextOps.shingleHash(col("sh")).as("shh"))
-    val shI = TextOps.shingleRows(candDocs, 3)
-      .select(col("doc_id").as("di"), TextOps.shingleHash(col("sh")).as("shh"))
-    // eager, and released with the batch's scope (dropNearDups' rule)
-    val rejected = StageCache.checkpoint(SketchOps.crossContainedBatch(cand, shB, shI))
-    fresh.join(rejected, col("doc_id") === col("db"), "left_anti")
+    rejectVerified(spark, fresh, outDir, cand)(SketchOps.crossContainedBatch)
   }
 
   /** CROSS-SOURCE syndication gate — d44's batch protocol as a streaming
@@ -604,16 +580,7 @@ object CorpusStream {
         greatest(col("c12_est"), col("c21_est")) >= SketchOps.ContainEstThreshold)
       .select(col("db"), col("di")))
     // stage 3: exact verify against fetched bodies, batch direction
-    val candDocs = candidateFetch(spark, outDir,
-        gated.select(col("di").as("doc_id")).distinct())
-      .withColumn("source", lit("index"))
-    val shB = TextOps.shingleRows(fresh, 3)
-      .select(col("doc_id").as("db"), TextOps.shingleHash(col("sh")).as("shh"))
-    val shI = TextOps.shingleRows(candDocs, 3)
-      .select(col("doc_id").as("di"), TextOps.shingleHash(col("sh")).as("shh"))
-    // eager, and released with the batch's scope (dropNearDups' rule)
-    val rejected = StageCache.checkpoint(SketchOps.crossContainedBatch(gated, shB, shI))
-    fresh.join(rejected, col("doc_id") === col("db"), "left_anti")
+    rejectVerified(spark, fresh, outDir, gated)(SketchOps.crossContainedBatch)
   }
 
   /** One micro-batch of the index-backed ingest: gate → within-batch
@@ -674,8 +641,7 @@ object CorpusStream {
       // batch — sketch the pre-gate frame once and let the delta restrict
       // it to the accepted ids, instead of re-tokenizing and re-sketching
       // the survivors a second time
-      val batchSk = if (syndGate) Some(StageCache.pin(SketchOps.bottomKSketch(containFresh)))
-      else None
+      val batchSk = Option.when(syndGate)(StageCache.pin(SketchOps.bottomKSketch(containFresh)))
       // snapshot: written to BOTH sinks, so the anti-join and the gates
       // run once
       val fresh = StageCache.checkpoint(batchSk match {
@@ -705,70 +671,28 @@ object CorpusStream {
       // writer id makes reclaiming it safe.
       if (fs.exists(delta) && !fs.exists(new Path(delta, "_SUCCESS")))
         fs.delete(delta, true)
-      val baseRows =
-        if (!nearDup) fresh.select(col("text_fp"))
-        else {
-          // fp rows + this batch's band rows in ONE atomic delta: the
-          // probe and the exact tier advance together or not at all
-          val fpRows = fresh.select(col("text_fp"), col("doc_id"),
-            lit(null).cast(IntegerType).as("band"), lit(null).cast(StringType).as("bh"))
-          val bands = SketchOps.bandRows(SketchOps.minhashSignatures(
-              fresh.withColumn("source", lit("batch"))))
-            .select(lit(null).cast(StringType).as("text_fp"), col("doc_id"),
-              col("band"), col("bh"))
-          fpRows.unionByName(bands)
-        }
-      val spanDeltaRows =
-        if (!spanGate) baseRows
-        else {
-          // accepted docs' span counts join the SAME atomic delta: the
-          // span gate advances in lockstep with the exact/near tiers
-          val spans = TextOps.spanShingleRows(
-              fresh.select(col("doc_id"), split(col("text"), " ").as("arr")),
-              TextOps.SpanK)
-            .groupBy(col("fp")).agg(count(lit(1)).as("sn"))
-            .select(col("fp").as("sfp"), col("sn"))
-          val spanRows = baseRows.columns.foldLeft(spans)((df, c) =>
-            df.withColumn(c, lit(null).cast(baseRows.schema(c).dataType)))
-          baseRows
-            .withColumn("sfp", lit(null).cast(LongType))
-            .withColumn("sn", lit(null).cast(LongType))
-            .unionByName(spanRows)
-        }
-      val deltaRows =
-        if (!containGate && !syndGate) spanDeltaRows
-        else {
-          // accepted docs' sketch elements join the SAME atomic delta: the
-          // containment probe advances in lockstep with every other tier.
-          // csz/csource ride along for the syndication gate's estimate and
-          // source-inequality stages (null source when the frame has none —
-          // such history compares as cross-source, conservatively).
-          val srcCol = if (fresh.columns.contains("source")) col("source")
-            else lit(null).cast(StringType)
-          // accepted docs' sketches: restrict the once-per-batch sketch to
-          // the accepted ids when it exists (sketches are per-doc, so the
-          // restriction equals re-sketching the survivors), else build
-          val acceptedSk = batchSk match {
-            case Some(sk) =>
-              sk.join(fresh.select(col("doc_id")), Seq("doc_id"), "left_semi")
-            case None => SketchOps.bottomKSketch(
-              fresh.withColumn("source", srcCol))
-          }
-          val cks = acceptedSk
-            .select(col("doc_id"), explode(col("bk")).as("ck"),
-              col("sz").as("csz"), col("source").as("csource"))
-          val prior =
-            if (spanDeltaRows.columns.contains("doc_id")) spanDeltaRows
-            else spanDeltaRows.withColumn("doc_id", lit(null).cast(LongType))
-          val ckRows = prior.columns.filterNot(_ == "doc_id")
-            .foldLeft(cks)((df, c) =>
-              df.withColumn(c, lit(null).cast(prior.schema(c).dataType)))
-          prior.withColumn("ck", lit(null).cast(LongType))
-            .withColumn("csz", lit(null).cast(LongType))
-            .withColumn("csource", lit(null).cast(StringType))
-            .unionByName(ckRows)
-        }
-      deltaRows.write.mode(SaveMode.ErrorIfExists).parquet(delta.toString)
+      // every tier's rows for the accepted docs go into ONE atomic delta,
+      // so the exact tier and every probe advance together or not at all
+      val fpRows = fresh.select(col("text_fp"), col("doc_id"))
+      val bandRows = Option.when(nearDup)(SketchOps.bandRows(
+        SketchOps.minhashSignatures(fresh.withColumn("source", lit("batch")))))
+      val spanRows = Option.when(spanGate)(TextOps.spanShingleRows(
+          fresh.select(col("doc_id"), split(col("text"), " ").as("arr")), TextOps.SpanK)
+        .groupBy(col("fp").as("sfp")).agg(count(lit(1)).as("sn")))
+      val ckRows = Option.when(containGate || syndGate) {
+        // the once-per-batch sketch restricted to the accepted ids equals
+        // re-sketching the survivors (sketches are per-doc); without it,
+        // sketch them. A frame with no source column indexes a null
+        // csource, which later compares as cross-source (conservative)
+        val acceptedSk = batchSk.fold(SketchOps.bottomKSketch(
+            if (fresh.columns.contains("source")) fresh
+            else fresh.withColumn("source", lit(null).cast(StringType))))(
+          _.join(fresh.select(col("doc_id")), Seq("doc_id"), "left_semi"))
+        acceptedSk.select(col("doc_id"), explode(col("bk")).as("ck"),
+          col("sz").as("csz"), col("source").as("csource"))
+      }
+      (fpRows +: Seq(bandRows, spanRows, ckRows).flatten).map(asDelta).reduce(_ union _)
+        .write.mode(SaveMode.ErrorIfExists).parquet(delta.toString)
     }
   }
 

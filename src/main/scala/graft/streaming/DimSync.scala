@@ -418,8 +418,10 @@ object DimSync {
       // task writes its own file into every bucket dir (tasks × buckets
       // small files per version), and the NEXT merge pays the listing +
       // footer cost — one extra keyed shuffle of a dimension-sized frame
-      // buys one file per bucket
+      // buys one file per bucket. The in-file order is pinned too, so the
+      // same merge writes the same parquet bytes on every run
       .repartition(col("bucket"))
+      .sortWithinPartitions(col("bucket"), col("customer_id"), col("valid_from"))
     val root = new Path(lakePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     commitVersion(fs, root, next, Scd2ManifestFile) { staging =>

@@ -133,21 +133,15 @@ object Realtime {
     * consumer loops the items for per-product/category rollups
     * (`consumer.py:317-325`). Declarative form: explode the array, keep
     * the struct fields, aggregate. Works identically on batch and
-    * streaming frames. */
-  val orderItemSchema: StructType = StructType(Seq(
-    StructField("product_id", LongType),
-    StructField("product_category", StringType),
-    StructField("price", DoubleType),
-    StructField("quantity", IntegerType)))
-
+    * streaming frames. The items follow [[EventBus.orderItemSchema]]. */
   def explodeOrderItems(orders: DataFrame): DataFrame =
     orders.select(col("*"), explode(col("items")).as("item"))
       .select(col("event_id"), col("ts"), col("user_id"),
         col("item.product_id").as("product_id"),
         col("item.product_category").as("product_category"),
-        col("item.price").as("price"),
+        col("item.product_price").as("price"),
         col("item.quantity").as("quantity"),
-        (col("item.price") * col("item.quantity")).as("line_value"))
+        (col("item.product_price") * col("item.quantity")).as("line_value"))
 
   /** ST4-adjacent: per-category revenue over exploded items. */
   def categoryRevenue(orders: DataFrame): DataFrame =

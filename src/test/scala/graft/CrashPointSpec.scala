@@ -1,11 +1,13 @@
 package graft
 
+import java.io.File
 import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, FilterFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
+import org.apache.spark.sql.DataFrame
 
 import graft.sources.Sinks
 import graft.streaming.{CorpusStream, DimSync}
@@ -41,7 +43,10 @@ private class FaultyFs(failAt: Int, after: Boolean)
   * (`DimSync.commitVersion`) and the small-file writer. For each N the
   * primitive runs on fresh state with its Nth file-system mutation
   * crashing; the caller's next pass then runs, and readers must see
-  * exactly the old contents or the new ones, with no staging left. */
+  * exactly the old contents or the new ones, with no staging left.
+  * `CorpusStream.ingestBatch` writes its delta straight into its slot
+  * with a Spark job, so its crash states are built by hand instead: one
+  * after each driver-side commit step. */
 class CrashPointSpec extends SparkSpec {
 
   private val local = FileSystem.getLocal(new Configuration())
@@ -158,5 +163,94 @@ class CrashPointSpec extends SparkSpec {
       assert(CorpusStream.storeBuckets(spark, p.getParent.toString) == 64)
     }
     assert(points == 2) // temp create, rename
+  }
+
+  test("CorpusStream.ingestBatch: a crash after each commit step replays to the uncrashed store and index") {
+    import org.apache.commons.io.FileUtils
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val body = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    // (writer, batchId, every gate on, rows): two gated batches of one
+    // writer, then an exact-only writer on the same index
+    val batches = Seq(
+      ("w", 0L, true, Seq((1L, body, "agg"),
+        (2L, "one two three four five six seven eight nine ten", "wire"))),
+      ("w", 1L, true, Seq((3L, body.replace("kappa", "lambda"), "wire"), // near-dup of 1
+        (4L, "a fresh third document body with plenty of distinct tokens in it", "misc"))),
+      ("x", 0L, false, Seq((5L, body, "misc"), // exact dup of 1
+        (6L, "the exact-only writer lands one more novel accepted document body", "misc"))))
+    def ingest(dir: File, k: Int): Unit = {
+      val (writer, id, gates, rows) = batches(k)
+      CorpusStream.ingestBatch(spark, s"$dir/idx", s"$dir/out", writer, nearDup = gates,
+        spanGate = gates, containGate = gates, syndGate = gates)(
+        rows.toDF("doc_id", "text", "source"), id)
+    }
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def snapshot(dir: File) = Seq(
+      rows(spark.read.parquet(s"$dir/out").select("writer", "batch", "doc_id", "text_fp")),
+      rows(CorpusStream.readIndex(spark, s"$dir/idx")),
+      rows(CorpusStream.readBandIndex(spark, s"$dir/idx")),
+      rows(CorpusStream.readSpanIndex(spark, s"$dir/idx")),
+      rows(CorpusStream.readContainIndex(spark, s"$dir/idx")))
+    def deltaDirs(dir: File) = new File(s"$dir/idx").listFiles().filter(_.isDirectory).toSeq
+    def deltaDir(dir: File, k: Int) =
+      deltaDirs(dir).filter(_.getName.endsWith(s"_${batches(k)._1}_b${batches(k)._2}")).head
+
+    // the uncrashed run, with a copy of its state after each batch
+    val root = Files.createTempDirectory("graft_ingest_crash").toFile
+    val ref = new File(root, "ref")
+    val after = batches.indices.map { k =>
+      ingest(ref, k)
+      val copy = new File(root, s"after$k")
+      FileUtils.copyDirectory(ref, copy)
+      copy
+    }
+    val want = snapshot(ref)
+    assert(spark.read.parquet(s"$ref/out").select("doc_id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 4L, 6L), "the near-dup and the exact dup must be rejected")
+    assert(want.forall(_.nonEmpty), "every reader must see rows")
+
+    // every delta, gated or exact-only, is written in the one delta format
+    val parts = deltaDirs(ref).flatMap(_.listFiles()).filter(_.getName.startsWith("part-"))
+    assert(deltaDirs(ref).size == 3 && parts.nonEmpty)
+    for (f <- parts) {
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new Path(f.toString), spark.sparkContext.hadoopConfiguration))
+      val cols = try reader.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName)
+        finally reader.close()
+      assert(cols == CorpusStream.FullDeltaSchema.fieldNames.toSeq,
+        s"${f.getParentFile.getName}/${f.getName}")
+    }
+
+    // the state a crash leaves right after each driver-side step of batch k
+    val crashes = Seq[(String, (File, Int) => Unit)](
+      "store batch written" -> { (dir, k) =>
+        FileUtils.deleteDirectory(deltaDir(dir, k))
+        // the first batch is the one that stamps the bucket marker
+        if (k == 0) new File(s"$dir/out").listFiles()
+          .filter(_.getName.contains("_graft_buckets")).foreach(f => assert(f.delete()))
+      },
+      "bucket marker stamped" -> { (dir, k) => FileUtils.deleteDirectory(deltaDir(dir, k)) },
+      "partial delta dir" -> { (dir, k) =>
+        val d = deltaDir(dir, k)
+        d.listFiles().filter(_.getName.contains("_SUCCESS")).foreach(f => assert(f.delete()))
+        d.listFiles().filter(_.getName.startsWith("part-")).take(1).foreach(f => assert(f.delete()))
+        assert(new File(d, "_temporary/0").mkdirs())
+      },
+      "delta committed" -> { (_, _) => () })
+    for (k <- batches.indices; (step, crash) <- crashes)
+      withClue(s"batch $k, crash after '$step': ") {
+        val dir = new File(root, s"crash$k-${step.replace(' ', '_')}")
+        FileUtils.copyDirectory(after(k), dir)
+        crash(dir, k)
+        (k until batches.size).foreach(ingest(dir, _)) // replay k, then the rest
+        assert(snapshot(dir) == want)
+        assert(deltaDirs(dir).forall(d => new File(d, "_SUCCESS").exists),
+          s"a partial delta dir is left: ${deltaDirs(dir).map(_.getName)}")
+        assert(!Files.walk(dir.toPath).iterator().asScala.exists(_.getFileName.toString == "_temporary"))
+      }
+    FileUtils.deleteQuietly(root)
   }
 }

@@ -10,7 +10,7 @@ import graft.operators.TopK
 import graft.streaming.Realtime
 
 case class OrderItem(product_id: Long, product_category: String,
-    price: Double, quantity: Int)
+    product_price: Double, quantity: Int)
 case class OrderEvent(event_id: Long, ts: Timestamp, user_id: Long,
     items: Seq[OrderItem])
 

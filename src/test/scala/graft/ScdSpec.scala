@@ -206,6 +206,34 @@ class ScdSpec extends SparkSpec {
     assert(travel.exceptAll(wantBase).isEmpty && wantBase.exceptAll(travel).isEmpty)
   }
 
+  test("mergeScd2 writes each bucket file in (customer_id, valid_from) order") {
+    import scala.jdk.CollectionConverters._
+    import graft.streaming.DimSync
+    val lake = java.nio.file.Files
+      .createTempDirectory("scd2_order").toString + "/hist"
+    val batch = Tables.orders(spark, sfDir)
+      .groupBy(col("o_custkey"), col("o_orderdate"))
+      .agg(max_by(col("o_orderpriority"), col("o_orderkey")).as("prio"))
+    // uncoalesced, each bucket gathers rows from several upstream tasks,
+    // as it does at scale, so nothing but the merge's own sort orders them
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try DimSync.mergeScd2(spark, lake, batch, nBuckets = 4)
+    finally spark.conf.set(coalesce, prev)
+    // the same merge must write the same bytes: row order inside a file
+    // changes parquet's encoded size, so it is pinned
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(lake)).iterator().asScala
+      .map(_.toString).filter(_.endsWith(".parquet")).toSeq
+    assert(files.size == 4)
+    for (f <- files) {
+      val keys = spark.read.parquet(f)
+        .select(col("customer_id").cast("long"), col("valid_from").cast("long"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(keys.size > 1 && keys == keys.sorted, s"$f is not in (customer_id, valid_from) order")
+    }
+  }
+
   test("mergeScd2 crash atomicity: a dead writer's partial version never serves; the retry self-heals") {
     import spark.implicits._
     import graft.streaming.DimSync

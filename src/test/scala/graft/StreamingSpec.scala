@@ -813,6 +813,21 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("index deltas in the older narrow layouts stay readable: absent columns read as null") {
+    import graft.streaming.CorpusStream
+    val idx = java.nio.file.Files.createTempDirectory("graft_narrowidx").toString
+    // an exact-only delta (text_fp alone) and a pre-syndication sketch
+    // delta (doc_id, ck), each committed with its _SUCCESS marker
+    Seq("fp1", "fp2").toDF("text_fp").write.parquet(s"$idx/v0_old_b0")
+    Seq((7L, 70L), (7L, 71L)).toDF("doc_id", "ck").write.parquet(s"$idx/v1_old_b1")
+    def sorted(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(sorted(CorpusStream.readIndex(spark, idx)) == Seq("[fp1]", "[fp2]"))
+    assert(sorted(CorpusStream.readContainIndex(spark, idx)) ==
+      Seq("[7,70,null,null]", "[7,71,null,null]"))
+    assert(CorpusStream.readBandIndex(spark, idx).isEmpty)
+    assert(CorpusStream.readSpanIndex(spark, idx).isEmpty)
+  }
+
   test("near-dup streaming ingest: band index rejects near-dups across batches, restarts, writers") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.CorpusStream
