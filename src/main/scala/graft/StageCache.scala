@@ -23,14 +23,16 @@ import org.apache.spark.sql.execution.LogicalRDD
   * The Runner layers each run in a scope: their pins have no reader once
   * the layer has committed its outputs.
   *
-  * Pins. [[pin]] is the only `cache` in the program outside the census
-  * mains, and [[checkpoint]] the owned `localCheckpoint`: a function's
+  * Pins. [[pin]] is the only `cache` and [[snapshot]] the only
+  * `localCheckpoint` in the program outside the census mains, so the
+  * cache-or-checkpoint choice is made here alone. A function's
   * multiply-read frame gets the lifetime of the open scope, so no caller
-  * frees what a callee pinned. A pin taken while a stage builds belongs
-  * to that build and is released when the build returns, since the stage
-  * is an eager snapshot that no longer reads it. A stage built inside
-  * another stage's build keeps the owner it would have had without that
-  * build: the open scope, or the session.
+  * frees what a callee pinned. A pin taken while a snapshot or a stage
+  * builds belongs to that build and is released when the build returns,
+  * since the result is an eager snapshot that no longer reads it; an
+  * iterative operator built as one snapshot frees its rounds that way. A
+  * stage built inside a build keeps the owner it would have had without
+  * it: the open scope, or the session.
   *
   * At 100 TB this is the "silver table" pattern: the shared stage is a
   * persisted intermediate dataset, not a per-query recompute; here the
@@ -39,7 +41,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 object StageCache {
 
   /** An open lifetime; see [[scoped]]. A build's scope (`build`, see
-    * [[cached]]) holds only the pins its build takes; the stages built or
+    * [[snapshot]]) holds only the pins its build takes; the stages built or
     * read in it go to `outer`, the scope they would have had without the
     * build (None: the session). */
   final class Scope private[StageCache] (private[StageCache] val spark: SparkSession,
@@ -106,24 +108,32 @@ object StageCache {
       cached
     }
 
-  /** `df.localCheckpoint()` — an eager snapshot — owned like a [[pin]]:
-    * released when the open scope closes or the stage build returns.
-    * Outside both nothing holds it, so the ContextCleaner reclaims it once
-    * the frame is unreferenced. */
-  def checkpoint(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint()
-    synchronized(own(new Pinned(df.sparkSession, null, cp, () => unpersistCheckpoint(cp))))
-    cp
-  }
+  /** An eager snapshot (`localCheckpoint`) of the frame `body` builds,
+    * owned like a [[pin]]: released when the open scope closes or the
+    * enclosing build returns. Outside both nothing holds it, so the
+    * ContextCleaner reclaims it once the frame is unreferenced. `body`
+    * runs as a build: every [[pin]] and snapshot it takes is released
+    * once the result is materialized, while a stage it builds keeps its
+    * owner. */
+  def snapshot(spark: SparkSession)(body: => DataFrame): DataFrame =
+    synchronized(own(materialize(spark, null)(body))).df
+
+  /** [[snapshot]] of a frame already built. */
+  def checkpoint(df: DataFrame): DataFrame = snapshot(df.sparkSession)(df)
 
   /** Drop every stage owned by `spark` — the cold-path bench hook
     * (SPARK_GRAFT_COLD): clearing before each timed pass makes a tiered
     * query pay its shared-stage build cost, so the bench board carries
     * both the deployed (persisted-silver) number and the from-scratch
-    * one. The checkpoint blocks release via the ContextCleaner once the
-    * dropped frames are GC'd. */
-  def clear(spark: SparkSession): Unit = synchronized {
-    stages.filterInPlace((_, p) => p.spark ne spark)
+    * one. The dropped session stages are released at once; a stage an
+    * open scope owns is left to that scope. */
+  def clear(spark: SparkSession): Unit = {
+    val dropped = synchronized {
+      val mine = stages.filter(_._2.spark eq spark)
+      stages --= mine.keys
+      mine.values.filter(_.owners.isEmpty).toList
+    }
+    if (!spark.sparkContext.isStopped) dropped.foreach(_.release())
   }
 
   /** Build-once per (session, dir, tag): returns the eagerly
@@ -133,9 +143,8 @@ object StageCache {
     * cached stage (q52_intervals builds on q52_changes), so the build
     * runs OUTSIDE the lock. The get → build → put race can at worst
     * build a stage twice concurrently (same deterministic result); the
-    * loser's blocks are released at once. The build runs in its own
-    * scope: every [[pin]] and [[checkpoint]] it takes is released once the
-    * stage is materialized, while a stage it builds on keeps its owner. */
+    * loser's blocks are released at once. The build is a [[snapshot]]'s:
+    * what it pins is released once the stage is materialized. */
   def cached(spark: SparkSession, dir: String, tag: String)
       (build: => DataFrame): DataFrame = {
     val key = s"${sessionKey(spark)}:$dir:$tag"
@@ -147,9 +156,7 @@ object StageCache {
       stages.get(key).map(touch)
     }
     hit.map(_.df).getOrElse {
-      val df = open(new Scope(spark, build = true, outer = stageScope))(
-        build.localCheckpoint())
-      val built = new Pinned(spark, key, df, () => unpersistCheckpoint(df))
+      val built = materialize(spark, key)(build)
       val winner = synchronized {
         stages.get(key).map(touch).getOrElse {
           stages(key) = built
@@ -159,6 +166,13 @@ object StageCache {
       if (winner ne built) built.release()
       winner.df
     }
+  }
+
+  /** `body`, localCheckpointed in a build scope that releases what the
+    * build pinned; the result has no owner yet. */
+  private def materialize(spark: SparkSession, key: String)(body: => DataFrame): Pinned = {
+    val df = open(new Scope(spark, build = true, outer = stageScope))(body.localCheckpoint())
+    new Pinned(spark, key, df, () => unpersistCheckpoint(df))
   }
 
   /** Where a stage built or read on this thread belongs: the innermost

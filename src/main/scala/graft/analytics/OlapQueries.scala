@@ -708,37 +708,13 @@ object OlapQueries {
   // Scale shape: the pair blow-up is order-keyed (k²/2 per order, k
   // bounded by validation); each of the 10 iterations is ONE keyed
   // shuffle of the edge frame joined to a node-sized rank frame —
-  // GraphX-Pregel's cost without leaving the DataFrame planner. Edge and
-  // rank frames are localCheckpoint-pinned per round (d23's discipline:
-  // lineage stays flat, block loss fails loudly rather than resampling).
+  // GraphX-Pregel's cost without leaving the DataFrame planner. The edge
+  // frame is pinned once and the rank rounds are snapshotted (d23's
+  // discipline: lineage stays flat, block loss fails loudly rather than
+  // resampling), all inside one snapshot of the result.
   // ---------------------------------------------------------------------
   private val PrIters = 10
   private val PrStep = "(((r * 850) div 1000) * w) div wtot"
-
-  /** Conf key for the checkpoint CADENCE of iterative operators.
-    * Default 0 = fixed-count mode pins (`localCheckpoint`) every SECOND
-    * iteration, chaining the round in between lazily — half the
-    * scheduling barriers of the old one-pin-per-round form at a plan
-    * depth of 2 (r19, guide §1.2). Both extremes were measured and
-    * rejected on q51 (sf0.1, interleaved A/B, q03 control flat):
-    * one pin per round 8.47/10.14 s, fully lazy chain with only the
-    * final pin 9.18 s (analyzer/optimizer time over ten inlined copies
-    * of the edge-frame lineage eats the job-launch saving), cadence-2
-    * 8.24/8.30 s. Recompute-on-block-loss re-runs deterministic
-    * arithmetic over the persisted edge frame — safe, merely slow.
-    * The ε-exit mode (`ConvergeEpsKey` ≥ 0) still pins every iteration:
-    * its convergence probe is an action per round regardless, and the
-    * delta join must read two MATERIALIZED rank frames. Setting N > 0
-    * switches to RELIABLE checkpoints (requires
-    * `sparkContext.setCheckpointDir` on shared storage) every N
-    * iterations, with plain lineage in between: executor loss recomputes
-    * at most N iterations from the last durable snapshot instead of
-    * failing, at the cost of a checkpoint-dir write per N rounds.
-    * A 1000-executor deployment sets N≈3 and a DFS checkpoint dir; the
-    * local gate keeps the default. All cadence modes are bit-identical
-    * (GraphRankSpec pins it — the update is a deterministic function of
-    * the previous vector, so WHERE the chain is cut cannot change it). */
-  private[graft] val CkptEveryKey = "graft.iter.checkpointEvery"
 
   /** Conf key for the convergence EARLY-EXIT of iterative operators
     * (r16 verdict #6). Default −1 = off: exactly `maxIters` iterations
@@ -758,83 +734,82 @@ object OlapQueries {
   /** Damped weighted PageRank over undirected pairs (pa, pb, w):
     * returns (node, r, wtot) in micro-units. Extracted so the spec can
     * drive a hand-checkable graph through the exact production
-    * arithmetic. Iteration pinning follows [[CkptEveryKey]]; early
-    * exit follows [[ConvergeEpsKey]]; GraphRankSpec proves cadence
-    * modes bit-identical and the ε-exit equal to its fixed-count twin. */
+    * arithmetic. Early exit follows [[ConvergeEpsKey]]; GraphRankSpec
+    * proves the ε-exit equal to its fixed-count twin. */
   private[graft] def weightedPageRank(pairs: DataFrame,
       maxIters: Int = PrIters): DataFrame =
     weightedPageRankConverged(pairs, maxIters)._1
 
   /** [[weightedPageRank]] plus the number of iterations actually
-    * executed (for the convergence census and the ε-exit spec). */
+    * executed (for the convergence census and the ε-exit spec).
+    *
+    * The whole loop is one [[graft.StageCache.snapshot]]: the result is
+    * materialized once and every frame the loop pinned (pairs, wtot,
+    * edges, at most `maxIters` node-sized rank rounds) is released when
+    * it returns. Fixed-count mode snapshots every SECOND round, chaining
+    * the round in between lazily: half the scheduling barriers of one
+    * snapshot per round at a plan depth of 2 (r19, guide §1.2). Both
+    * extremes were measured and rejected on q51 (sf0.1, interleaved A/B,
+    * q03 control flat): one snapshot per round 8.47/10.14 s, a fully
+    * lazy chain 9.18 s (analyzer/optimizer time over ten inlined copies
+    * of the edge-frame lineage eats the job-launch saving), every second
+    * round 8.24/8.30 s. The ε-exit mode snapshots every round: its
+    * convergence probe is an action per round regardless, and the delta
+    * join reads two materialized rank frames. Where the chain is cut
+    * cannot change the result: the update is a deterministic function of
+    * the previous vector. */
   private[graft] def weightedPageRankConverged(pairs: DataFrame,
       maxIters: Int = PrIters): (DataFrame, Int) = {
-    val conf = pairs.sparkSession.conf
-    val every = conf.get(CkptEveryKey, "0").toInt
-    val eps = conf.get(ConvergeEpsKey, "-1").toLong
-    def pinBase(df: DataFrame): DataFrame =
-      if (every > 0) df.checkpoint() else df.localCheckpoint()
-    // fixed-count mode at the default cadence: pin every SECOND round
-    // (and always the last), chaining the round in between lazily —
-    // half the scheduling barriers at plan depth 2 (measured trade in
-    // CkptEveryKey's scaladoc). The ε-exit mode keeps per-iteration
-    // pins: its probe is an action per round anyway and the delta join
-    // reads two materialized frames.
-    val lazyChain = every == 0 && eps < 0
-    def pinIter(df: DataFrame, i: Int): DataFrame =
-      if (lazyChain) { if (i == maxIters || i % 2 == 0) df.localCheckpoint() else df }
-      else if (every == 0) df.localCheckpoint()
-      else if (i % every == 0) df.checkpoint()
-      else df // lineage depth bounded by the cadence
-    // pin the PAIR frame first (r19): edges0 references it twice (the
-    // union) and is itself consumed by both the wtot aggregate and the
-    // edge-frame build — without the pin the corpus-scale pair build
-    // (lineitem scan → per-order collect_set → pair explode → pair
-    // aggregate) executed once for the wt pin and AGAIN when the edge
-    // persist materialized. One build, every consumer reads the pin.
-    val pairsP = pinBase(pairs)
-    val edges0 = pairsP.select(col("pa").as("src"), col("pb").as("dst"), col("w"))
-      .union(pairsP.select(col("pb").as("src"), col("pa").as("dst"), col("w")))
-    // node-sized; pinned so the final rank⋈wtot join reads the
-    // materialized frame instead of re-scanning the corpus for edges0
-    val wt = pinBase(edges0.groupBy(col("src")).agg(sum(col("w")).as("wtot")))
-    // The edge frame is the BIG side of every iteration's join, so its
-    // physical layout decides the per-iteration cost. A checkpoint here
-    // would erase the partitioning (LogicalRDD resurfaces as
-    // UnknownPartitioning — measured in plans/r18/q51_*_before.txt: every
-    // iteration re-Exchanged AND re-Sorted the full edge frame, 2 extra
-    // edge-frame passes × 10 rounds). Instead: shuffle ONCE onto the join
-    // key, sort within partitions, and pin (cache) — the cached plan keeps
-    // HashPartitioning(src)+ordering visible (AQE leaves cached-plan
-    // partitioning alone by default), so each iteration's join only
-    // exchanges the NODE-sized rank frame and the edge side streams with
-    // no Exchange and no Sort (guide §2.4: establish a partitioning once,
-    // share it across every consumer). Recompute-on-block-loss is
-    // deterministic (no sampling anywhere upstream), so a pin is as
-    // safe as the checkpoint it replaces.
-    // The pin lives for the loop: the FINAL rank frame is pinned in every
-    // cadence mode (lazy mode pins exactly it; the others pinned each
-    // round), so the edge frame has no consumer past it.
-    val (ranks, iters) = graft.StageCache.scoped(pairs.sparkSession) {
+    val eps = pairs.sparkSession.conf.get(ConvergeEpsKey, "-1").toLong
+    var iters = 0
+    val ranked = graft.StageCache.snapshot(pairs.sparkSession) {
+      // snapshot the PAIR frame first (r19): edges0 references it twice
+      // (the union) and is itself consumed by both the wtot aggregate and
+      // the edge-frame build — without it the corpus-scale pair build
+      // (lineitem scan → per-order collect_set → pair explode → pair
+      // aggregate) executed once per consumer
+      val pairsP = graft.StageCache.checkpoint(pairs)
+      val edges0 = pairsP.select(col("pa").as("src"), col("pb").as("dst"), col("w"))
+        .union(pairsP.select(col("pb").as("src"), col("pa").as("dst"), col("w")))
+      // node-sized; snapshotted so the final rank⋈wtot join reads the
+      // materialized frame instead of re-scanning the corpus for edges0
+      val wt = graft.StageCache.checkpoint(
+        edges0.groupBy(col("src")).agg(sum(col("w")).as("wtot")))
+      // The edge frame is the BIG side of every iteration's join, so its
+      // physical layout decides the per-iteration cost. A snapshot here
+      // would erase the partitioning (LogicalRDD resurfaces as
+      // UnknownPartitioning — measured in plans/r18/q51_*_before.txt:
+      // every iteration re-Exchanged AND re-Sorted the full edge frame,
+      // 2 extra edge-frame passes × 10 rounds). Instead: shuffle ONCE onto
+      // the join key, sort within partitions, and pin (cache) — the cached
+      // plan keeps HashPartitioning(src)+ordering visible (AQE leaves
+      // cached-plan partitioning alone by default), so each iteration's
+      // join only exchanges the NODE-sized rank frame and the edge side
+      // streams with no Exchange and no Sort (guide §2.4: establish a
+      // partitioning once, share it across every consumer).
+      // Recompute-on-block-loss is deterministic (no sampling anywhere
+      // upstream), so a pin is as safe as a snapshot.
       val edges = graft.StageCache.pin(edges0.join(wt, Seq("src"))
         .repartition(col("src")).sortWithinPartitions(col("src")))
-      var ranks = pinBase(
+      var ranks = graft.StageCache.checkpoint(
         wt.select(col("src").as("node"), lit(1000000L).as("r")))
       var i = 1
       var converged = false
       while (i <= maxIters && !converged) {
-        val next = pinIter(edges.join(ranks, col("src") === col("node"))
+        val round = edges.join(ranks, col("src") === col("node"))
           .select(col("dst"), expr(PrStep).as("c"))
           .groupBy(col("dst"))
           .agg((lit(150000L) + sum(col("c"))).as("r"))
-          .select(col("dst").as("node"), col("r")), i)
+          .select(col("dst").as("node"), col("r"))
+        val next =
+          if (eps >= 0 || i % 2 == 0) graft.StageCache.checkpoint(round) else round
         if (eps >= 0) {
-          // node-sized join of two pinned frames — no edge re-shuffle.
-          // Node sets are identical by construction (every node of the
-          // undirected graph receives base mass each round).
+          // node-sized join of two snapshotted frames — no edge
+          // re-shuffle. Node sets are identical by construction (every
+          // node of the undirected graph receives base mass each round).
           val row = next.as("n")
             .join(ranks.select(col("node"), col("r").as("rp")), Seq("node"))
-            .agg(max(abs(col("r") - col("rp")))).head
+            .agg(max(abs(col("r") - col("rp")))).head()
           // an empty graph aggregates max() to one NULL row — an empty
           // node set is converged by definition, not an NPE (ADVICE r17)
           converged = row.isNullAt(0) || row.getLong(0) <= eps
@@ -842,10 +817,11 @@ object OlapQueries {
         ranks = next
         i += 1
       }
-      (ranks, i - 1)
+      iters = i - 1
+      ranks.join(wt, col("node") === col("src"))
+        .select(col("node"), col("r"), col("wtot"))
     }
-    (ranks.join(wt, col("node") === col("src"))
-      .select(col("node"), col("r"), col("wtot")), iters)
+    (ranked, iters)
   }
 
   /** q51's weighted co-purchase edge frame (shared with GraphBench).
@@ -1051,11 +1027,12 @@ object OlapQueries {
       // per-year pin: the batch feeds several merge subtrees, and a bare
       // filter over the all-years pinned blocks would re-scan every
       // year's blocks per subtree — pin the slice so subtrees scan only it
-      val batch = pinned.filter(col("__y") === y).drop("__y").localCheckpoint()
-      // localCheckpoint truncates the fold's growing lineage (the q51
-      // discipline); one batch per year keeps the chain short
-      Some(hist.fold(scd2Intervals(batch))(h =>
-        scd2Merge(h, batch)).localCheckpoint())
+      val batch = graft.StageCache.checkpoint(
+        pinned.filter(col("__y") === y).drop("__y"))
+      // a snapshot per merge truncates the fold's growing lineage (the
+      // q51 discipline); one batch per year keeps the chain short
+      Some(graft.StageCache.checkpoint(
+        hist.fold(scd2Intervals(batch))(h => scd2Merge(h, batch))))
     }
     folded.get.orderBy(col("customer_id"), col("version_no"))
   }
@@ -1085,7 +1062,8 @@ object OlapQueries {
     years.foreach { y =>
       // per-year pin, same rationale as q52b's: four subtrees per merge
       // must not each re-scan every year's pinned blocks
-      val batch = pinned.filter(col("__y") === y).drop("__y").localCheckpoint()
+      val batch = graft.StageCache.checkpoint(
+        pinned.filter(col("__y") === y).drop("__y"))
       graft.streaming.DimSync.mergeScd2(spark, lake, batch, nBuckets = 16)
     }
     graft.streaming.DimSync.scd2Snapshot(spark, lake)

@@ -97,31 +97,42 @@ object CorpusPrep {
   def d13CorpusPrep(spark: SparkSession, dir: String): DataFrame = {
     // 1. quality gate (shared stage)
     val (filtered, sig, sh) = sharedStages(spark, dir)
-    // 2. exact dedup: min doc_id per content fingerprint
+    split(dedup(filtered, sig, sh))
+  }
+
+  /** Exact dedup (min doc_id per content fingerprint), then MinHash-LSH
+    * near-dedup over the survivors only, on the shared signature/shingle
+    * frames restricted to the survivor set. */
+  private def dedup(filtered: DataFrame, sig: DataFrame, sh: DataFrame): DataFrame = {
     val reps = filtered
       .groupBy(md5(col("text")).as("__fp"))
       .agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
-    // read thrice: two survivor-id filters AND the surviving-doc side
-    val exactDeduped = graft.StageCache.pin(filtered.join(reps, Seq("doc_id"), "left_semi"))
-    // 3. near-dedup over survivors only, on the shared signature/shingle
-    //    frames restricted to the survivor set
+    // snapshot: exactDeduped feeds the survivor-id filters AND the
+    // survivor side, and its derivation includes the gate's aggregates —
+    // without it those shuffle rounds would run per consumer (the LSH
+    // internals take separate actions, so single-plan exchange reuse
+    // cannot cover them)
+    val exactDeduped = graft.StageCache.checkpoint(
+      filtered.join(reps, Seq("doc_id"), "left_semi"))
     val ids = exactDeduped.select(col("doc_id"))
     val drop = SketchOps.lshVerifiedPairs(
         sig.join(ids, Seq("doc_id"), "left_semi"),
         sh.join(ids, Seq("doc_id"), "left_semi"))
       .select(col("d2")).distinct()
-    val nearDeduped = exactDeduped
+    exactDeduped
       .join(broadcast(drop), col("doc_id") === col("d2"), "left_anti")
-    // 4. deterministic split
-    nearDeduped
+  }
+
+  /** The deterministic hash-bucket split (d10). */
+  private def split(docs: DataFrame): DataFrame =
+    docs
       .withColumn("bucket", TextOps.hashBucket(col("doc_id")))
       .withColumn("split",
         when(col("bucket") < TrainBuckets, "train").otherwise("eval"))
       .select(col("doc_id"), col("source"), col("n_tokens"), col("bucket"),
         col("split"))
       .orderBy(col("doc_id"))
-  }
 
   // ---------------------------------------------------------------------
   // d18 — the round-3 FULL pipeline: d13's stages plus the two gates a
@@ -157,39 +168,15 @@ object CorpusPrep {
     // semi-join below restricts to gate1 anyway)
     val repOk = QualityOps.docRepSigStage(spark, dir)
       .filter(col("flagged") === 0).select(col("doc_id"))
-    val filtered = gate1.join(repOk, Seq("doc_id"), "left_semi")
-    val reps = filtered
-      .groupBy(md5(col("text")).as("__fp"))
-      .agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"))
-    // snapshot: exactDeduped feeds the survivor-id filters AND the
-    // survivor side, and its derivation includes the repetition-signal
-    // aggregates — without the pin those shuffle rounds would run per
-    // consumer (the LSH internals take separate actions, so single-plan
-    // exchange reuse cannot cover them)
-    val exactDeduped = graft.StageCache.checkpoint(
-      filtered.join(reps, Seq("doc_id"), "left_semi"))
-    val ids = exactDeduped.select(col("doc_id"))
-    val drop = SketchOps.lshVerifiedPairs(
-        sig.join(ids, Seq("doc_id"), "left_semi"),
-        sh.join(ids, Seq("doc_id"), "left_semi"))
-      .select(col("d2")).distinct()
-    val nearDeduped = exactDeduped
-      .join(broadcast(drop), col("doc_id") === col("d2"), "left_anti")
+    val nearDeduped = dedup(gate1.join(repOk, Seq("doc_id"), "left_semi"), sig, sh)
     val contam = QualityOps.contamination(
         nearDeduped.select(col("doc_id"), col("source"), col("text")),
         TrainBuckets,
         sh0 = Some(QualityOps.docShh5Stage(spark, dir)))
       .filter(col("contaminated") === 1)
       .select(col("doc_id").as("__cd"))
-    nearDeduped
-      .join(broadcast(contam), col("doc_id") === col("__cd"), "left_anti")
-      .withColumn("bucket", TextOps.hashBucket(col("doc_id")))
-      .withColumn("split",
-        when(col("bucket") < TrainBuckets, "train").otherwise("eval"))
-      .select(col("doc_id"), col("source"), col("n_tokens"), col("bucket"),
-        col("split"))
-      .orderBy(col("doc_id"))
+    split(nearDeduped
+      .join(broadcast(contam), col("doc_id") === col("__cd"), "left_anti"))
   }
 
   lazy val d18Sql: String = {

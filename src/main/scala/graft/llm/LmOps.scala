@@ -104,8 +104,8 @@ object LmOps {
       .select(explode(col("tk")).as("tok"))
       .agg(countDistinct(col("tok")).cast(DoubleType).as("__v"))
 
-    val pairs = bigramRows(docsIn)
-      .localCheckpoint() // pinned: feeds the count stage AND the scoring join
+    // snapshotted: feeds the count stage AND the scoring join
+    val pairs = graft.StageCache.checkpoint(bigramRows(docsIn))
 
     val cnt = pairs.groupBy(col("w1h"), col("bh"))
       .agg(count(lit(1)).as("c12"))
@@ -315,11 +315,11 @@ object LmOps {
   // size, nowhere near 2^63.
   // ---------------------------------------------------------------------
   def d32SourceDivergence(spark: SparkSession, dir: String): DataFrame = {
-    val sc = Tables.documents(spark, dir)
+    // snapshotted: feeds corpus counts, source totals, and the term join
+    val sc = graft.StageCache.checkpoint(Tables.documents(spark, dir)
       .select(col("source"), explode(TextOps.tokens(col("text"))).as("tok"))
       .groupBy(col("source"), col("tok"))
-      .agg(count(lit(1)).as("nsw"))
-      .localCheckpoint() // feeds corpus counts, source totals, and the term join
+      .agg(count(lit(1)).as("nsw")))
 
     val corpus = sc.groupBy(col("tok")).agg(sum(col("nsw")).as("nw"))
     val srcTot = sc.groupBy(col("source")).agg(sum(col("nsw")).as("ns"))
@@ -518,11 +518,10 @@ object LmOps {
   /** Word-frequency table with char-symbol arrays — the shared trainer
     * prep (corpus touches this aggregate once; the loop below is
     * vocabulary-sized). */
-  private def bpeVocab(docs: DataFrame): DataFrame = docs
+  private def bpeVocab(docs: DataFrame): DataFrame = graft.StageCache.checkpoint(docs
     .select(explode(TextOps.tokens(col("text"))).as("word"))
     .groupBy(col("word")).agg(count(lit(1)).as("wc"))
-    .select(expr("concat(split(word, ''), array('</w>')) AS syms"), col("wc"))
-    .localCheckpoint()
+    .select(expr("concat(split(word, ''), array('</w>')) AS syms"), col("wc")))
 
   /** Stale adjacent-pair counts over the vocab, best-first (count desc,
     * then pair lexicographic — the deterministic total order), bounded
@@ -610,67 +609,75 @@ object LmOps {
     else usable.take(1).toSeq // single sequential step — always exact
   }
 
-  def bpeTrain(spark: SparkSession, docs: DataFrame, k: Int): DataFrame = {
-    import spark.implicits._
-    var vocab = bpeVocab(docs)
-    // conservative superset of every symbol the vocab can ever contain:
-    // the initial distinct symbols (alphabet-sized — one tiny job) plus
-    // each accepted merge's concat. selectBpeBatch refuses a batched
-    // merge whose merged symbol is already here, closing the
-    // string-collision gap in the exactness proof (ADVICE r11); a
-    // refused pair still merges via the single-step fallback, which is
-    // sequential by definition.
-    val known = scala.collection.mutable.Set.empty[String]
-    known ++= vocab.select(explode(col("syms")).as("s"))
-      .distinct().as[String].collect()
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var rounds = 0
-    var done = false
-    while (!done && merges.size < k) {
-      val top = pairHead(vocab, BpeScan + 1)
-      rounds += 1
-      val batch = selectBpeBatch(top, BpeScan, k - merges.size, known)
-      if (batch.isEmpty) done = true // nothing left worth merging
-      else {
-        batch.foreach { case (l, r, pc) =>
-          merges += ((merges.size + 1, l, r, pc))
-          known += (l + r)
+  /** Batched BPE training: K merges in far fewer rounds (see
+    * [[selectBpeBatch]]). Each round snapshots the rewritten vocab; the
+    * rounds are released when training returns, since the merge table is
+    * built on the driver. */
+  def bpeTrain(spark: SparkSession, docs: DataFrame, k: Int): DataFrame =
+    mergeTable(spark, graft.StageCache.scoped(spark) {
+      import spark.implicits._
+      var vocab = bpeVocab(docs)
+      // conservative superset of every symbol the vocab can ever contain:
+      // the initial distinct symbols (alphabet-sized — one tiny job) plus
+      // each accepted merge's concat. selectBpeBatch refuses a batched
+      // merge whose merged symbol is already here, closing the
+      // string-collision gap in the exactness proof (ADVICE r11); a
+      // refused pair still merges via the single-step fallback, which is
+      // sequential by definition.
+      val known = scala.collection.mutable.Set.empty[String]
+      known ++= vocab.select(explode(col("syms")).as("s"))
+        .distinct().as[String].collect()
+      val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+      var rounds = 0
+      var done = false
+      while (!done && merges.size < k) {
+        val top = pairHead(vocab, BpeScan + 1)
+        rounds += 1
+        val batch = selectBpeBatch(top, BpeScan, k - merges.size, known)
+        if (batch.isEmpty) done = true // nothing left worth merging
+        else {
+          batch.foreach { case (l, r, pc) =>
+            merges += ((merges.size + 1, l, r, pc))
+            known += (l + r)
+          }
+          // ONE rewrite plan applies the whole batch in rank order, then
+          // one snapshot truncates the round's lineage
+          vocab = graft.StageCache.checkpoint(batch.foldLeft(vocab) { case (df, (l, r, _)) =>
+            df.select(expr(applyMergeExpr(l, r)).as("syms"), col("wc"))
+          })
         }
-        // ONE rewrite plan applies the whole batch in rank order, then
-        // one checkpoint truncates the round's lineage
-        vocab = batch.foldLeft(vocab) { case (df, (l, r, _)) =>
-          df.select(expr(applyMergeExpr(l, r)).as("syms"), col("wc"))
-        }.localCheckpoint()
       }
-    }
-    lastBpeRounds = rounds
-    merges.toSeq
-      .toDF("rank", "left", "right", "pair_count")
-      .withColumn("merged", concat(col("left"), col("right")))
-      .select(col("rank"), col("left"), col("right"), col("merged"), col("pair_count"))
-      .orderBy(col("rank"))
-  }
+      lastBpeRounds = rounds
+      merges.toSeq
+    })
 
   /** The one-merge-per-round reference trainer — the definitional form
     * LmOpsSpec holds [[bpeTrain]]'s batched sequence to. */
   private[graft] def bpeTrainSequential(spark: SparkSession, docs: DataFrame,
-      k: Int): DataFrame = {
-    import spark.implicits._
-    var vocab = bpeVocab(docs)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var rank = 1
-    while (rank <= k) {
-      pairHead(vocab, 1).headOption match {
-        case Some((l, r, pc)) if pc >= 2 =>
-          merges += ((rank, l, r, pc))
-          vocab = vocab
-            .select(expr(applyMergeExpr(l, r)).as("syms"), col("wc"))
-            .localCheckpoint() // truncate lineage: K rounds, not a K-deep plan
-          rank += 1
-        case _ => rank = k + 1 // nothing left worth merging
+      k: Int): DataFrame =
+    mergeTable(spark, graft.StageCache.scoped(spark) {
+      var vocab = bpeVocab(docs)
+      val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+      var rank = 1
+      while (rank <= k) {
+        pairHead(vocab, 1).headOption match {
+          case Some((l, r, pc)) if pc >= 2 =>
+            merges += ((rank, l, r, pc))
+            // truncate lineage: K rounds, not a K-deep plan
+            vocab = graft.StageCache.checkpoint(
+              vocab.select(expr(applyMergeExpr(l, r)).as("syms"), col("wc")))
+            rank += 1
+          case _ => rank = k + 1 // nothing left worth merging
+        }
       }
-    }
-    merges.toSeq
+      merges.toSeq
+    })
+
+  /** The trained (rank, left, right, merged, pair_count) table. */
+  private def mergeTable(spark: SparkSession,
+      merges: Seq[(Int, String, String, Long)]): DataFrame = {
+    import spark.implicits._
+    merges
       .toDF("rank", "left", "right", "pair_count")
       .withColumn("merged", concat(col("left"), col("right")))
       .select(col("rank"), col("left"), col("right"), col("merged"), col("pair_count"))

@@ -87,14 +87,12 @@ object QualityOps {
           .withColumn("is_eval",
             TextOps.hashBucket(col("doc_id")) >= evalBucketMin))
     case None =>
-      // pinned: consumed by BOTH the eval-set branch and the training-side
-      // join — without the pin the window+hash shingle stage runs per
-      // branch. localCheckpoint, not cache: checkpoint blocks are released
-      // by the ContextCleaner once the consumer drops the frame, where a
-      // cache here would pin the whole corpus' shingles in executor
-      // storage for the life of the session with no owner to unpersist it.
+      // snapshotted: consumed by BOTH the eval-set branch and the
+      // training-side join — without it the window+hash shingle stage
+      // runs per branch. It lives for the caller's scope; outside one the
+      // ContextCleaner reclaims it once the consumer drops the frame.
       contaminationFromShingles(
-        shingleStage(docs, evalBucketMin).localCheckpoint())
+        graft.StageCache.checkpoint(shingleStage(docs, evalBucketMin)))
   }
 
   /** The (doc_id, shh, is_eval) shingle frame both decontamination tiers
@@ -157,11 +155,10 @@ object QualityOps {
   def d15bDecontaminateBloom(spark: SparkSession, dir: String): DataFrame = {
     // shared with d15 via StageCache — no second per-query pin of the
     // corpus shingles (the r6 advisor finding); the eval set is a
-    // localCheckpoint (three consumers: count, bloom build, exact
-    // semi-join) reclaimed by the ContextCleaner once unreferenced
+    // snapshot (three consumers: count, bloom build, exact semi-join)
     val sh = docShingles(spark, dir)
-    val evalSet = sh.filter(col("is_eval")).select(col("shh")).distinct()
-      .localCheckpoint()
+    val evalSet = graft.StageCache.checkpoint(
+      sh.filter(col("is_eval")).select(col("shh")).distinct())
     val bloom = evalSet.stat.bloomFilter("shh",
       math.max(evalSet.count(), 1L), 0.01)
     val bloomBytes = {
@@ -602,12 +599,11 @@ object QualityOps {
   def d28TokenRarity(spark: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
-    // pinned: the VOCAB-sized frequency table feeds the doc join AND the
-    // threshold aggregate — without the pin the corpus-sized explode
-    // underneath it runs once per consumer (localCheckpoint, reclaimed
-    // by the ContextCleaner once the query's plan is dropped)
-    val freq = toks.groupBy(col("tok")).agg(count(lit(1)).as("__f"))
-      .localCheckpoint()
+    // snapshotted: the VOCAB-sized frequency table feeds the doc join AND
+    // the threshold aggregate — without it the corpus-sized explode
+    // underneath it runs once per consumer
+    val freq = graft.StageCache.checkpoint(
+      toks.groupBy(col("tok")).agg(count(lit(1)).as("__f")))
     val thr = freq.agg(
       (sum(col("__f")).cast(DoubleType) / count(lit(1))).as("__avg"))
     toks.join(freq, Seq("tok"))
@@ -701,10 +697,11 @@ object QualityOps {
       k: Int = DemoTopK): DataFrame = {
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
-    val freqK = toks.groupBy(col("tok")).agg(count(lit(1)).as("__f"))
-      .orderBy(col("__f").desc, col("tok"))
-      .limit(k)
-      .localCheckpoint() // feeds the threshold agg AND the broadcast join
+    // snapshotted: feeds the threshold agg AND the broadcast join
+    val freqK = graft.StageCache.checkpoint(
+      toks.groupBy(col("tok")).agg(count(lit(1)).as("__f"))
+        .orderBy(col("__f").desc, col("tok"))
+        .limit(k))
     val thr = freqK.agg(
       (sum(col("__f")).cast(DoubleType) / count(lit(1))).as("__avg"))
     toks.join(broadcast(freqK), Seq("tok"), "left")
@@ -804,7 +801,7 @@ object QualityOps {
           .filter(col("__df") <= maxDocFreq)
         distinctSh.join(df.select(col("shh")), Seq("shh"))
       }
-    val sh = bounded.localCheckpoint() // consumed by the sizes agg AND the pair join
+    val sh = graft.StageCache.checkpoint(bounded) // consumed by the sizes agg AND the pair join
     val sizes = sh.groupBy(col("source")).agg(count(lit(1)).as("n_sh"))
     sh.as("a").join(sh.as("b"),
         col("a.shh") === col("b.shh") && col("a.source") < col("b.source"))
@@ -966,10 +963,9 @@ object QualityOps {
     import org.apache.spark.sql.expressions.Window
     // distinct (doc, term) counts — pinned: feeds doc-length re-agg,
     // document-frequency agg, and the scoring join
-    val tf = Tables.documents(spark, dir)
+    val tf = graft.StageCache.checkpoint(Tables.documents(spark, dir)
       .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
-      .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf")))
     val docLen = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("n_tokens"))
     val df = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val nDocs = docLen.agg(count(lit(1)).cast(DoubleType).as("__n"))

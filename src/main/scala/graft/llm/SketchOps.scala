@@ -302,12 +302,11 @@ object SketchOps {
     * tripping the round bound. */
   def connectedComponents(pairs: DataFrame): DataFrame = {
     // symmetrize: propagation must flow both directions
-    val edges = pairs
-      .union(pairs.select(col("d2").as("d1"), col("d1").as("d2")))
-      .localCheckpoint()
-    var labels = edges.select(col("d1").as("doc_id")).distinct()
-      .select(col("doc_id"), col("doc_id").as("cluster_id"))
-      .localCheckpoint()
+    val edges = graft.StageCache.checkpoint(pairs
+      .union(pairs.select(col("d2").as("d1"), col("d1").as("d2"))))
+    var labels = graft.StageCache.checkpoint(
+      edges.select(col("d1").as("doc_id")).distinct()
+        .select(col("doc_id"), col("doc_id").as("cluster_id")))
     val MaxRounds = 50
     var converged = false
     var rounds = 0
@@ -329,13 +328,12 @@ object SketchOps {
       // chain length to the minimum halves each round.
       val jumpedLabel = least(col("cluster_id"),
         coalesce(col("jumped"), col("cluster_id")))
-      val next = propagated.join(
+      val next = graft.StageCache.checkpoint(propagated.join(
           propagated.select(
             col("doc_id").as("cluster_id"), col("cluster_id").as("jumped")),
           Seq("cluster_id"), "left")
         .select(col("doc_id"), jumpedLabel.as("cluster_id"),
-          (jumpedLabel =!= col("__old")).as("__chg"))
-        .localCheckpoint()
+          (jumpedLabel =!= col("__old")).as("__chg")))
       converged = next.filter(col("__chg")).isEmpty
       labels = next.select(col("doc_id"), col("cluster_id"))
       rounds += 1
@@ -683,15 +681,8 @@ object SketchOps {
     * doc; mutual containment keeps the lower id) — what Runner unions
     * with the same-source exact drop set so the corpus stage's
     * syndication claim is real. Pair-bounded, broadcastable. */
-  def syndicationDropSet(docs: DataFrame): DataFrame = {
-    val t = TextOps.ContainmentThreshold
-    crossSourceContainment(docs)
-      .select(
-        when(col("c12") >= t && col("c21") >= t, col("d2"))
-          .when(col("c12") >= t, col("d1"))
-          .otherwise(col("d2")).as("doc_id"))
-      .distinct()
-  }
+  def syndicationDropSet(docs: DataFrame): DataFrame =
+    TextOps.containmentVictims(crossSourceContainment(docs))
 
   val d44Sql: String =
     s"""WITH toks AS (

@@ -549,8 +549,14 @@ object TextOps {
     * broadcastable. */
   def containmentDropSet(docs: DataFrame,
       sh0: Option[DataFrame] = None): DataFrame =
-    shingleContainment(docs, sh0)
-      .select(
+    containmentVictims(shingleContainment(docs, sh0))
+
+  /** d41's drop rule over containment pairs (d1, d2, c12, c21): the
+    * distinct doc ids to drop. The one Scala copy, shared by the
+    * same-source tier above and d44's cross-source tier
+    * (`SketchOps.syndicationDropSet`); the oracle SQL spells it out. */
+  private[graft] def containmentVictims(pairs: DataFrame): DataFrame =
+    pairs.select(
         when(col("c12") >= ContainmentThreshold
           && col("c21") >= ContainmentThreshold, col("d2")) // mutual: keep lower id
           .when(col("c12") >= ContainmentThreshold, col("d1")) // d1 inside d2
@@ -868,11 +874,11 @@ object TextOps {
     // pinned: candidate fps feed the batch text-confirm AND the index
     // text-confirm — without the pin both phase-1 aggregates re-run per
     // consumer. Bounded by actually-repeated spans (the Zipf head).
-    val candFp = shBat.groupBy(col("fp")).agg(count(lit(1)).as("bat_n"))
-      .join(idxFp, Seq("fp"), "left")
-      .where(col("bat_n") + coalesce(col("idx_n"), lit(0L)) >= 2)
-      .select("fp")
-      .localCheckpoint()
+    val candFp = graft.StageCache.checkpoint(
+      shBat.groupBy(col("fp")).agg(count(lit(1)).as("bat_n"))
+        .join(idxFp, Seq("fp"), "left")
+        .where(col("bat_n") + coalesce(col("idx_n"), lit(0L)) >= 2)
+        .select("fp"))
     val candBat = shBat.join(candFp, "fp")
     val batTxt = candBat.groupBy(col("shingle")).agg(count(lit(1)).as("bn"))
     val idxTxt = shIdx.join(candFp, "fp")
@@ -913,7 +919,7 @@ object TextOps {
     val evalFp = shEval.select(col("fp")).distinct()
     // fp prefilter (superset of true hits), pinned: feeds the coverage
     // probe AND the eval-side text fetch
-    val candTrain = shTrain.join(evalFp, "fp").localCheckpoint()
+    val candTrain = graft.StageCache.checkpoint(shTrain.join(evalFp, "fp"))
     val evalTxt = shEval
       .join(candTrain.select(col("fp")).distinct(), Seq("fp"), "left_semi")
       .select(col("shingle")).distinct()

@@ -268,7 +268,7 @@ object VectorOps {
     * collect IS the previous aggregate's materialization and lineage cut
     * (every round's plan restarts from `e` plus literals) — the old
     * cache+count pair added one scheduled job per round for nothing.
-    * The FINAL model is pinned once (`localCheckpoint`, a k×dim frame)
+    * The FINAL model is snapshotted once (a k×dim frame)
     * so multi-consumer callers (saveTag-less ivfKmeans reads it for the
     * assignment collect AND the probe broadcast) do not re-run the last
     * aggregate per consumer.
@@ -292,7 +292,7 @@ object VectorOps {
         .select(col("centroid_id"),
           expr("transform(pm, x -> CAST(x.m AS FLOAT))").as("ce"))
     }
-    cents.localCheckpoint() // pin the k×dim model once for all consumers
+    graft.StageCache.checkpoint(cents) // the k×dim model, once for all consumers
   }
 
   def a04bAnnIvfKmeans(spark: SparkSession, dir: String): DataFrame =
@@ -438,7 +438,7 @@ object VectorOps {
     // pinned: consumed by BOTH self-join sides and the final left join —
     // without the snapshot the crossJoin+window assignment stage executes
     // three times (deterministic, so correct, but 3× the work)
-    val assigned = assignTo(e, cents).localCheckpoint()
+    val assigned = graft.StageCache.checkpoint(assignTo(e, cents))
     val a = assigned.select(col("vec_id").as("earlier_id"),
       col("embedding").as("ea"), col("__norm").as("na"),
       col("centroid_id").as("ca"))
@@ -849,12 +849,12 @@ object VectorOps {
     // consumes the persisted bits, a08Sql replays them in DuckDB
     val coarse = Models.save(
       trainKmeans(e, NCentroids, KmIters), dir, "a08_coarse") // (centroid_id, ce)
-    val resid = assignTo(e, coarse)
+    // snapshotted: feeds PQ training AND the encode
+    val resid = graft.StageCache.checkpoint(assignTo(e, coarse)
       .join(broadcast(coarse), Seq("centroid_id"))
       .select(col("vec_id"), col("centroid_id"),
         expr("zip_with(embedding, ce, (a, b) -> CAST(CAST(a AS DOUBLE) - b AS FLOAT))")
-          .as("remb"))
-      .localCheckpoint() // feeds PQ training AND the encode
+          .as("remb")))
     val subs = resid.select(col("vec_id"), expr(
         s"explode(transform(sequence(0, ${PqM - 1}), " +
           s"m -> struct(m AS m, slice(remb, m * $sub + 1, $sub) AS sv)))").as("s"))
@@ -1460,8 +1460,8 @@ object VectorOps {
       val (cents, _) = a10Index(spark, dir)
       val tripped = force ||
         a10bAnnDrift(spark, dir).filter(col("retrain")).limit(1).count() > 0
-      val folded =
-        if (!tripped) cents
+      val frozen =
+        if (!tripped) Models.save(cents, dir, "a10c_centroids")
         else {
           val e = Tables.embeddings(spark, dir)
             .select(col("vec_id"), col("embedding"))
@@ -1476,11 +1476,12 @@ object VectorOps {
             }.toSeq, 1),
             StructType(Seq(StructField("centroid_id", IntegerType),
               StructField("ce", ArrayType(FloatType)))))
-          // pinned only while training, like a10Train's stratum
-          graft.StageCache.scoped(spark)(
-            trainKmeans(graft.StageCache.pin(e), NCentroids, KmIters, Some(init)))
+          // pinned only while training, like a10Train's stratum: the
+          // model is frozen on disk before the scope closes
+          graft.StageCache.scoped(spark)(Models.save(
+            trainKmeans(graft.StageCache.pin(e), NCentroids, KmIters, Some(init)),
+            dir, "a10c_centroids"))
         }
-      val frozen = Models.save(folded, dir, "a10c_centroids")
       a10cMemo.put(dir, frozen)
       frozen
     }
@@ -1663,17 +1664,17 @@ object VectorOps {
       col("__norm").as("nn"))
     val wRel = Window.partitionBy(col("query_id"))
       .orderBy(col("rel").desc, col("neighbor_id"))
-    val cand = q.join(n, col("query_id") =!= col("neighbor_id"))
+    // snapshotted: |Q|·C rows, consumed K times
+    val cand = graft.StageCache.checkpoint(q.join(n, col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), col("ne"), col("nn"),
         cosinePre(dot(col("qe"), col("ne")), col("qn"), col("nn")).as("rel"))
       .withColumn("__crk", row_number().over(wRel))
-      .filter(col("__crk") <= MmrCands).drop("__crk")
-      .localCheckpoint() // |Q|·C rows, consumed K times
-    var selected = cand.withColumn("__rn", row_number().over(wRel))
-      .filter(col("__rn") === 1).drop("__rn")
-      .withColumn("mmr_score", lit(MmrLambda) * col("rel"))
-      .withColumn("mmr_rank", lit(1))
-      .localCheckpoint()
+      .filter(col("__crk") <= MmrCands).drop("__crk"))
+    var selected = graft.StageCache.checkpoint(
+      cand.withColumn("__rn", row_number().over(wRel))
+        .filter(col("__rn") === 1).drop("__rn")
+        .withColumn("mmr_score", lit(MmrLambda) * col("rel"))
+        .withColumn("mmr_rank", lit(1)))
     for (t <- 2 to K) {
       val s = selected.select(col("query_id"), col("ne").as("__se"),
         col("nn").as("__sn"))
@@ -1693,7 +1694,7 @@ object VectorOps {
         .filter(col("__rn") === 1)
         .select(col("query_id"), col("neighbor_id"), col("ne"), col("nn"),
           col("rel"), col("mmr_score"), lit(t).as("mmr_rank"))
-      selected = selected.unionByName(pick).localCheckpoint()
+      selected = graft.StageCache.checkpoint(selected.unionByName(pick))
     }
     selected.select(col("query_id"), col("neighbor_id"), col("mmr_rank"),
       col("rel").as("relevance"), col("mmr_score"))

@@ -768,9 +768,8 @@ object CorpusStream {
     // materialize the (small: three scalar columns, no text) result so
     // the temp stores can be reclaimed NOW instead of at JVM exit —
     // repeated bench/verify calls no longer accumulate corpus copies
-    val res = spark.read.schema(storeSchema).parquet(out)
-      .select(col("doc_id"), col("source"), col("text_fp"))
-      .localCheckpoint(true)
+    val res = StageCache.checkpoint(spark.read.schema(storeSchema).parquet(out)
+      .select(col("doc_id"), col("source"), col("text_fp")))
     Seq(idx, out).foreach(d =>
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
     res.orderBy(col("doc_id"))

@@ -59,37 +59,6 @@ class GraphRankSpec extends SparkSpec {
       "rows must arrive rank-desc, part_id tie-broken asc")
   }
 
-  test("reliable-checkpoint cadence (cluster mode) is bit-identical to local pinning") {
-    // the cluster knob: durable checkpoints every 3 iterations instead of
-    // executor-pinned blocks every iteration — results must not depend on
-    // the resilience mode
-    val pairs = Seq((1L, 2L, 3L), (1L, 3L, 1L), (2L, 3L, 2L), (3L, 4L, 5L),
-      (4L, 5L, 1L), (1L, 5L, 2L)).toDF("pa", "pb", "w")
-    val local = OlapQueries.weightedPageRank(pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-    val ckptPath = java.nio.file.Files.createTempDirectory("pr_ckpt")
-    spark.sparkContext.setCheckpointDir(ckptPath.toString)
-    try {
-      spark.conf.set(OlapQueries.CkptEveryKey, "3")
-      val durable = OlapQueries.weightedPageRank(pairs)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-      assert(durable === local)
-      // the durable mode really wrote checkpoints
-      val walk = java.nio.file.Files.walk(ckptPath)
-      val wroteFiles =
-        try walk.filter(java.nio.file.Files.isRegularFile(_)).count()
-        finally walk.close()
-      assert(wroteFiles > 0, "cadence > 0 must produce durable checkpoint files")
-    } finally {
-      spark.conf.unset(OlapQueries.CkptEveryKey)
-      // don't leave the temp checkpoint dir on disk for the session
-      val sweep = java.nio.file.Files.walk(ckptPath)
-      try sweep.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-      finally sweep.close()
-    }
-  }
-
   test("ε-exit, ε=0 (exact stationarity): a regular graph converges in 2 rounds, bit-identical to the full count") {
     // triangle with equal weights: every node's update reproduces 1e6
     // exactly, so the rank vector is stationary from round 1 and the

@@ -17,7 +17,7 @@ import graft.pipeline.Runner
 /** StageCache lifetimes: session stages outlive every scope; a stage or
   * pin first taken in a scope is released (its blocks unpersisted) when
   * the last open scope that touched it closes; a pin taken by a stage's
-  * build is released when the build returns. */
+  * or a snapshot's build is released when the build returns. */
 class StageCacheSpec extends SparkSpec {
 
   private val dir = s"stagecache-${java.util.UUID.randomUUID()}"
@@ -158,18 +158,83 @@ class StageCacheSpec extends SparkSpec {
     assertReleased(inScope)
   }
 
-  test("StageCache owns every cache: no other cache, persist or unpersist call") {
-    // the census mains keep their own session-long caches
+  test("snapshot: the body's pins are released when it returns; the result lives as long as its owner") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    var pinned, inner: DataFrame = null
+    val snap = StageCache.scoped(spark) {
+      val snap = StageCache.snapshot(spark) {
+        pinned = StageCache.pin(spark.range(400).toDF("p"))
+        inner = StageCache.checkpoint(spark.range(300).toDF("c"))
+        pinned.join(inner, col("p") === col("c")).select(col("c"))
+      }
+      // the body's pin and snapshot are gone once it returns ...
+      assert(pinned.storageLevel == StorageLevel.NONE)
+      assertReleased(inner)
+      // ... while its result, owned by the scope, stays readable
+      assert(rddIds(snap).subsetOf(stored()))
+      assert(snap.count() == 300)
+      snap
+    }
+    assertReleased(snap)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+
+    // outside any scope the snapshot has no owner: a scope that reads it
+    // does not release it
+    val kept = StageCache.snapshot(spark)(spark.range(50).toDF("k"))
+    StageCache.scoped(spark)(assert(kept.count() == 50))
+    assert(rddIds(kept).subsetOf(stored()) && kept.count() == 50)
+  }
+
+  test("clear releases the session stages it drops and leaves scoped ones to their scope") {
+    val builds = new AtomicInteger
+    val session = stage("clear-session", builds)
+    val ids = rddIds(session)
+    assert(ids.subsetOf(spark.sparkContext.getPersistentRDDs.keySet))
+    StageCache.scoped(spark) {
+      val scoped = stage("clear-scoped", builds)
+      StageCache.clear(spark)
+      assert((ids & spark.sparkContext.getPersistentRDDs.keySet).isEmpty)
+      assert(rddIds(scoped).subsetOf(spark.sparkContext.getPersistentRDDs.keySet))
+      assert(scoped.count() == 1000)
+    }
+    // the next reader builds the cleared stage again
+    stage("clear-session", builds)
+    assert(builds.get == 3)
+  }
+
+  test("iterative and snapshotting queries run in a scope leave no persistent RDD behind") {
+    val leaks = Seq("q51_copurchase_rank", "d23_dedup_clusters", "d28_token_rarity",
+        "a12_mmr_rerank").map { q =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val rows = StageCache.scoped(spark)(SparkEntry.queries(q)(spark, sfDir).collect())
+      assert(rows.nonEmpty, q)
+      q -> spark.sparkContext.getPersistentRDDs.keySet.filterNot(before)
+    }.filter(_._2.nonEmpty)
+    assert(leaks.isEmpty, s"persistent RDDs left behind: $leaks")
+  }
+
+  /** `file:line: text` of every source line under src/main/scala, outside
+    * StageCache and the census mains, that matches `call`. */
+  private def callsOutsideStageCache(call: scala.util.matching.Regex): List[String] = {
+    // the census mains keep their own session-long caches and snapshots
     val exempt = Set("StageCache", "BpeBench", "CompactionBench", "GraphBench",
       "LayoutBench", "RecallBench", "SkewBench", "SpillBench").map(_ + ".scala")
-    val call = """\.cache\(\)|\.persist\(|unpersist\(""".r
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the project root: no $root")
-    val hits = Using.resource(Files.walk(root))(_.iterator.asScala.toList)
+    Using.resource(Files.walk(root))(_.iterator.asScala.toList)
       .filter(p => p.toString.endsWith(".scala") && !exempt(p.getFileName.toString))
       .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
         case (line, i) if call.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
       })
+  }
+
+  test("StageCache owns every cache: no other cache, persist or unpersist call") {
+    val hits = callsOutsideStageCache("""\.cache\(\)|\.persist\(|unpersist\(""".r)
     assert(hits.isEmpty, hits.mkString("pin through StageCache instead:\n", "\n", ""))
+  }
+
+  test("StageCache owns every snapshot: no other localCheckpoint or checkpoint call") {
+    val hits = callsOutsideStageCache("""localCheckpoint\(|(?<!StageCache)\.checkpoint\(""".r)
+    assert(hits.isEmpty, hits.mkString("snapshot through StageCache instead:\n", "\n", ""))
   }
 }
