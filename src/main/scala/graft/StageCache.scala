@@ -4,12 +4,15 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.SnapshotRelease
 
 /** Materialized stage views: several registered queries are tiers over
   * the same expensive intermediate (q07/q08 share the scored RFM frame;
   * d07/d11/d12/d23 share MinHash signatures over the documents table;
-  * d13/d18 share the quality gate + signatures + shingles). Each stage is
-  * keyed by (session, data dir, tag), built once and pinned with
+  * d13/d18 share the quality gate + signatures + shingles), and a trained
+  * model is a stage (a10/a10b/a11 read the a10 centroids, d33b/d48 the
+  * BPE merge table), so [[clear]] makes the next reader train again.
+  * Each stage is keyed by (session, data dir, tag), built once and pinned with
   * localCheckpoint (r3 lesson: checkpoint, not cache, when separate
   * actions consume a frame — cache still recomputes the lineage per
   * action for `repartitionByRange` inputs and interpreted lambdas).
@@ -64,13 +67,13 @@ object StageCache {
     override def initialValue(): Option[Scope] = None
   }
 
-  /** Stable per-session key: identity hash is safe here because the map
-    * value holds a strong reference to the session itself — the session
-    * cannot be GC'd while its entry lives, so its identity hash cannot be
-    * reused by a new session. (Spark 4.1's `sessionUUID` is private[sql],
-    * so it is not an option from this package.) */
-  private def sessionKey(spark: SparkSession): String =
-    s"id${System.identityHashCode(spark)}"
+  /** Stable key per (session, dir, tag): identity hash is safe here
+    * because the map value holds a strong reference to the session itself
+    * — the session cannot be GC'd while its entry lives, so its identity
+    * hash cannot be reused by a new session. (Spark 4.1's `sessionUUID`
+    * is private[sql], so it is not an option from this package.) */
+  private def stageKey(spark: SparkSession, dir: String, tag: String): String =
+    s"id${System.identityHashCode(spark)}:$dir:$tag"
 
   /** Run `body` with a fresh scope open on this thread: every stage first
     * built and every [[pin]] taken in it (on this thread, or on a thread
@@ -127,9 +130,18 @@ object StageCache {
     * both the deployed (persisted-silver) number and the from-scratch
     * one. The dropped session stages are released at once; a stage an
     * open scope owns is left to that scope. */
-  def clear(spark: SparkSession): Unit = {
+  def clear(spark: SparkSession): Unit = dropWhere(spark)(_ => true)
+
+  /** Drop the (dir, tag) stage of `spark`, released as [[clear]] releases
+    * it: the next reader builds it again. */
+  def drop(spark: SparkSession, dir: String, tag: String): Unit = {
+    val key = stageKey(spark, dir, tag)
+    dropWhere(spark)(_ == key)
+  }
+
+  private def dropWhere(spark: SparkSession)(hit: String => Boolean): Unit = {
     val dropped = synchronized {
-      val mine = stages.filter(_._2.spark eq spark)
+      val mine = stages.filter { case (k, p) => (p.spark eq spark) && hit(k) }
       stages --= mine.keys
       mine.values.filter(_.owners.isEmpty).toList
     }
@@ -147,7 +159,7 @@ object StageCache {
     * what it pins is released once the stage is materialized. */
   def cached(spark: SparkSession, dir: String, tag: String)
       (build: => DataFrame): DataFrame = {
-    val key = s"${sessionKey(spark)}:$dir:$tag"
+    val key = stageKey(spark, dir, tag)
     val hit = synchronized {
       // evict entries of stopped sessions: their checkpoint blocks died
       // with the executor, so the frames are unusable, and keeping them
@@ -223,7 +235,7 @@ object StageCache {
   /** A localCheckpoint'd frame is a LogicalRDD over the persisted RDD. */
   private def unpersistCheckpoint(df: DataFrame): Unit =
     df.queryExecution.logical.foreach {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case r: LogicalRDD => SnapshotRelease(r.rdd)
       case _ =>
     }
 }

@@ -711,30 +711,19 @@ object LmOps {
   // LmOpsSpec additionally pins the hand-computed encoding of the
   // planted corpus and the token-count bounds on the fixture.
   // ---------------------------------------------------------------------
-  /** Frozen d33b merge table, trained at most once per (JVM, dir) — the
-    * a10Memo discipline (ADVICE r14): d33b and d48 both consume the
-    * artifact, and a second training would re-persist it AFTER the first
-    * query's results were recorded. The ≤K-row collect is the LmOps
-    * merge-table precedent. */
-  private val mergesMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, Seq[(String, String)])]()
-
+  /** Frozen d33b merge table, a StageCache stage for the reason
+    * [[VectorOps.a10Index]] gives: d33b and d48 both read it, and a second
+    * training would re-persist it after the first query's results were
+    * recorded. Freezing it is the tokenizer artifact a real pipeline
+    * ships; encode consumes the persisted rows in rank order, and the
+    * oracles replay the same encode from the file. The ≤K-row collect is
+    * the merge-table precedent. */
   private[graft] def d33bMerges(spark: SparkSession, dir: String): Seq[(String, String)] = {
-    val hit = mergesMemo.get(dir)
-    if (hit != null && (hit._1 eq spark)) hit._2
-    else {
-      import spark.implicits._
-      // freeze the trained merge table (the tokenizer artifact a real
-      // pipeline ships); encode consumes the PERSISTED rows in rank
-      // order, and the oracles replay the same encode from the file
-      val frozen = Models.save(
-        bpeTrain(spark, Tables.documents(spark, dir), BpeMerges),
-        dir, "d33b_merges")
-      val merges = frozen.orderBy(col("rank"))
-        .select(col("left"), col("right")).as[(String, String)].collect().toSeq
-      mergesMemo.put(dir, (spark, merges))
-      merges
-    }
+    import spark.implicits._
+    graft.StageCache.cached(spark, dir, "d33b_merges")(Models.save(
+        bpeTrain(spark, Tables.documents(spark, dir), BpeMerges), dir, "d33b_merges"))
+      .orderBy(col("rank")).select(col("left"), col("right")).as[(String, String)]
+      .collect().toSeq
   }
 
   def d33bBpeEncode(spark: SparkSession, dir: String): DataFrame =

@@ -42,10 +42,6 @@ object Models {
     // collision between two gate dirs would silently share one artifact
     // path and the oracle would compare against the wrong model — md5 of
     // the absolute path makes that practically impossible.
-    // MIGRATION NOTE (ADVICE r12): the r12 switch from hashCode to md5
-    // orphans artifacts persisted under the old suffix — a one-time
-    // retrain per (dir, tag) on first access; stale `${tag}_<int>` dirs
-    // under target/models are dead weight and safe to delete
     val abs = new java.io.File(dir).getAbsolutePath
     val md5 = java.security.MessageDigest.getInstance("MD5")
       .digest(abs.getBytes("UTF-8"))

@@ -17,12 +17,14 @@ class IvfSpec extends SparkSpec {
     val exact = pairs(VectorOps.a01AnnBruteForce(spark, sfDir))
     assert(exact.size == 100) // 20 queries × top-5
 
-    val at5 = pairs(VectorOps.ivfKmeans(spark, sfDir, k = 8, iters = 4, nprobe = 5))
+    val at5 = pairs(VectorOps.ivfKmeans(spark, sfDir, k = 8, iters = 4, nprobe = 5,
+      tag = "ivf_spec_centroids"))
     val recall5 = exact.intersect(at5).size.toDouble / exact.size
     assert(recall5 >= 0.9, s"recall@nprobe=5 = $recall5")
 
     // probing every list degenerates to brute force: recall must be exact
-    val at8 = pairs(VectorOps.ivfKmeans(spark, sfDir, k = 8, iters = 4, nprobe = 8))
+    val at8 = pairs(VectorOps.ivfKmeans(spark, sfDir, k = 8, iters = 4, nprobe = 8,
+      tag = "ivf_spec_centroids"))
     val recall8 = exact.intersect(at8).size.toDouble / exact.size
     assert(recall8 == 1.0, s"recall@nprobe=k = $recall8")
   }

@@ -213,12 +213,34 @@ class StageCacheSpec extends SparkSpec {
     assert(leaks.isEmpty, s"persistent RDDs left behind: $leaks")
   }
 
+  test("trained models are stages: clear makes the next reader retrain") {
+    // each artifact write leaves part files with a fresh name
+    def parts(tag: String): Set[String] =
+      Option(new java.io.File(graft.llm.Models.path(sfDir, tag)).list())
+        .fold(Set.empty[String])(_.filter(_.startsWith("part-")).toSet)
+    def train(): (Set[String], Set[String]) = {
+      graft.llm.VectorOps.a10Index(spark, sfDir)
+      graft.llm.LmOps.d33bMerges(spark, sfDir)
+      (parts("a10_centroids"), parts("d33b_merges"))
+    }
+    val first = train()
+    assert(first._1.nonEmpty && first._2.nonEmpty)
+    assert(train() == first, "a live stage must not retrain")
+    StageCache.clear(spark)
+    val (a10, d33b) = train()
+    assert(a10.nonEmpty && (a10 & first._1).isEmpty, "a10 centroids not retrained after clear")
+    assert(d33b.nonEmpty && (d33b & first._2).isEmpty, "d33b merges not retrained after clear")
+  }
+
+  /** StageCache and the census mains, which keep their own session-long
+    * caches and snapshots. */
+  private val stageCacheOwners = Set("StageCache", "BpeBench", "CompactionBench",
+    "GraphBench", "LayoutBench", "RecallBench", "SkewBench", "SpillBench").map(_ + ".scala")
+
   /** `file:line: text` of every source line under src/main/scala, outside
-    * StageCache and the census mains, that matches `call`. */
-  private def callsOutsideStageCache(call: scala.util.matching.Regex): List[String] = {
-    // the census mains keep their own session-long caches and snapshots
-    val exempt = Set("StageCache", "BpeBench", "CompactionBench", "GraphBench",
-      "LayoutBench", "RecallBench", "SkewBench", "SpillBench").map(_ + ".scala")
+    * the `exempt` files, that matches `call`. */
+  private def callsOutside(exempt: Set[String],
+      call: scala.util.matching.Regex): List[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the project root: no $root")
     Using.resource(Files.walk(root))(_.iterator.asScala.toList)
@@ -229,12 +251,17 @@ class StageCacheSpec extends SparkSpec {
   }
 
   test("StageCache owns every cache: no other cache, persist or unpersist call") {
-    val hits = callsOutsideStageCache("""\.cache\(\)|\.persist\(|unpersist\(""".r)
+    val hits = callsOutside(stageCacheOwners, """\.cache\(\)|\.persist\(|unpersist\(""".r)
     assert(hits.isEmpty, hits.mkString("pin through StageCache instead:\n", "\n", ""))
   }
 
   test("StageCache owns every snapshot: no other localCheckpoint or checkpoint call") {
-    val hits = callsOutsideStageCache("""localCheckpoint\(|(?<!StageCache)\.checkpoint\(""".r)
+    val hits = callsOutside(stageCacheOwners, """localCheckpoint\(|(?<!StageCache)\.checkpoint\(""".r)
     assert(hits.isEmpty, hits.mkString("snapshot through StageCache instead:\n", "\n", ""))
+  }
+
+  test("StageCache owns every memo: no ConcurrentHashMap outside the KV store and the model registry") {
+    val hits = callsOutside(Set("KvSink.scala", "Models.scala"), "ConcurrentHashMap".r)
+    assert(hits.isEmpty, hits.mkString("memoize through StageCache.cached instead:\n", "\n", ""))
   }
 }
