@@ -8,12 +8,18 @@ import graft.Tables
 
 /** Event-stream analytics S-Q1..S-Q5 (SURVEY.md §2.10/§2.12) — the
   * reference's Kafka→Redis realtime metrics (`consumer.py:192-344`)
-  * re-expressed as declarative aggregations. Each is defined on a plain
-  * DataFrame so the SAME function runs in batch (here, for the
-  * DuckDB-checked correctness tier) and on a streaming frame (see
-  * `graft.streaming.Realtime`, which reuses these transforms with
-  * watermarks) — one definition, two execution modes, which is exactly the
-  * Structured Streaming model.
+  * re-expressed as declarative batch aggregations, the DuckDB-checked
+  * correctness tier of the realtime metrics.
+  *
+  * What the streaming side (`graft.streaming.Realtime`) shares with this
+  * file is one transform: q32 unpacks order items with
+  * `Realtime.explodeOrderItems`, the same code the streaming path runs.
+  * The aggregations are not shared. `Realtime.minutelyCounts`,
+  * `minutelyRevenue` and `runningTotals` are streaming twins of
+  * [[minutelyCounts]], [[minutelyRevenue]] and [[runningTotals]]: separate
+  * copies that bucket with a watermarked `window()` instead of
+  * `date_trunc`, and the streaming running totals carry no `n_users`
+  * (an exact distinct count is not a streaming aggregate).
   */
 object EventQueries {
 

@@ -24,7 +24,7 @@ import graft.Tables
   *
   * All bigram/token construction is array-slicing over the shared
   * [[TextOps.tokens]] tokenizer — pure codegen projections, no window
-  * shuffle (contrast [[QualityOps.ngramRows]], which pays a per-doc
+  * shuffle (contrast [[TextOps.ngramRows]], which pays a per-doc
   * window; here adjacency comes from the token array itself).
   *
   * Cross-engine float contract (measured, not hoped): JVM `Math.log`/

@@ -25,28 +25,12 @@ import graft.Tables
   *     aggregate (the O(k)-memory scale path for d17);
   *   - d22 boilerplate-span detection (cross-document repeated n-grams).
   *
-  * All built from codegen'd built-ins (posexplode + lead windows + hash
-  * aggregates — the same machinery as TextOps.shingleRows); no UDFs, no
+  * All built from codegen'd built-ins (the n-gram rows come from
+  * TextOps' shingle pipeline, plus hash aggregates); no UDFs, no
   * driver-side collection, and every derived double is the identical
   * integer-division expression in the DuckDB oracle.
   */
 object QualityOps {
-
-  /** Non-distinct word-n-gram rows (doc_id, ng): posexplode + lead()
-    * windows, whole-stage-codegen'd (the interpreted higher-order array
-    * path measured ~100× slower — see TextOps.shingleRows, which is the
-    * DISTINCT variant of this for set-semantics consumers). One shuffle,
-    * hash on doc_id. */
-  def ngramRows(df: DataFrame, n: Int): DataFrame = {
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val toks = df.select(col("doc_id"),
-      posexplode(TextOps.tokens(col("text"))).as(Seq("pos", "tok")))
-    val leads = (1 until n).map(i => lead(col("tok"), i).over(w).as(s"t$i"))
-    toks.select(col("doc_id") +: col("tok") +: leads: _*)
-      .filter(col(s"t${n - 1}").isNotNull)
-      .select(col("doc_id"),
-        concat_ws(" ", col("tok") +: (1 until n).map(i => col(s"t$i")): _*).as("ng"))
-  }
 
   // ---------------------------------------------------------------------
   // d15 — benchmark decontamination: the held-out eval split (the same
@@ -98,8 +82,8 @@ object QualityOps {
   /** The (doc_id, shh, is_eval) shingle frame both decontamination tiers
     * score against. */
   private def shingleStage(docs: DataFrame, evalBucketMin: Int): DataFrame =
-    TextOps.shingleRows(docs, NGramN)
-      .select(col("doc_id"), TextOps.shingleHash(col("sh")).as("shh"))
+    TextOps.shingleHashes(docs, NGramN)
+      .select(col("doc_id"), col("shh"))
       .withColumn("is_eval", TextOps.hashBucket(col("doc_id")) >= evalBucketMin)
 
   /** The documents table's hashed 5-gram shingle rows (doc_id, shh),
@@ -108,8 +92,8 @@ object QualityOps {
     * projection each consumer adds at ITS boundary). */
   private[llm] def docShh5Stage(spark: SparkSession, dir: String): DataFrame =
     graft.StageCache.cached(spark, dir, "doc_shh5")(
-      TextOps.shingleRows(Tables.documents(spark, dir), NGramN)
-        .select(col("doc_id"), TextOps.shingleHash(col("sh")).as("shh")))
+      TextOps.shingleHashes(Tables.documents(spark, dir), NGramN)
+        .select(col("doc_id"), col("shh")))
 
   /** d15/d15b's scored frame: the pinned 5-gram stage plus the eval flag
     * (a projection over pinned blocks — no second pin). */
@@ -217,12 +201,12 @@ object QualityOps {
   private[llm] final val MaxTopBigramFrac = 0.08
   private[llm] final val MinTypeTokenRatio = 0.4
 
-  /** Per-doc repetition signals for any (doc_id, text) frame (frame-level
-    * for pipeline composition — the signals are pure per-doc functions, so
-    * computing them on a filtered subset equals filtering the full-corpus
-    * result). */
-  def repetitionSignals(docs: DataFrame,
-      bi0: Option[DataFrame] = None): DataFrame = {
+  /** Per-doc repetition signals for any (doc_id, text) frame and its
+    * multiset bigram rows (doc_id, ng) from [[TextOps.ngramRows]]
+    * (frame-level for pipeline composition — the signals are pure per-doc
+    * functions, so computing them on a filtered subset equals filtering
+    * the full-corpus result). */
+  def repetitionSignals(docs: DataFrame, bigrams: DataFrame): DataFrame = {
     val uni = docs
       .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))
@@ -230,9 +214,7 @@ object QualityOps {
       .agg(sum(col("c")).as("n_tokens"),
         count(lit(1)).as("n_distinct"),
         max(col("c")).as("top_unigram_cnt"))
-    // bi0: prebuilt bigram rows (the pinned doc_ng2 stage when the
-    // caller is the full-corpus stage build — shared with d17)
-    val bi = bi0.getOrElse(ngramRows(docs, 2))
+    val bi = bigrams
       .groupBy(col("doc_id"), col("ng")).agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id"))
       .agg(sum(col("c")).as("n_bigrams"), max(col("c")).as("top_bigram_cnt"))
@@ -260,14 +242,7 @@ object QualityOps {
   private[llm] def docRepSigStage(spark: SparkSession, dir: String): DataFrame =
     graft.StageCache.cached(spark, dir, "doc_repsig")(
       repetitionSignals(Tables.documents(spark, dir),
-        bi0 = Some(docNg2Stage(spark, dir))))
-
-  /** Full-corpus non-distinct bigram rows, pinned per (session, dir):
-    * the window+explode pass d17 and the repetition-signal stage each
-    * paid separately (r19). */
-  private[llm] def docNg2Stage(spark: SparkSession, dir: String): DataFrame =
-    graft.StageCache.cached(spark, dir, "doc_ng2")(
-      ngramRows(Tables.documents(spark, dir), 2))
+        TextOps.docBigramStage(spark, dir)))
 
   def d16RepetitionQuality(spark: SparkSession, dir: String): DataFrame =
     docRepSigStage(spark, dir).orderBy(col("doc_id"))
@@ -547,7 +522,7 @@ object QualityOps {
   private val VocabTopK = 50
 
   def d17NgramVocab(spark: SparkSession, dir: String): DataFrame =
-    docNg2Stage(spark, dir)
+    TextOps.docBigramStage(spark, dir)
       .groupBy(col("ng").as("bigram"))
       .agg(count(lit(1)).as("n_occurrences"),
         countDistinct(col("doc_id")).as("n_docs"))
@@ -786,9 +761,7 @@ object QualityOps {
     * distinct rows equals the one built from scratch). */
   def sourceOverlap(docs: DataFrame, maxDocFreq: Int = Int.MaxValue,
       sh0: Option[DataFrame] = None): DataFrame = {
-    val distinctSh = sh0.getOrElse(TextOps.shingleRows(docs, 3)
-        .select(col("doc_id"), col("source"),
-          TextOps.shingleHash(col("sh")).as("shh")))
+    val distinctSh = sh0.getOrElse(TextOps.shingleHashes(docs, 3))
       .select(col("source"), col("shh"))
       .distinct()
     val bounded =

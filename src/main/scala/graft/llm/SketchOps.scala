@@ -23,15 +23,6 @@ object SketchOps {
   private[graft] val Bands = 4
   private val RowsPerBand = NumPerm / Bands
 
-  /** Distinct (doc_id, source, shingle) — word-3-gram shingles, the SAME
-    * shingle definition d06 verifies exactly, so LSH candidates feed the
-    * exact stage directly. (1-gram shingles are a trap here: over a small
-    * vocabulary every long doc contains nearly every word, all signatures
-    * collide, and the candidate set goes quadratic — observed 9.7M pairs
-    * from 5k docs before this was switched to 3-grams.) */
-  private def tokenSet(df: DataFrame): DataFrame =
-    TextOps.shingleRows(df, 3).withColumnRenamed("sh", "tok")
-
   /** Per-token md5 hash *bases*, computed once over the DISTINCT
     * vocabulary and broadcast-joined back to occurrences (dictionary
     * encoding — md5 cost scales with |vocab|, not corpus size). The 16
@@ -44,11 +35,19 @@ object SketchOps {
         conv(substring(md5(col("tok")), 1, 10), 16, 10).cast(LongType).as("h1"),
         conv(substring(md5(col("tok")), 11, 10), 16, 10).cast(LongType).as("h2"))
 
-  /** 16-permutation MinHash signature, one row per doc: m0..m15. */
+  /** 16-permutation MinHash signature, one row per doc: m0..m15, over
+    * the distinct word-3-gram shingles, the SAME shingle definition d06
+    * verifies exactly, so LSH candidates feed the exact stage directly.
+    * (1-gram shingles are a trap here: over a small vocabulary every long
+    * doc contains nearly every word, all signatures collide, and the
+    * candidate set goes quadratic — observed 9.7M pairs from 5k docs
+    * before this was switched to 3-grams.) The one reader of shingle
+    * TEXT outside TextOps: the two 40-bit hash bases are md5 substrings
+    * of the shingle itself, not of its 60-bit key. */
   def minhashSignatures(df: DataFrame): DataFrame = {
-    // cached: read twice below (the dictionary derives from it AND the
+    // pinned: read twice below (the dictionary derives from it AND the
     // occurrence stream joins against the dictionary)
-    val toks = graft.StageCache.pin(tokenSet(df))
+    val toks = graft.StageCache.pin(TextOps.shingleRows(df, 3).withColumnRenamed("sh", "tok"))
     val hashed = toks.join(broadcast(tokenHashBases(toks)), "tok")
     hashed.groupBy(col("doc_id"), col("source"))
       .agg(min(col("h1") + lit(0) * col("h2")).as("m0"),
@@ -101,15 +100,13 @@ object SketchOps {
   /** The documents table's distinct 3-gram shingle rows, hashed:
     * (doc_id, source, shh). r19: this one frame was being rebuilt —
     * token explode, lead window, md5 — by d06, d40, d41, d29/d29b/d43
-    * (source grain), the bottom-k stage and d44's verify arrays, each
-    * per query; now every one of them is a narrow filter/aggregate over
-    * this single pinned stage (d30/d42 consumed it already and simply
-    * ignore the added `source` column). */
+    * (source grain), d09, the bottom-k stage and d44's verify arrays,
+    * each per query; now every one of them is a narrow filter/aggregate
+    * over this single pinned stage (d30/d42 consumed it already and
+    * simply ignore the added `source` column). */
   private[llm] def docShhStage(spark: SparkSession, dir: String): DataFrame =
     graft.StageCache.cached(spark, dir, "doc_shh")(
-      TextOps.shingleRows(Tables.documents(spark, dir), 3)
-        .select(col("doc_id"), col("source"),
-          TextOps.shingleHash(col("sh")).as("shh")))
+      TextOps.shingleHashes(Tables.documents(spark, dir), 3))
 
   def d07MinhashLsh(spark: SparkSession, dir: String): DataFrame = {
     // only the signature stage: materializing the shingle stage here
@@ -385,10 +382,10 @@ object SketchOps {
   private val KmvK = 16
 
   def d09KmvDistinct(spark: SparkSession, dir: String): DataFrame = {
-    val st = tokenSet(Tables.documents(spark, dir))
-      .select(col("source"), col("tok")).distinct()
-      .select(col("source"),
-        conv(substring(md5(col("tok")), 1, 15), 16, 10).cast(LongType).as("h"))
+    // the (source, shh) distinct over the pinned per-doc rows equals the
+    // hashed (source, shingle) distinct (d29's argument)
+    val st = docShhStage(spark, dir)
+      .select(col("source"), col("shh").as("h")).distinct()
     st.groupBy(col("source"))
       .agg(
         org.apache.spark.sql.graft.BottomKAgg.bottomK(col("h"), KmvK).as("__bk"),
@@ -462,17 +459,10 @@ object SketchOps {
     * bills the build). Census paths with non-default `k` still build
     * their own. */
   private def docBottomKStage(spark: SparkSession, dir: String): DataFrame =
+    // aggregates the pinned shingle-hash stage instead of re-tokenizing
+    // the corpus: the same rows bottomKSketch hashes per call
     graft.StageCache.cached(spark, dir, "doc_bk")(
-      // aggregate over the pinned shingle-hash stage instead of
-      // re-tokenizing the corpus: identical rows (bottomKSketch maps the
-      // same tokenSet rows through the same shingleHash before its
-      // groupBy — the hash is applied per distinct shingle either way)
-      docShhStage(spark, dir)
-        .groupBy(col("doc_id"), col("source"))
-        .agg(
-          org.apache.spark.sql.graft.BottomKAgg.bottomK(col("shh"), ContainK)
-            .as("bk"),
-          count(lit(1)).as("sz")))
+      sketchOf(docShhStage(spark, dir), ContainK))
 
   /** d40b's closed-form containment estimate over sketch pairs that carry
     * each side's bottom-k sketch and shingle count (bk1, sz1, bk2, sz2):
@@ -498,13 +488,38 @@ object SketchOps {
     * containment gate (CorpusStream) so both speak the same sketch. */
   private[graft] def bottomKSketch(docs: DataFrame,
       k: Int = ContainK): DataFrame =
-    tokenSet(docs)
-      .select(col("doc_id"), col("source"),
-        TextOps.shingleHash(col("tok")).as("h"))
-      .groupBy(col("doc_id"), col("source"))
+    sketchOf(TextOps.shingleHashes(docs, 3), k)
+
+  /** The k smallest shingle hashes and the shingle count per doc, over
+    * hashed shingle rows (doc_id, source, shh). */
+  private def sketchOf(sh: DataFrame, k: Int): DataFrame =
+    sh.groupBy(col("doc_id"), col("source"))
       .agg(
-        org.apache.spark.sql.graft.BottomKAgg.bottomK(col("h"), k).as("bk"),
+        org.apache.spark.sql.graft.BottomKAgg.bottomK(col("shh"), k).as("bk"),
         count(lit(1)).as("sz"))
+
+  /** Sketch-candidate pairs d1 < d2 with their containment estimates,
+    * over per-doc sketches (doc_id, source, bk, sz): same-source pairs
+    * for d40b, cross-source for d44. Candidate generation is EXACTLY
+    * result-preserving: a pair whose estimate can clear any threshold has
+    * |U ∩ S(A) ∩ S(B)| ≥ 1, i.e. the two sketches share an element — so
+    * equi-joining exploded sketch elements (the "bands of size 1 over the
+    * bottom-k sketch" form) finds every pair the all-pairs join would
+    * keep, while the join input is |docs|·k rows and the fan-out is
+    * Σ_h C(df_h, 2) over sketch-element collisions (LSH's bound), not the
+    * quadratic pair count. */
+  private def sketchPairs(sk: DataFrame, k: Int, crossSource: Boolean): DataFrame = {
+    val el = sk.select(col("doc_id"), col("source"), explode(col("bk")).as("h"))
+    val (hEq, before) = (col("ea.h") === col("eb.h"), col("ea.doc_id") < col("eb.doc_id"))
+    val cand = el.as("ea").join(el.as("eb"),
+        if (crossSource) hEq && col("ea.source") =!= col("eb.source") && before
+        else col("ea.source") === col("eb.source") && hEq && before)
+      .select(col("ea.doc_id").as("d1"), col("eb.doc_id").as("d2"))
+      .distinct()
+    def side(i: Int) = sk.select(col("doc_id").as(s"d$i"), col("source").as(s"source$i"),
+      col("bk").as(s"bk$i"), col("sz").as(s"sz$i"))
+    withContainmentEst(cand.join(side(1), "d1").join(side(2), "d2"), k)
+  }
 
   /** Frame-level core of d40b — see the header above. `docs` needs
     * (doc_id, source, text) columns. `k`/`estT` are recall-census knobs;
@@ -513,30 +528,11 @@ object SketchOps {
       estT: Double = ContainEstThreshold,
       sk0: Option[DataFrame] = None): DataFrame = {
     // consumed 3× (element explode + both candidate-join sides): either
-    // the shared session stage (registered query) or a per-call pin
-    val sk = sk0.getOrElse(graft.StageCache.pin(bottomKSketch(docs, k)))
-    // Candidate generation, EXACTLY result-preserving: a pair whose
-    // estimate can clear any threshold has |U ∩ S(A) ∩ S(B)| ≥ 1, i.e.
-    // the two sketches share an element — so equi-joining exploded
-    // sketch elements (the "bands of size 1 over the bottom-k sketch"
-    // form) finds every pair the all-pairs join would keep, while the
-    // join input is |docs|·k rows and the fan-out is Σ_h C(df_h, 2)
-    // over sketch-element collisions (LSH's bound), not the quadratic
-    // same-source pair count. This is the step that makes containment
-    // candidate generation affordable at corpus scale.
+    // the shared session stage (registered query) or a per-call pin.
     // Source-blocked like the exact tier it feeds (d40) — same measured
     // trade-off; the cross-source protocol is crossSourceContainment.
-    val el = sk.select(col("doc_id"), col("source"), explode(col("bk")).as("h"))
-    val cand = el.as("ea").join(el.as("eb"),
-        col("ea.source") === col("eb.source") && col("ea.h") === col("eb.h")
-          && col("ea.doc_id") < col("eb.doc_id"))
-      .select(col("ea.doc_id").as("d1"), col("eb.doc_id").as("d2"))
-      .distinct()
-    withContainmentEst(cand
-      .join(sk.select(col("doc_id").as("d1"), col("bk").as("bk1"),
-        col("sz").as("sz1")), "d1")
-      .join(sk.select(col("doc_id").as("d2"), col("bk").as("bk2"),
-        col("sz").as("sz2")), "d2"), k)
+    sketchPairs(sk0.getOrElse(graft.StageCache.pin(bottomKSketch(docs, k))), k,
+        crossSource = false)
       .filter(greatest(col("c12_est"), col("c21_est")) >= estT)
       .select(col("d1"), col("d2"), col("sz1"), col("sz2"),
         col("j_est"), col("c12_est"), col("c21_est"))
@@ -626,20 +622,11 @@ object SketchOps {
       sk0: Option[DataFrame] = None,
       sh0: Option[DataFrame] = None): DataFrame = {
     // element explode + both pair sides: shared session stage when the
-    // caller is the registered query, else a per-call pin
-    val sk = sk0.getOrElse(graft.StageCache.pin(bottomKSketch(docs, k)))
-    val el = sk.select(col("doc_id"), col("source"), explode(col("bk")).as("h"))
-    val cand = el.as("ea").join(el.as("eb"),
-        col("ea.h") === col("eb.h") && col("ea.source") =!= col("eb.source")
-          && col("ea.doc_id") < col("eb.doc_id"))
-      .select(col("ea.doc_id").as("d1"), col("eb.doc_id").as("d2"))
-      .distinct()
-    // pair-bounded; read twice (gated ids + the verify join)
-    val est = graft.StageCache.pin(withContainmentEst(cand
-      .join(sk.select(col("doc_id").as("d1"), col("source").as("source1"),
-        col("bk").as("bk1"), col("sz").as("sz1")), "d1")
-      .join(sk.select(col("doc_id").as("d2"), col("source").as("source2"),
-        col("bk").as("bk2"), col("sz").as("sz2")), "d2"), k)
+    // caller is the registered query, else a per-call pin. The estimate
+    // is pair-bounded and read twice (gated ids + the verify join).
+    val est = graft.StageCache.pin(sketchPairs(
+        sk0.getOrElse(graft.StageCache.pin(bottomKSketch(docs, k))), k,
+        crossSource = true)
       .filter(greatest(col("c12_est"), col("c21_est")) >= estT)
       .select(col("d1"), col("d2"), col("source1"), col("source2"),
         col("sz1"), col("sz2")))
@@ -649,21 +636,20 @@ object SketchOps {
     // aggregate would otherwise cost at 100 TB collapses to the gated
     // set: a broadcast semi-join on the pair ids BEFORE the aggregate
     // (Catalyst can't push a semi-join through it on its own), the same
-    // probe-then-verify discipline as d30/d35b/d42. (tokenSet rows are
+    // probe-then-verify discipline as d30/d35b/d42. (Shingle rows are
     // distinct per doc, so collect_list is set-valued.)
     val gatedIds = est.select(col("d1").as("doc_id"))
       .union(est.select(col("d2").as("doc_id"))).distinct()
     val gatedSh = sh0 match {
       // pinned stage: the semi-join is a narrow filter over built blocks
       case Some(sh) => sh.join(broadcast(gatedIds), Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), col("shh").as("h"))
       // frame-level caller: prune docs BEFORE tokenizing (r11 verdict #1)
-      case None => tokenSet(docs.join(broadcast(gatedIds), Seq("doc_id"), "left_semi"))
-        .select(col("doc_id"), TextOps.shingleHash(col("tok")).as("h"))
+      case None => TextOps.shingleHashes(
+        docs.join(broadcast(gatedIds), Seq("doc_id"), "left_semi"), 3)
     }
     val fullArr = gatedSh
       .groupBy(col("doc_id"))
-      .agg(array_sort(collect_list(col("h"))).as("arr"))
+      .agg(array_sort(collect_list(col("shh"))).as("arr"))
     est
       .join(fullArr.select(col("doc_id").as("d1"), col("arr").as("arr1")), "d1")
       .join(fullArr.select(col("doc_id").as("d2"), col("arr").as("arr2")), "d2")
@@ -735,8 +721,12 @@ object SketchOps {
   private val SimBits = 48
 
   def simhashes(df: DataFrame): DataFrame = {
-    // read twice: dictionary build + dictionary join
-    val occurrences = graft.StageCache.pin(df.select(col("doc_id"), col("source"),
+    // read twice: dictionary build + dictionary join. An eager snapshot,
+    // not a lazy pin: the plan submits the dictionary's jobs and the join's
+    // concurrently, and over an unbuilt pin both ask for the same block
+    // (one computes it, the other waits on its write lock and logs
+    // "Block rdd_N_0 already exists")
+    val occurrences = graft.StageCache.checkpoint(df.select(col("doc_id"), col("source"),
       explode(TextOps.tokens(col("text"))).as("tok")))
     // dictionary-encode: md5 over the distinct vocabulary only, broadcast
     // back to the (much larger) occurrence stream
@@ -888,6 +878,12 @@ object SketchOps {
   // ---------------------------------------------------------------------
   private[graft] final val IndexBuckets = 80
 
+  /** Pinned distinct (db, di) pairs of batch-vs-index collision rows:
+    * band collisions (d30, near-dup gate), sketch-element collisions
+    * (d42, containment and syndication gates). */
+  def candidatePairs(collisions: DataFrame): DataFrame =
+    graft.StageCache.pin(collisions.select(col("db"), col("di")).distinct())
+
   /** Verified near-dup pairs BETWEEN two doc populations — the
     * cross-population twin of [[lshVerifiedPairs]]'s self-join, shared by
     * d30 and the streaming ingest's band-index probe. Inputs: distinct
@@ -917,31 +913,25 @@ object SketchOps {
       .select(col("db"), col("di"), jac.as("jaccard"))
   }
 
-  /** Batch doc_ids (`db`) whose EXACT containment in some candidate
-    * history doc (`di`) clears the d40 threshold — the verify stage of
-    * the streaming containment gate. Same frame contract as
-    * [[crossVerifiedPairs]]: `cand` is (db, di) candidate pairs, the
-    * shingle frames carry (db|di, shh). Containment = n_inter / sz(db) —
-    * the batch side's size, because the question is "is the NEW doc's
-    * content already inside an accepted doc". */
-  private[graft] def crossContainedBatch(cand: DataFrame, shDb0: DataFrame,
-      shDi0: DataFrame): DataFrame = {
+  /** (db, di, c) for candidate pairs sharing a shingle, c = n_inter /
+    * sz(db): is the NEW doc's content inside an accepted one. d42 takes
+    * the max per db; the containment and syndication gates reject at
+    * c ≥ the d40 threshold. Frames as in [[crossVerifiedPairs]].
+    * Intersect shingle rows FIRST (fan-out Σ_shh dfB·dfI), THEN restrict
+    * to candidates: the opposite order multiplies every pair by
+    * |shingles| before the first groupBy (d42 at sf1: 129 s vs ~7 s). */
+  def containmentVerify(cand: DataFrame, shDb0: DataFrame,
+      shDi: DataFrame): DataFrame = {
     val shDb = graft.StageCache.pin(shDb0) // intersection side + per-doc sizes
     val szB = shDb.groupBy(col("db")).agg(count(lit(1)).as("szb"))
-    // intersect shingle rows FIRST, then restrict to candidates — the
-    // d42 join-order lesson (129 s → 15 s at sf1): expanding cand by
-    // shingle rows multiplies every pair by |shingles| before the first
-    // groupBy. Result-identical; pairs with no shared shingle carry
-    // n_inter = 0 either way.
     shDb.join(cand.select(col("db")).distinct(), Seq("db"), "left_semi")
-      .join(shDi0, Seq("shh"))
+      .join(shDi, Seq("shh"))
       .groupBy(col("db"), col("di"))
       .agg(count(lit(1)).as("n_inter"))
       .join(cand, Seq("db", "di"), "left_semi")
       .join(szB, "db")
-      .filter(col("n_inter").cast(DoubleType) / col("szb")
-        >= TextOps.ContainmentThreshold)
-      .select(col("db")).distinct()
+      .select(col("db"), col("di"),
+        (col("n_inter").cast(DoubleType) / col("szb")).as("c"))
   }
 
   def d30IncrementalNearDup(spark: SparkSession, dir: String): DataFrame = {
@@ -951,9 +941,7 @@ object SketchOps {
       .select(col("doc_id").as("di"), col("band"), col("bh"))
     val batchBands = bandRows(sig.filter(col("__b") >= IndexBuckets))
       .select(col("doc_id").as("db"), col("band"), col("bh"))
-    // distinct candidate (batch, index) pairs from band collisions
-    val cand = graft.StageCache.pin(batchBands.join(indexBands, Seq("band", "bh"))
-      .select(col("db"), col("di")).distinct())
+    val cand = candidatePairs(batchBands.join(indexBands, Seq("band", "bh")))
     // exact verify on candidates only: shingle sets restricted per side,
     // the index side semi-joined down to candidate docs BEFORE the
     // intersection join
@@ -1036,33 +1024,16 @@ object SketchOps {
       .select(col("doc_id").as("db"), explode(col("bk")).as("ck"))
     val elI = sk.filter(TextOps.hashBucket(col("doc_id")) < IndexBuckets)
       .select(col("doc_id").as("di"), explode(col("bk")).as("ck"))
-    val cand = graft.StageCache.pin(elB.join(elI, Seq("ck"))
-      .select(col("db"), col("di")).distinct())
+    val cand = candidatePairs(elB.join(elI, Seq("ck")))
+    // the exact verify on candidate docs only (both sides are
+    // semi-joined down to them); a candidate pair sharing no shingle has
+    // containment 0 and adds nothing to the max
     val shh = docShhStage(spark, dir)
-    // JOIN ORDER is the scale lever here: intersect shingle rows FIRST
-    // (fan-out = Σ_shh dfB·dfI — the d06/d29-proven bound), THEN restrict
-    // the (db, di) counts to sketch candidates. The tempting opposite
-    // order — expand cand by each side's shingle rows — multiplies every
-    // candidate pair by |shingles| before the first groupBy and measured
-    // 129 s at sf1 (51× superlinear on the replica fixture, where the
-    // small vocabulary makes every sketch element a heavy hitter) vs ~7 s
-    // for this shape. Result-identical: candidate pairs with no shared
-    // shingle carry n_inter = 0 and contribute nothing to the max either
-    // way; both sides are semi-joined down to candidate docs first.
-    // intersection side + per-doc sizes
-    val shB = graft.StageCache.pin(shh.select(col("doc_id").as("db"), col("shh"))
-      .filter(TextOps.hashBucket(col("db")) >= IndexBuckets))
-    val shBv = shB.join(cand.select(col("db")).distinct(), Seq("db"), "left_semi")
     val shI = shh.select(col("doc_id").as("di"), col("shh"))
       .join(cand.select(col("di")).distinct(), Seq("di"), "left_semi")
-    val szB = shB.groupBy(col("db")).agg(count(lit(1)).as("szb"))
-    val cm = shBv.join(shI, Seq("shh"))
-      .groupBy(col("db"), col("di"))
-      .agg(count(lit(1)).as("n_inter"))
-      .join(cand, Seq("db", "di"), "left_semi")
-      .join(szB, "db")
-      .select(col("db"),
-        (col("n_inter").cast(DoubleType) / col("szb")).as("c"))
+    val cm = containmentVerify(cand,
+        shh.select(col("doc_id").as("db"), col("shh"))
+          .filter(TextOps.hashBucket(col("db")) >= IndexBuckets), shI)
       .groupBy(col("db")).agg(max(col("c")).as("max_containment"))
     val nc = cand.groupBy(col("db")).agg(count(lit(1)).as("n_index_cand"))
     docs.filter(bucket >= IndexBuckets).select(col("doc_id"))

@@ -342,68 +342,83 @@ object TextOps {
        |FROM documents ORDER BY doc_id""".stripMargin
 
   // ---------------------------------------------------------------------
+  // The shingle pipeline: one word-n-gram builder, its multiset and
+  // distinct row forms, one hashed projection every dedup tier and
+  // ingest gate joins on, and the source-blocked self-overlap kernel of
+  // d06/d40. SketchOps holds the candidate-restricted verifies.
+  // ---------------------------------------------------------------------
+
+  /** Word n-grams, one row per start position, carrying the `keys`
+    * columns: posexplode + lead() windows, whole-stage-codegen'd (the
+    * interpreted higher-order-lambda array form measured 100× slower at
+    * sf0.1). One shuffle, on doc_id; a doc under n tokens yields none. */
+  private def ngramWindow(df: DataFrame, n: Int, keys: Seq[String],
+      name: String): DataFrame = {
+    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+    val carried = keys.map(col)
+    val leads = (1 until n).map(i => lead(col("tok"), i).over(w).as(s"t$i"))
+    df.select(carried :+ posexplode(tokens(col("text"))).as(Seq("pos", "tok")): _*)
+      .select(carried ++ (col("tok") +: leads): _*)
+      .filter(col(s"t${n - 1}").isNotNull)
+      .select(carried :+ concat_ws(" ", col("tok") +: (1 until n).map(i => col(s"t$i")): _*)
+        .as(name): _*)
+  }
+
+  /** Multiset word-n-gram rows (doc_id, ng), for d16/d17's counts. */
+  def ngramRows(df: DataFrame, n: Int): DataFrame =
+    ngramWindow(df, n, Seq("doc_id"), "ng")
+
+  /** The documents table's bigram rows, pinned per (session, dir) for
+    * d17 and d16's repetition-signal stage (r19). */
+  private[llm] def docBigramStage(spark: SparkSession, dir: String): DataFrame =
+    graft.StageCache.cached(spark, dir, "doc_ng2")(
+      ngramRows(Tables.documents(spark, dir), 2))
+
+  /** Distinct shingle rows (doc_id, source, sh). Only MinHash and the
+    * census mains read the text; the rest join on [[shingleHashes]]. */
+  def shingleRows(df: DataFrame, n: Int): DataFrame =
+    ngramWindow(df, n, Seq("doc_id", "source"), "sh").distinct()
+
+  /** Hashed distinct shingle rows (doc_id, source, shh) of a (doc_id,
+    * source, text) frame: joins shuffle 8-byte keys, not shingle text. */
+  def shingleHashes(docs: DataFrame, n: Int): DataFrame =
+    shingleRows(docs, n)
+      .select(col("doc_id"), col("source"), shingleHash(col("sh")).as("shh"))
+
+  /** (d2, d1, n_inter, sz1, sz2) for every same-source pair d1 < d2 of
+    * hashed shingle rows (doc_id, source, shh) sharing a shingle; d06
+    * reads Jaccard from it, d40 both containment directions.
+    * SOURCE-BLOCKED BY DESIGN (round 11): the unblocked exact join is
+    * Σ_shh df², 138M pair rows at sf1 (8× blocked) and 1.25B at sf3 on
+    * the replica fixture; cross-source pairs are d44's job. */
+  def blockedOverlap(sh: DataFrame): DataFrame = {
+    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
+    val a = sh.select(col("doc_id").as("d1"), col("source"), col("shh"))
+    val b = sh.select(col("doc_id").as("d2"), col("source").as("source2"),
+      col("shh").as("shh2"))
+    a.join(b, a("source") === b("source2") && a("shh") === b("shh2")
+        && a("d1") < b("d2"))
+      .groupBy(col("d1"), col("d2"))
+      .agg(count(lit(1)).as("n_inter"))
+      .join(sizes.select(col("doc_id").as("d1"), col("sz").as("sz1")), "d1")
+      .join(sizes.select(col("doc_id").as("d2"), col("sz").as("sz2")), "d2")
+  }
+
+  // ---------------------------------------------------------------------
   // d06 — n-gram Jaccard near-duplicate pairs, blocked by `source` (the
   // quadratic step is confined to a bounded block — at 100 TB the block
   // key comes from LSH (d07), not a metadata column; this operator is the
   // exact-verification stage of that pipeline). Distinct word-3-gram
   // shingle sets; Jaccard = |∩| / (|A|+|B|−|∩|), exact integer division.
   // ---------------------------------------------------------------------
-  def shingles(df: DataFrame, n: Int): DataFrame = {
-    val toks = tokens(col("text"))
-    val cnt = size(toks) - (n - 1)
-    // guard: sequence(1, 0) DESCENDS in Spark, it is not empty
-    df.select(col("doc_id"), col("source"),
-        when(cnt >= 1,
-          array_distinct(
-            transform(sequence(lit(1), cnt),
-              i => concat_ws(" ", slice(toks, i, lit(n))))))
-          .otherwise(array().cast("array<string>")).as("shs"))
-  }
-
-  /** Row-form DISTINCT shingles: (doc_id, source, sh). Semantically
-    * identical to exploding [[shingles]], but built from posexplode +
-    * lead() windows — whole-stage-codegen'd, vs the interpreted
-    * higher-order-lambda array path which measured ~3 ms/doc (100× slower)
-    * at sf0.1. The window shuffles once on doc_id; every hot caller
-    * (d06/d07) uses this form. */
-  def shingleRows(df: DataFrame, n: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val toks = df
-      .select(col("doc_id"), col("source"),
-        posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
-    val leads = (1 until n).map(i => lead(col("tok"), i).over(w).as(s"t$i"))
-    toks.select(col("doc_id") +: col("source") +: col("tok") +: leads: _*)
-      .filter(col(s"t${n - 1}").isNotNull)
-      .select(col("doc_id"), col("source"),
-        concat_ws(" ", col("tok") +: (1 until n).map(i => col(s"t$i")): _*).as("sh"))
-      .distinct()
-  }
-
-  def d06NgramJaccard(spark: SparkSession, dir: String): DataFrame = {
-    // join on a 60-bit hash of the shingle, not the string: the self-join
-    // shuffles 8-byte keys instead of ~25-byte text (engine-internal —
-    // results are identical, collision probability ~|shingles|²/2^61).
-    // md5-derived like every sketch op (ADVICE r1: one reproducible hash
-    // contract across the library, no engine-private hash anywhere); 15
-    // hex chars so the unsigned value always fits a signed long.
-    val sh = SketchOps.docShhStage(spark, dir) // pinned (shared w/ d40/d41/d29/d30/d42/d44)
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    val a = sh.select(col("doc_id").as("d1"), col("source"), col("shh"))
-    val b = sh.select(col("doc_id").as("d2"), col("source").as("source2"), col("shh").as("shh2"))
-    val inter = a.join(b,
-        a("source") === b("source2") && a("shh") === b("shh2") && a("d1") < b("d2"))
-      .groupBy(col("d1"), col("d2"))
-      .agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("d1"), col("sz").as("sz1")), "d1")
-      .join(sizes.select(col("doc_id").as("d2"), col("sz").as("sz2")), "d2")
+  def d06NgramJaccard(spark: SparkSession, dir: String): DataFrame =
+    // the pinned doc_shh stage, shared with d40/d41/d29/d30/d42/d44
+    blockedOverlap(SketchOps.docShhStage(spark, dir))
       .select(col("d1"), col("d2"),
         (col("n_inter").cast(DoubleType)
           / (col("sz1") + col("sz2") - col("n_inter"))).as("jaccard"))
       .filter(col("jaccard") >= 0.2)
       .orderBy(col("d1"), col("d2"))
-  }
 
   val d06Sql: String =
     """WITH toks AS (
@@ -438,7 +453,7 @@ object TextOps {
   // quoted posts inside threads). Emits both directions per unordered
   // pair; a pair surfaces when EITHER direction clears the threshold.
   // Source-blocked like d06 — the measured exact-tier scale trade-off
-  // (see shingleContainment); cross-source syndication is d44's job.
+  // (see blockedOverlap); cross-source syndication is d44's job.
   //
   // Scale: same frame as d06 — the intersection join moves 8-byte
   // 60-bit md5 shingle keys, blocked by `source` here; at 100 TB the
@@ -461,36 +476,14 @@ object TextOps {
     * (doc_id, source, shh) rows (the registered query passes the pinned
     * doc_shh stage shared with d06/d29/d41/d44). */
   def shingleContainment(docs: DataFrame,
-      sh0: Option[DataFrame] = None): DataFrame = {
-    // sizes + both join sides
-    val sh = sh0.getOrElse(graft.StageCache.pin(shingleRows(docs, 3)
-      .select(col("doc_id"), col("source"), shingleHash(col("sh")).as("shh"))))
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    // SOURCE-BLOCKED BY DESIGN (the d06 precedent, measured in round 11):
-    // the corpus-wide exact intersection join is Σ_shh df² — on a
-    // replica-dense corpus the unblocked form is 138M pair rows at sf1
-    // (8× the blocked form) and 1.25B at sf3, past a single node's heap.
-    // Blocking on source is the exact tier's scale trade-off, and it
-    // means CROSS-source doc-in-doc (syndication) cannot surface here —
-    // that use case is [[graft.llm.SketchOps.crossSourceContainment]]
-    // (d44): sketch-candidate pairs, estimate-gated, exact-verified per
-    // candidate — the architecture this header prescribes at 100 TB.
-    val a = sh.select(col("doc_id").as("d1"), col("source"), col("shh"))
-    val b = sh.select(col("doc_id").as("d2"), col("source").as("source2"),
-      col("shh").as("shh2"))
-    a.join(b, a("source") === b("source2") && a("shh") === b("shh2")
-        && a("d1") < b("d2"))
-      .groupBy(col("d1"), col("d2"))
-      .agg(count(lit(1)).as("n_inter"))
-      .join(sizes.select(col("doc_id").as("d1"), col("sz").as("sz1")), "d1")
-      .join(sizes.select(col("doc_id").as("d2"), col("sz").as("sz2")), "d2")
+      sh0: Option[DataFrame] = None): DataFrame =
+    blockedOverlap(sh0.getOrElse(graft.StageCache.pin(shingleHashes(docs, 3))))
       .withColumn("c12", col("n_inter").cast(DoubleType) / col("sz1").cast(DoubleType))
       .withColumn("c21", col("n_inter").cast(DoubleType) / col("sz2").cast(DoubleType))
       .filter(greatest(col("c12"), col("c21")) >= ContainmentThreshold)
       .select(col("d1"), col("d2"), col("sz1"), col("sz2"), col("n_inter"),
         col("c12"), col("c21"))
       .orderBy(col("d1"), col("d2"))
-  }
 
   val d40Sql: String =
     s"""WITH toks AS (

@@ -421,10 +421,10 @@ object CorpusStream {
     * once the batch commits. */
   private def rejectVerified(spark: SparkSession, fresh: DataFrame, outDir: String,
       cand: DataFrame)(verify: (DataFrame, DataFrame, DataFrame) => DataFrame): DataFrame = {
-    // shingleRows carries a source column; the verify reads only (id, shh)
+    // shingleHashes carries a source column; the verify reads only (id, shh)
     def shingleHashes(docs: DataFrame, id: String) =
-      TextOps.shingleRows(docs.withColumn("source", lit(id)), 3)
-        .select(col("doc_id").as(id), TextOps.shingleHash(col("sh")).as("shh"))
+      TextOps.shingleHashes(docs.withColumn("source", lit(id)), 3)
+        .select(col("doc_id").as(id), col("shh"))
     val candDocs = candidateFetch(spark, outDir,
       cand.select(col("di").as("doc_id")).distinct())
     val rejected = StageCache.checkpoint(verify(cand,
@@ -450,8 +450,7 @@ object CorpusStream {
     val batchBands = SketchOps.bandRows(SketchOps.minhashSignatures(
         fresh.withColumn("source", lit("batch"))))
       .select(col("doc_id").as("db"), col("band"), col("bh"))
-    val cand = StageCache.pin(batchBands.join(idxBands, Seq("band", "bh"))
-      .select(col("db"), col("di")).distinct())
+    val cand = SketchOps.candidatePairs(batchBands.join(idxBands, Seq("band", "bh")))
     rejectVerified(spark, fresh, outDir, cand)(SketchOps.crossVerifiedPairs)
   }
 
@@ -517,9 +516,8 @@ object CorpusStream {
       .select(col("doc_id").as("db"), explode(col("bk")).as("ck"))
     val idxEl = readContainIndex(spark, indexDir)
       .select(col("doc_id").as("di"), col("ck"))
-    val cand = StageCache.pin(batchEl.join(idxEl, Seq("ck"))
-      .select(col("db"), col("di")).distinct())
-    rejectVerified(spark, fresh, outDir, cand)(SketchOps.crossContainedBatch)
+    val cand = SketchOps.candidatePairs(batchEl.join(idxEl, Seq("ck")))
+    rejectVerified(spark, fresh, outDir, cand)(containedInHistory)
   }
 
   /** CROSS-SOURCE syndication gate — d44's batch protocol as a streaming
@@ -561,7 +559,7 @@ object CorpusStream {
         idx.select(col("doc_id").as("di"), col("ck"), col("csz"),
           col("csource")), Seq("ck"))
       .filter(col("csource").isNull || col("csource") =!= col("bsource"))
-    val cand = StageCache.pin(candEl.select(col("db"), col("di")).distinct())
+    val cand = SketchOps.candidatePairs(candEl)
     // stage 2: closed-form estimate over reconstructed index sketches
     // (candidate docs only — the candidates-only discipline of the batch
     // d44 verify stage)
@@ -580,8 +578,16 @@ object CorpusStream {
         greatest(col("c12_est"), col("c21_est")) >= SketchOps.ContainEstThreshold)
       .select(col("db"), col("di")))
     // stage 3: exact verify against fetched bodies, batch direction
-    rejectVerified(spark, fresh, outDir, gated)(SketchOps.crossContainedBatch)
+    rejectVerified(spark, fresh, outDir, gated)(containedInHistory)
   }
+
+  /** The containment and syndication gates' verify: the (db, di) pairs
+    * whose batch doc is contained in the history doc at or above the d40
+    * threshold. */
+  private def containedInHistory(cand: DataFrame, shDb: DataFrame,
+      shDi: DataFrame): DataFrame =
+    SketchOps.containmentVerify(cand, shDb, shDi)
+      .filter(col("c") >= TextOps.ContainmentThreshold)
 
   /** One micro-batch of the index-backed ingest: gate → within-batch
     * keep-first (min doc_id per fingerprint, exactly d26's in-batch

@@ -21,10 +21,13 @@ import org.apache.spark.sql.Row
   *   MemoryStream source + memory sink (reference's Kafka/Redis are
   *   infra, not semantics).
   *
-  * The aggregations themselves are shared with the batch tier
-  * (`analytics.EventQueries`) where the expression is mode-agnostic; the
-  * windowed forms below differ only in watermark + `window()` (streaming
-  * state needs the explicit window struct, not date_trunc).
+  * Shared with the batch tier (`analytics.EventQueries`): only
+  * [[explodeOrderItems]], which q32 runs on its batch frame. ST1, ST2 and
+  * ST3 below are streaming twins of `EventQueries.minutelyCounts`,
+  * `minutelyRevenue` and `runningTotals`, written separately: they bucket
+  * with a watermarked `window()` (streaming state needs the explicit
+  * window struct, not date_trunc), and [[runningTotals]] has no `n_users`
+  * (an exact distinct count is not supported as a streaming aggregate).
   *
   * Scale: streaming aggregation state is per-key in the state store;
   * watermarks bound it; `foreachBatch` sinks (the Redis-replacement

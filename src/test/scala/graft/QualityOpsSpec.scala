@@ -14,7 +14,7 @@ class QualityOpsSpec extends SparkSpec {
 
   test("ngramRows: counts multiplicity (unlike shingleRows), n-1 bigrams per doc") {
     val d = Seq((1L, "a b a b a"), (2L, "solo")).toDF("doc_id", "text")
-    val rows = QualityOps.ngramRows(d, 2).collect()
+    val rows = TextOps.ngramRows(d, 2).collect()
     val byDoc = rows.groupBy(_.getLong(0)).view.mapValues(_.map(_.getString(1)))
     assert(byDoc(1L).sorted.toSeq == Seq("a b", "a b", "b a", "b a"))
     assert(!byDoc.contains(2L)) // single-token doc yields no bigrams
@@ -107,8 +107,9 @@ class QualityOpsSpec extends SparkSpec {
     assert(out.filter(col("bucket") < 0 || col("bucket") > 99).count() == 0)
     // the repetition gate is live: no surviving doc is flagged
     val flaggedSurvivors = out.join(
-      graft.llm.QualityOps.repetitionSignals(
-        graft.Tables.documents(spark, sf)).filter(col("flagged") === 1)
+      graft.llm.QualityOps.repetitionSignals(graft.Tables.documents(spark, sf),
+          TextOps.ngramRows(graft.Tables.documents(spark, sf), 2))
+        .filter(col("flagged") === 1)
         .select("doc_id"), Seq("doc_id"), "left_semi")
     assert(flaggedSurvivors.count() == 0)
     out.unpersist()

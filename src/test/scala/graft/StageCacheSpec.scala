@@ -232,10 +232,12 @@ class StageCacheSpec extends SparkSpec {
     assert(d33b.nonEmpty && (d33b & first._2).isEmpty, "d33b merges not retrained after clear")
   }
 
-  /** StageCache and the census mains, which keep their own session-long
-    * caches and snapshots. */
-  private val stageCacheOwners = Set("StageCache", "BpeBench", "CompactionBench",
-    "GraphBench", "LayoutBench", "RecallBench", "SkewBench", "SpillBench").map(_ + ".scala")
+  /** The census mains, which keep their own session-long caches and
+    * snapshots and build their own shingle frames. */
+  private val censusMains = Set("BpeBench", "CompactionBench", "GraphBench",
+    "LayoutBench", "RecallBench", "SkewBench", "SpillBench").map(_ + ".scala")
+
+  private val stageCacheOwners = censusMains + "StageCache.scala"
 
   /** `file:line: text` of every source line under src/main/scala, outside
     * the `exempt` files, that matches `call`. */
@@ -263,5 +265,18 @@ class StageCacheSpec extends SparkSpec {
   test("StageCache owns every memo: no ConcurrentHashMap outside the KV store and the model registry") {
     val hits = callsOutside(Set("KvSink.scala", "Models.scala"), "ConcurrentHashMap".r)
     assert(hits.isEmpty, hits.mkString("memoize through StageCache.cached instead:\n", "\n", ""))
+  }
+
+  test("TextOps owns the shingle pipeline: no other n-gram builder or hashed-shingle projection") {
+    // SketchOps' MinHash input hashes the shingle TEXT (two 40-bit md5
+    // bases per shingle), so it is the one caller that needs the rows
+    // before TextOps hashes them
+    val minhashInput =
+      """/SketchOps\.scala:\d+: .*TextOps\.shingleRows\(df, 3\)\.withColumnRenamed\("sh", "tok"\)""".r
+    val hits = callsOutside(censusMains + "TextOps.scala",
+        """shingleRows\(|ngramRows\(|conv\(substring\(md5\(.*,\s*1,\s*15\)""".r)
+      .filterNot(minhashInput.findFirstIn(_).isDefined)
+    assert(hits.isEmpty, hits.mkString(
+      "read n-grams through TextOps.shingleHashes or a TextOps stage instead:\n", "\n", ""))
   }
 }

@@ -18,9 +18,10 @@ class TextOpsSpec extends SparkSpec {
   test("shingles of short docs are empty, not descending-sequence garbage") {
     val d = Seq((1L, "s", "one two"), (2L, "s", "one two three four"))
       .toDF("doc_id", "source", "text")
-    val out = TextOps.shingles(d, 3).orderBy("doc_id").collect()
-    assert(out(0).getSeq[String](2) == Seq())
-    assert(out(1).getSeq[String](2) == Seq("one two three", "two three four"))
+    val out = TextOps.shingleRows(d, 3).collect()
+      .groupBy(_.getLong(0)).view.mapValues(_.map(_.getString(2)).toSeq.sorted)
+    assert(!out.contains(1L)) // a 2-token doc has no 3-gram
+    assert(out(2L) == Seq("one two three", "two three four"))
   }
 
   test("minhash similarity ≈ 1 for identical docs, lower for disjoint") {
