@@ -585,24 +585,26 @@ object Queries {
 
   // ---------------------------------------------------------------------
   // Q9b — the SAME scorecard from the orderkey-bucketed warehouse (the
-  // layout Runner.runGold builds; reference A9 again). The first call per
-  // (warehouse, dir) pays the one-time bucketed write of both facts; every
-  // later call — and the bench's best-of-2, by construction — reads the
-  // co-located managed tables, so the orders⋈lineitem fact-fact join
-  // plans with ZERO shuffle exchanges (BucketingSpec proves the plan).
-  // This is q09's 100 TB shape as a benchmarkable registry entry: the
-  // remaining exchanges are the suppkey rollup and the final sort, both
-  // rollup-sized. Table names embed the source dir (the warehouse
-  // outlives the in-memory catalog across JVMs and dirs — sf0.001 tables
-  // must never satisfy an sf0.1 run). Same oracle as q09.
+  // gold supplier scorecard; reference A9 again): both facts, bucketed
+  // with one Sinks.bucketCount, so the orders⋈lineitem fact-fact join
+  // plans with ZERO shuffle exchanges (BucketingSpec proves the plan). The
+  // write is a stage with an empty frame: built once per session outside
+  // a scope (Bench builds it untimed), once per Runner gold pass, again
+  // after StageCache.clear; two threads must not build one dir's at once.
+  // Table names embed the source dir (the warehouse outlives the catalog
+  // across JVMs — sf0.001 tables must never satisfy an sf0.1 run). Same
+  // oracle as q09.
   // ---------------------------------------------------------------------
   def q09bScorecardBucketed(spark: SparkSession, dir: String): DataFrame = {
     val suffix = java.lang.Integer.toHexString(
       java.util.Objects.hashCode(new java.io.File(dir).getAbsolutePath))
     val (ot, lt) = (s"graft_wh_orders_$suffix", s"graft_wh_lineitem_$suffix")
-    if (!spark.catalog.tableExists(ot) || !spark.catalog.tableExists(lt)) {
-      graft.sources.Sinks.bucketed(Tables.orders(spark, dir), ot, 32, Seq("o_orderkey"))
-      graft.sources.Sinks.bucketed(Tables.lineitem(spark, dir), lt, 32, Seq("l_orderkey"))
+    graft.StageCache.cached(spark, dir, "q09b_warehouse") {
+      val (o, l) = (Tables.orders(spark, dir), Tables.lineitem(spark, dir))
+      val n = graft.sources.Sinks.bucketCount(Seq(o, l))
+      graft.sources.Sinks.bucketed(o, ot, n, Seq("o_orderkey"))
+      graft.sources.Sinks.bucketed(l, lt, n, Seq("l_orderkey"))
+      spark.emptyDataFrame
     }
     q09Rollup(q09Joined(spark.table(ot), spark.table(lt),
       Tables.supplier(spark, dir)))

@@ -70,29 +70,17 @@ object CorpusPrep {
   /** d13 and d18 share their three most expensive stages — the quality
     * gate (interpreted stopword lambdas, ~100× codegen cost), the MinHash
     * signatures, and the 3-gram shingle hashes. All three depend only on
-    * the data dir, and signatures/shingles are PER-DOC, so each pipeline
-    * restricts the shared frame to its own survivor set with a semi-join
-    * instead of recomputing the stage. Memoized per (session, dir) as
-    * localCheckpoints (r3 lesson: checkpoint, not cache, when separate
-    * actions consume the frame) — Verify/Bench run both pipelines against
+    * the data dir, and signatures/shingles are PER-DOC pure (a doc's
+    * MinHash and its shingle set depend only on its own tokens; the
+    * dictionary hash bases are per-token md5, not corpus-dependent), so
+    * they are the full-corpus doc_sig/doc_shh stages, which [[dedup]]
+    * restricts to its exact-dedup survivors with one semi-join each.
+    * Memoized per (session, dir) — Verify/Bench run both pipelines against
     * one dir in one session, so the second consumer gets all three free. */
-  private def sharedStages(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val gate1 = graft.StageCache.cached(spark, dir, "corpus_gate1")(
-      qualityGate(spark, dir))
-    // signatures and shingle hashes are PER-DOC pure (a doc's MinHash
-    // and its shingle set depend only on its own tokens; the dictionary
-    // hash bases are per-token md5, not corpus-dependent), so the
-    // gate-filtered stages are semi-join restrictions of the full-corpus
-    // doc_sig/doc_shh pins (r19) — the gate tier no longer re-tokenizes
-    // the corpus to rebuild either stage.
-    val ids = gate1.select(col("doc_id"))
-    val sig = graft.StageCache.cached(spark, dir, "corpus_sig")(
-      SketchOps.docSigStage(spark, dir).join(ids, Seq("doc_id"), "left_semi"))
-    val sh = graft.StageCache.cached(spark, dir, "corpus_shh")(
-      SketchOps.docShhStage(spark, dir).join(ids, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), col("shh")))
-    (gate1, sig, sh)
-  }
+  private def sharedStages(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
+    (graft.StageCache.cached(spark, dir, "corpus_gate1")(qualityGate(spark, dir)),
+      SketchOps.docSigStage(spark, dir),
+      SketchOps.docShhStage(spark, dir).select(col("doc_id"), col("shh")))
 
   def d13CorpusPrep(spark: SparkSession, dir: String): DataFrame = {
     // 1. quality gate (shared stage)
@@ -101,8 +89,8 @@ object CorpusPrep {
   }
 
   /** Exact dedup (min doc_id per content fingerprint), then MinHash-LSH
-    * near-dedup over the survivors only, on the shared signature/shingle
-    * frames restricted to the survivor set. */
+    * near-dedup over the survivors only, on the full-corpus signature and
+    * shingle stages restricted to the survivor set. */
   private def dedup(filtered: DataFrame, sig: DataFrame, sh: DataFrame): DataFrame = {
     val reps = filtered
       .groupBy(md5(col("text")).as("__fp"))

@@ -24,6 +24,8 @@ import org.apache.spark.sql.DataFrame
   * own artifact without clobbering one another. The registry records
   * which dir a tag last trained on in THIS JVM, which is exactly the
   * Verify contract: queries run first, `oracleSql` is dumped after.
+  * Paths are repo-relative (Verify runs at the root; `tools/check.py`
+  * resolves them there), so two checkouts dump the same oracle SQL.
   *
   * At 100 TB these artifacts are unchanged: models are cluster-count /
   * vocab-sized (k×dim, M×K×sub, K merges), never data-sized — a model
@@ -31,7 +33,7 @@ import org.apache.spark.sql.DataFrame
   */
 object Models {
 
-  private val root = new java.io.File("target/models").getAbsolutePath
+  private val root = "target/models"
 
   /** tag → data dir the tag's model was last trained on (this JVM). */
   private val trainedOn =

@@ -44,12 +44,12 @@ object Sinks {
       .write.mode(SaveMode.Overwrite)
       .json(s"$path/report")
 
-  /** Bucketed managed-table write: co-locates (and optionally co-sorts)
-    * the table on its join key so repeated big-big joins on that key run
-    * WITHOUT a shuffle exchange (verified by plan in BucketingSpec) — the
-    * 100 TB answer to the orders⋈lineitem join that otherwise shuffles
-    * both sides on every query. Bucket count is the scale knob: pick so a
-    * bucket of the larger table fits an executor's memory. */
+  /** Bucketed managed-table write: co-locates and co-sorts the table on
+    * its join key so repeated big-big joins on that key run WITHOUT a
+    * shuffle exchange (verified by plan in BucketingSpec) — the 100 TB
+    * answer to the orders⋈lineitem join. Tables joined this way share one
+    * [[bucketCount]]. Hash-partitioning on the keys first (the bucket id's
+    * hash) writes each bucket as one file, not one per write task. */
   def bucketed(df: DataFrame, table: String, buckets: Int,
       keys: Seq[String]): Unit = {
     val spark = df.sparkSession
@@ -78,11 +78,20 @@ object Sinks {
       println(s"[sinks] reclaiming orphaned managed-table dir $loc for `$table`")
       fs.delete(loc, true)
     }
-    df.write.mode(SaveMode.Overwrite)
+    df.repartition(buckets, keys.map(col): _*).write.mode(SaveMode.Overwrite)
       .bucketBy(buckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
       .format("parquet")
       .saveAsTable(table)
+  }
+
+  /** The bucket count shared by file-scan facts that join on their bucket
+    * keys: the shuffle partitions (Engine: the cores), or more when the
+    * largest fact's size over `spark.sql.files.maxPartitionBytes` asks. */
+  def bucketCount(facts: Seq[DataFrame]): Int = {
+    val conf = facts.head.sparkSession.sessionState.conf
+    val largest = facts.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).max
+    math.max(conf.numShufflePartitions, ((largest - 1) / conf.filesMaxPartitionBytes + 1).toInt)
   }
 
   /** S7 — JDBC append sink, the warehouse egress the reference uses for

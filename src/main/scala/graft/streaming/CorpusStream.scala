@@ -444,12 +444,10 @@ object CorpusStream {
     * Requires globally unique doc_ids across writers (the crawl's doc-id
     * contract): the band index names accepted docs by doc_id alone. */
   private def dropNearDups(spark: SparkSession, fresh: DataFrame,
-      indexDir: String, outDir: String): DataFrame = {
+      bands: DataFrame, indexDir: String, outDir: String): DataFrame = {
     val idxBands = readBandIndex(spark, indexDir)
       .select(col("doc_id").as("di"), col("band"), col("bh"))
-    val batchBands = SketchOps.bandRows(SketchOps.minhashSignatures(
-        fresh.withColumn("source", lit("batch"))))
-      .select(col("doc_id").as("db"), col("band"), col("bh"))
+    val batchBands = bands.select(col("doc_id").as("db"), col("band"), col("bh"))
     val cand = SketchOps.candidatePairs(batchBands.join(idxBands, Seq("band", "bh")))
     rejectVerified(spark, fresh, outDir, cand)(SketchOps.crossVerifiedPairs)
   }
@@ -633,9 +631,15 @@ object CorpusStream {
       // candidate bodies from (and no bands or span counts to collide
       // with), so the probes are skipped wholesale.
       val hasHistory = committedPaths(spark, indexDir).nonEmpty
-      val nearFresh = if (nearDup && hasHistory)
-        dropNearDups(spark, exactFresh, indexDir, outDir)
-      else exactFresh
+      // band rows, like the bottom-k sketch below, are derived once and the
+      // delta restricts them to the accepted ids; span rows are not: from the
+      // `fresh` snapshot they cost no job, a shared pin 4 more per batch
+      val batchBands = Option.when(nearDup)(StageCache.pin(SketchOps.bandRows(
+        SketchOps.minhashSignatures(exactFresh.withColumn("source", lit("batch"))))))
+      val nearFresh = batchBands match {
+        case Some(bands) if hasHistory => dropNearDups(spark, exactFresh, bands, indexDir, outDir)
+        case _ => exactFresh
+      }
       val spanFresh = if (spanGate && hasHistory)
         dropSpanDups(spark, nearFresh, indexDir)
       else nearFresh
@@ -679,9 +683,9 @@ object CorpusStream {
         fs.delete(delta, true)
       // every tier's rows for the accepted docs go into ONE atomic delta,
       // so the exact tier and every probe advance together or not at all
+      def accepted(rows: DataFrame) = rows.join(fresh.select(col("doc_id")), Seq("doc_id"), "left_semi")
       val fpRows = fresh.select(col("text_fp"), col("doc_id"))
-      val bandRows = Option.when(nearDup)(SketchOps.bandRows(
-        SketchOps.minhashSignatures(fresh.withColumn("source", lit("batch")))))
+      val bandRows = batchBands.map(accepted)
       val spanRows = Option.when(spanGate)(TextOps.spanShingleRows(
           fresh.select(col("doc_id"), split(col("text"), " ").as("arr")), TextOps.SpanK)
         .groupBy(col("fp").as("sfp")).agg(count(lit(1)).as("sn")))
@@ -693,7 +697,7 @@ object CorpusStream {
         val acceptedSk = batchSk.fold(SketchOps.bottomKSketch(
             if (fresh.columns.contains("source")) fresh
             else fresh.withColumn("source", lit(null).cast(StringType))))(
-          _.join(fresh.select(col("doc_id")), Seq("doc_id"), "left_semi"))
+          accepted)
         acceptedSk.select(col("doc_id"), explode(col("bk")).as("ck"),
           col("sz").as("csz"), col("source").as("csource"))
       }

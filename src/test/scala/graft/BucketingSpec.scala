@@ -94,11 +94,74 @@ class BucketingSpec extends SparkSpec {
       assert(countExch(bPlan) < countExch(rPlan),
         s"bucketed plan should shed the fact-fact join shuffles:\n${bPlan.take(1500)}")
       // same result, and the second call reuses the tables (no rebuild):
-      // the catalog already has them, so the entry is idempotent per dir
+      // outside a scope the warehouse is a session stage
       assert(q09b.collect().toSeq == q09.collect().toSeq)
       assert(graft.analytics.Queries.q09bScorecardBucketed(spark, sfDir)
         .collect().toSeq == q09.collect().toSeq)
     } finally
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+  }
+
+  /** q09b's table for `fact` over `dir`. */
+  private def warehouse(dir: String, fact: String): String = "graft_wh_" + fact + "_" +
+    Integer.toHexString(java.util.Objects.hashCode(new java.io.File(dir).getAbsolutePath))
+
+  private def numBuckets(table: String): Int = spark.sessionState.catalog
+    .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table)).bucketSpec.get.numBuckets
+
+  test("q09b's two facts share one bucket count derived from the session and the data") {
+    graft.analytics.Queries.q09bScorecardBucketed(spark, sfDir)
+    val facts = Seq(Tables.orders(spark, sfDir), Tables.lineitem(spark, sfDir))
+    // tiny facts: the shuffle partitions, which Engine sets to the cores
+    assert(Sinks.bucketCount(facts) == spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    assert(numBuckets(warehouse(sfDir, "orders")) == Sinks.bucketCount(facts))
+    assert(numBuckets(warehouse(sfDir, "lineitem")) == Sinks.bucketCount(facts))
+    // a fact larger than the split size asks for more: its size over the split
+    val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+    try {
+      val largest = facts.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).max
+      assert(largest > 4096 * 4)
+      assert(Sinks.bucketCount(facts) == ((largest + 4095) / 4096).toInt)
+    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+  }
+
+  test("a bucketed table holds one data file per non-empty bucket") {
+    val o = Tables.orders(spark, sfDir).repartition(3) // three write tasks
+    try {
+      Sinks.bucketed(o, "b_files", 4, Seq("o_orderkey"))
+      val loc = new java.io.File(spark.sessionState.catalog.defaultTablePath(
+        org.apache.spark.sql.catalyst.TableIdentifier("b_files")))
+      val ids = loc.list().toSeq.filter(_.startsWith("part-"))
+        .map(f => "_(\\d{5})\\.".r.findFirstMatchIn(f).get.group(1).toInt)
+      // the bucket id is pmod(murmur3(key), n): Spark's `hash`
+      val nonEmpty = o.select(pmod(hash(col("o_orderkey")), lit(4))).distinct().count()
+      assert(ids.sorted == ids.distinct.sorted && ids.size == nonEmpty, ids)
+      assert(spark.table("b_files").count() == o.count())
+    } finally spark.sql("DROP TABLE IF EXISTS b_files")
+  }
+
+  test("a second gold pass over changed silver in one session rebuilds the warehouse") {
+    val out = java.nio.file.Files.createTempDirectory("graft_gold").toString
+    val silver = s"$out/silver"
+    def land(lineitem: org.apache.spark.sql.DataFrame): Unit = {
+      Seq("orders" -> Tables.orders _, "customer" -> Tables.customer _,
+          "supplier" -> Tables.supplier _, "nation" -> Tables.nation _,
+          "region" -> Tables.region _, "part" -> Tables.part _, "events" -> Tables.events _)
+        .foreach { case (t, load) => Sinks.parquet(load(spark, sfDir), s"$silver/$t") }
+      Sinks.parquet(lineitem, s"$silver/lineitem")
+    }
+    def scorecard() = spark.read.parquet(s"$out/gold/supplier_scorecard")
+      .drop("_inserted_at", "_source").collect().toSet
+    val lineitem = Tables.lineitem(spark, sfDir)
+    land(lineitem)
+    graft.pipeline.Runner.runGold(spark, sfDir, out)
+    val first = scorecard()
+    land(lineitem.filter(col("l_orderkey") % 2 === 0))
+    graft.pipeline.Runner.runGold(spark, sfDir, out)
+    val q09 = graft.analytics.Queries.q09SupplierScorecard(spark, silver).collect().toSet
+    assert(scorecard() == q09 && q09 != first)
+    assert(spark.table(warehouse(silver, "lineitem")).count() ==
+      Tables.lineitem(spark, silver).count())
   }
 }

@@ -124,6 +124,43 @@ class StageCacheSpec extends SparkSpec {
     assertReleased(df)
   }
 
+  /** `n` threads that each run `body(i)` once all of them are in their
+    * stage build, so the builds overlap; returns the frames they got. */
+  private def racedBuilds(n: Int)(body: (Int, => DataFrame) => DataFrame): Seq[DataFrame] = {
+    val inBuild = new java.util.concurrent.CyclicBarrier(n)
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
+    val threads = (0 until n).map(i => new Thread(() => got.add(body(i, {
+      inBuild.await(60, TimeUnit.SECONDS)
+      spark.range(1000).toDF("id")
+    }))))
+    threads.foreach(_.start())
+    threads.foreach(_.join(60000))
+    got.asScala.toSeq
+  }
+
+  test("two threads building one stage at once get one frame; the loser's snapshot is released") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val got = racedBuilds(2)((_, build) => StageCache.cached(spark, dir, "race")(build))
+    assert(got.size == 2 && (got(0) eq got(1)))
+    // both builds ran (the barrier needs both), one snapshot stays pinned
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- before == rddIds(got(0)))
+    StageCache.drop(spark, dir, "race")
+    assertReleased(got(0))
+  }
+
+  test("two stages built at once on two threads in one scope are both released when it closes") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val got = StageCache.scoped(spark) {
+      val scope = StageCache.currentScope
+      val got = racedBuilds(2)((i, build) =>
+        StageCache.within(scope)(StageCache.cached(spark, dir, s"raced$i")(build)))
+      assert(got.size == 2 && got.forall(rddIds(_).subsetOf(stored())))
+      got
+    }
+    got.foreach(assertReleased)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
   test("a stage build releases its own pins; a stage built in it keeps its owner") {
     val builds, nestedBuilds = new AtomicInteger
     var pinned, snap, nested: DataFrame = null

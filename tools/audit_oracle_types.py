@@ -37,6 +37,7 @@ import sys
 
 import duckdb
 
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -100,6 +101,8 @@ def main():
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
         oracle = json.load(f)
     con = duckdb.connect()
+    # model-backed oracle entries read repo-relative artifact paths
+    con.execute(f"SET file_search_path = '{REPO_ROOT}'")
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
